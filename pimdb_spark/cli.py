@@ -100,7 +100,14 @@ def main(argv: list[str] | None = None) -> int:
         if not sql:
             print("error: provide SQL text or --file", file=sys.stderr)
             return 2
-        print_tsv(db.sql(sql))
+        # pimdb's SQLite and PostgreSQL dialects read "x" as an identifier
+        key = "spark.sql.ansi.doubleQuotedIdentifiers"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            print_tsv(db.sql(sql))
+        finally:
+            spark.conf.set(key, prev)
         return 0
     return 2
 

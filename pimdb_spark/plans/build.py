@@ -337,7 +337,14 @@ class NormalizedBuild:
         decomposition of each DISTINCT types string via the one genuine UDF
         (the reference's lru_cache becomes dedup-before-UDF + join back —
         the same temp-table trick its TODO at database.py:1066 wishes for),
-        posexploded to (title_alias_id, ordering, title_alias_type_id)."""
+        posexploded to (title_alias_id, ordering, title_alias_type_id).
+
+        The UDF runs in Python workers, which import this package:
+        ensure_worker_code ships it, so a session started outside the
+        repository does not fail there with ModuleNotFoundError."""
+        from pimdb_spark.catalog import ensure_worker_code
+
+        ensure_worker_code(self.db.spark)
         ta = self.db.read("title_alias")
         t = self.db.read("title").select("id", "tconst")
         akas = self.db.read("TitleAkas")

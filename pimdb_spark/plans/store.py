@@ -5,6 +5,16 @@ mode=overwrite is the Spark form of pimdb's truncate-before-load
 (database.py:369-371); dropping obsolete tables (database.py:582-586) is
 deleting datasets not in the current table list.  Every table is registered
 as a temp view so ``spark.sql`` serves the pass-through query surface.
+
+A view is registered once per table version per session: ``register_all``
+re-reads a table only when its files on disk (name, size, mtime of each)
+or its source (path, bucketed catalog relation or not) differ from what
+the session last registered under that name, so repeated queries skip the
+per-table schema jobs.  View names that equal table names are owned by
+ParquetDatabase: ``register_all`` replaces them, and drops each view it
+registered whose table this database does not hold (dropped, deleted on
+disk, or another database's), so a query naming it raises Spark's
+TABLE_OR_VIEW_NOT_FOUND instead of reading stale or foreign files.
 """
 
 from __future__ import annotations
@@ -15,6 +25,24 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 _SWAP_OLD_SUFFIX = ".swap.old"
+
+# SparkSession.sessionUUID -> {view name: ((table path, reads the bucketed
+# catalog relation), file signature)}.  Session-wide, not per database:
+# temp views are session-scoped, and several databases in one session
+# register the same view names over different directories.
+_REGISTERED: dict[str, dict[str, tuple[tuple[str, bool], tuple]]] = {}
+
+
+def _file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(relpath, size, mtime_ns) of every file under ``path``.  Spark
+    part-file names carry a per-job UUID, so every rewrite changes it."""
+    sig = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
 
 
 def swap_directory(path: str, tmp: str) -> None:
@@ -186,11 +214,14 @@ class ParquetDatabase:
             df = df.coalesce(num_partitions)
         df.write.mode(mode).jdbc(url, jdbc_table or table, properties=dict(properties))
 
+    def _reads_catalog(self, table: str) -> bool:
+        return table in self.bucket_spec and self.spark.catalog.tableExists(
+            self._catalog_name(table)
+        )
+
     def read(self, table: str) -> DataFrame:
-        if table in self.bucket_spec:
-            name = self._catalog_name(table)
-            if self.spark.catalog.tableExists(name):
-                return self.spark.table(name)
+        if self._reads_catalog(table):
+            return self.spark.table(self._catalog_name(table))
         return self.spark.read.parquet(self.path(table))
 
     def exists(self, table: str) -> bool:
@@ -212,8 +243,27 @@ class ParquetDatabase:
                 self.drop(t)
 
     def register_all(self) -> None:
-        for t in self.table_names():
+        """Make the session's temp views match this database's tables (see
+        the module docstring).  A table whose source and file signature
+        are unchanged since this session registered it keeps its view and
+        costs one directory walk; any write — through this instance,
+        another instance or another process — changes the signature."""
+        views = _REGISTERED.setdefault(self.spark._jsparkSession.sessionUUID(), {})
+        tables = self.table_names()
+        for stale in views.keys() - set(tables):
+            self.spark.catalog.dropTempView(stale)
+            del views[stale]
+        for t in tables:
+            path, from_catalog = self.path(t), self._reads_catalog(t)
+            # signature before read: a write racing the read re-registers
+            # on the next call instead of being missed
+            entry = ((path, from_catalog), _file_signature(path))
+            if views.get(t) == entry:
+                continue
+            if from_catalog:
+                self.spark.catalog.refreshTable(self._catalog_name(t))
             self.read(t).createOrReplaceTempView(t)
+            views[t] = entry
 
     def sql(self, query: str) -> DataFrame:
         self.register_all()

@@ -38,3 +38,21 @@ def built_db(spark, imdb_fixture_dir, tmp_path_factory):
     transfer(spark, imdb_fixture_dir, db)
     NormalizedBuild(db).run()
     return db
+
+
+@pytest.fixture(scope="session")
+def examples_db(spark, tmp_path_factory):
+    """Transfer + build of the fixture plus EXAMPLE_EXTRA_ROWS, the entities
+    the docs/examples queries look for; once for the whole session."""
+    from pimdb_spark.ingest import transfer
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.plans.store import ParquetDatabase
+    from tests.fixtures_imdb import EXAMPLE_EXTRA_ROWS, write_fixtures
+
+    fixture_dir = write_fixtures(
+        str(tmp_path_factory.mktemp("imdb_examples_tsv")), extra_rows=EXAMPLE_EXTRA_ROWS
+    )
+    db = ParquetDatabase(spark, str(tmp_path_factory.mktemp("imdb_examples_db")))
+    transfer(spark, fixture_dir, db)
+    NormalizedBuild(db).run()
+    return db

@@ -53,9 +53,32 @@ tt0000002	8.2	500
 }
 
 
-def write_fixtures(target_dir: str, gzipped: bool = True) -> str:
+# Rows appended to FIXTURE_TSVS for the docs/examples queries: Wyrmwood
+# tt2535470, Alan Smithee and a James Bond character.
+EXAMPLE_EXTRA_ROWS: dict[str, str] = {
+    "name.basics": (
+        "nm0000007\tSean Connery\t1930\t2020\tactor\ttt0000007\n"
+        "nm0000008\tAlan Smithee\t1940\t\\N\tdirector\ttt0000008\n"
+    ),
+    "title.basics": (
+        "tt2535470\tmovie\tWyrmwood: Road of the Dead\tWyrmwood\t0\t2014\t\\N\t98\t"
+        "Action,Comedy,Horror\n"
+        "tt0000007\tmovie\tDr. No\tDr. No\t0\t1962\t\\N\t110\tAction\n"
+        "tt0000008\tmovie\tAn Alan Smithee Film\tAn Alan Smithee Film\t0\t1997\t\\N\t86\tComedy\n"
+    ),
+    "title.principals": (
+        'tt0000007\t1\tnm0000007\tactor\t\\N\t["James Bond"]\n'
+        "tt0000008\t1\tnm0000008\tdirector\t\\N\t\\N\n"
+    ),
+}
+
+
+def write_fixtures(
+    target_dir: str, gzipped: bool = True, extra_rows: dict[str, str] | None = None
+) -> str:
     os.makedirs(target_dir, exist_ok=True)
     for dataset, content in FIXTURE_TSVS.items():
+        content += (extra_rows or {}).get(dataset, "")
         if gzipped:
             with gzip.open(os.path.join(target_dir, f"{dataset}.tsv.gz"), "wt") as f:
                 f.write(content)

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 
 def rows(df, *cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
@@ -477,3 +479,122 @@ def test_analyze_collects_stats_for_bucketed(spark, tmp_path):
     db2 = ParquetDatabase(spark, str(tmp_path / "db2"))
     db2.write(spark.range(10).selectExpr("id AS k"), "t")
     assert db2.analyze("t") is False
+
+
+def test_title_alias_type_frame_ships_worker_code(built_db, monkeypatch):
+    """The alias-type step is the build's one Python UDF: building its
+    frame ships the package to the Python workers, so a build started
+    outside the repository does not die there with ModuleNotFoundError."""
+    from pimdb_spark import catalog
+    from pimdb_spark.plans.build import NormalizedBuild
+
+    calls = []
+    monkeypatch.setattr(catalog, "ensure_worker_code", calls.append)
+    NormalizedBuild(built_db).build_title_alias_to_title_alias_type()
+    assert calls == [built_db.spark]
+
+
+def _sql_jobs(db, query: str):
+    """db.sql under its own job group: the frame, and the number of jobs
+    it launched before any drain."""
+    import uuid
+
+    sc = db.spark.sparkContext
+    group = f"sql-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "db.sql")
+    try:
+        df = db.sql(query)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sql_reuses_views_of_unchanged_tables(spark, tmp_path):
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(3), "a")
+    db.write(spark.range(5), "b")
+    df, jobs = _sql_jobs(db, "select count(*) from a")
+    assert jobs > 0  # first registration reads each table's schema
+    assert df.first()[0] == 3
+    df, jobs = _sql_jobs(db, "select count(*) from b")
+    assert jobs == 0
+    assert df.first()[0] == 5
+
+
+def test_sql_sees_every_rewrite(spark, tmp_path):
+    """Writes through this instance, another instance and a non-Spark
+    writer all change the table's file signature, so the next query reads
+    the new files."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    q = "select count(*) from t"
+    db.write(spark.range(3), "t")
+    assert db.sql(q).first()[0] == 3
+    db.write(spark.range(7), "t")
+    assert db.sql(q).first()[0] == 7
+    ParquetDatabase(spark, db.db_dir).write(spark.range(11), "t")
+    assert db.sql(q).first()[0] == 11
+    shutil.rmtree(db.path("t"))
+    os.makedirs(db.path("t"))
+    pq.write_table(pa.table({"id": [1, 2]}), os.path.join(db.path("t"), "part-0.parquet"))
+    assert db.sql(q).first()[0] == 2
+
+
+def test_sql_drops_views_of_vanished_tables(spark, tmp_path):
+    """A dropped or externally deleted table raises Spark's
+    TABLE_OR_VIEW_NOT_FOUND instead of leaving a view over deleted files."""
+    import shutil
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(3), "t")
+    db.write(spark.range(2), "u")
+    assert db.sql("select count(*) from t").first()[0] == 3
+    db.drop("t")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        db.sql("select count(*) from t")
+    shutil.rmtree(db.path("u"))
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        db.sql("select count(*) from u")
+
+
+def test_sql_views_follow_the_database(built_db, examples_db):
+    """Two databases in one session register the same view names over
+    different directories; each query answers from its own database."""
+    q = "select count(*) from title"
+    n_built, n_examples = built_db.read("title").count(), examples_db.read("title").count()
+    assert n_built != n_examples
+    assert built_db.sql(q).first()[0] == n_built
+    assert examples_db.sql(q).first()[0] == n_examples
+    assert built_db.sql(q).first()[0] == n_built
+
+
+def test_sql_plain_and_bucketed_instances_own_relations(spark, tmp_path):
+    """A bucketed instance's view is the catalog relation; a plain instance
+    over the same directory gets a plain parquet relation, and back."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    bucketed = ParquetDatabase(spark, str(tmp_path / "db"), bucket_spec={"t": ("k", 4)})
+    bucketed.write(spark.range(100).withColumnRenamed("id", "k"), "t")
+    plain = ParquetDatabase(spark, bucketed.db_dir)
+    name = bucketed._catalog_name("t")
+
+    def relation(db):
+        return db.sql("select * from t")._jdf.queryExecution().analyzed().toString()
+
+    assert name in relation(bucketed)
+    assert name not in relation(plain)
+    assert name in relation(bucketed)

@@ -11,7 +11,7 @@ its golden row-set, not just a non-empty one.
 The fixture is the standard edge-case fixture augmented with the specific
 entities the examples query (Wyrmwood tt2535470, Alan Smithee, a James
 Bond character), so the demos exercise the same build path as everything
-else.
+else (the session fixture ``examples_db`` in conftest.py).
 """
 
 from __future__ import annotations
@@ -19,52 +19,9 @@ from __future__ import annotations
 import os
 from glob import glob
 
-import pytest
-
-from tests.fixtures_imdb import FIXTURE_TSVS, write_fixtures
-
 _EXAMPLES_FOLDER = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "examples"
 )
-
-_EXTRA_ROWS: dict[str, str] = {
-    "name.basics": (
-        "nm0000007\tSean Connery\t1930\t2020\tactor\ttt0000007\n"
-        "nm0000008\tAlan Smithee\t1940\t\\N\tdirector\ttt0000008\n"
-    ),
-    "title.basics": (
-        "tt2535470\tmovie\tWyrmwood: Road of the Dead\tWyrmwood\t0\t2014\t\\N\t98\t"
-        "Action,Comedy,Horror\n"
-        "tt0000007\tmovie\tDr. No\tDr. No\t0\t1962\t\\N\t110\tAction\n"
-        "tt0000008\tmovie\tAn Alan Smithee Film\tAn Alan Smithee Film\t0\t1997\t\\N\t86\tComedy\n"
-    ),
-    "title.principals": (
-         'tt0000007\t1\tnm0000007\tactor\t\\N\t["James Bond"]\n'
-        "tt0000008\t1\tnm0000008\tdirector\t\\N\t\\N\n"
-    ),
-}
-
-
-@pytest.fixture(scope="module")
-def examples_db(spark, tmp_path_factory):
-    from pimdb_spark.ingest import transfer
-    from pimdb_spark.plans.build import NormalizedBuild
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    fixture_dir = str(tmp_path_factory.mktemp("imdb_examples_tsv"))
-    augmented = {k: v + _EXTRA_ROWS.get(k, "") for k, v in FIXTURE_TSVS.items()}
-    import gzip
-
-    os.makedirs(fixture_dir, exist_ok=True)
-    for dataset, content in augmented.items():
-        with gzip.open(os.path.join(fixture_dir, f"{dataset}.tsv.gz"), "wt") as f:
-            f.write(content)
-
-    db_dir = str(tmp_path_factory.mktemp("imdb_examples_db"))
-    db = ParquetDatabase(spark, db_dir)
-    transfer(spark, fixture_dir, db)
-    NormalizedBuild(db).run()
-    return db
 
 
 def _run_example(db, name: str):
@@ -114,3 +71,21 @@ def test_titles_directed_by_alan_smithee_golden(examples_db):
 def test_titles_with_a_james_bond_character_golden(examples_db):
     rows = [tuple(r) for r in _run_example(examples_db, "titles_with_a_jamed_bond_character")]
     assert rows == [("Dr. No", 1962, "Sean Connery", "James Bond")]
+
+
+def test_examples_run_through_cli_query(examples_db, capsys):
+    """CLI ``query --file`` parses double-quoted identifiers like pimdb's
+    SQLite and PostgreSQL dialects, and leaves the session's dialect as it
+    found it."""
+    from pimdb_spark.cli import main
+
+    key = "spark.sql.ansi.doubleQuotedIdentifiers"
+    before = examples_db.spark.conf.get(key)
+    paths = sorted(glob(os.path.join(_EXAMPLES_FOLDER, "*.sql")))
+    assert len(paths) == 4
+    for path in paths:
+        name = os.path.splitext(os.path.basename(path))[0]
+        assert main(["query", "--file", path, "--database", examples_db.db_dir]) == 0, name
+        out = capsys.readouterr().out.splitlines()
+        assert len(out) == 1 + len(_run_example(examples_db, name)), name
+        assert examples_db.spark.conf.get(key) == before
