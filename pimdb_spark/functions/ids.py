@@ -23,24 +23,30 @@ stage at any scale.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Frames persisted by with_surrogate_id: the cache must stay live until the
-# CALLER materializes the returned frame (the offset join re-reads it), so
-# unpersisting can't happen inside this function.  Callers that loop over
-# many tables (NormalizedBuild's 16-table run) call release_id_caches()
-# after each table is written, or executor storage accumulates one cached
-# range-partitioned copy of every large table in the build.
-_live_persists: list[DataFrame] = []
+# Frames persisted by with_surrogate_id, per calling thread: the cache must
+# stay live until the CALLER materializes the returned frame (the offset
+# join re-reads it), so unpersisting can't happen inside this function.
+# Callers that loop over many tables (NormalizedBuild's 15-table run) call
+# release_id_caches() after each table is written, or executor storage
+# accumulates one cached range-partitioned copy of every large table in the
+# build.  Keyed by thread because the build writes independent tables
+# concurrently: one step's release must not unpersist a frame another step
+# has not written yet (the recompute may sample different range
+# boundaries, and then the per-partition offsets no longer match).
+_live_persists: dict[int, list[DataFrame]] = {}
 
 
 def release_id_caches() -> None:
-    """Unpersist every frame with_surrogate_id has cached so far.  Call
-    after the frame returned by with_surrogate_id has been materialized
-    (written / counted); safe to call repeatedly."""
-    while _live_persists:
-        _live_persists.pop().unpersist()
+    """Unpersist every frame with_surrogate_id has cached so far in the
+    calling thread.  Call after the frame returned by with_surrogate_id has
+    been materialized (written / counted); safe to call repeatedly."""
+    for df in _live_persists.pop(threading.get_ident(), []):
+        df.unpersist()
 
 
 def with_key_table_id(df: DataFrame, name_col: str = "name") -> DataFrame:
@@ -67,7 +73,7 @@ def with_surrogate_id(df: DataFrame, order_cols: list[str], id_col: str = "id") 
         "_pid", F.shiftright("_mid", 33).cast("int")
     ).withColumn("_local_rn", (F.col("_mid") % F.lit(1 << 33)) + 1)
     with_local = with_local.persist()
-    _live_persists.append(with_local)
+    _live_persists.setdefault(threading.get_ident(), []).append(with_local)
     counts = dict(
         with_local.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
     )  # metadata-sized: one row per partition

@@ -1,14 +1,17 @@
 """`transfer`: TSV datasets → typed, deduplicated dataset tables
 (SURVEY §3.1).  The reference's row-at-a-time loop (read → type-coerce →
 dedup → 1024-row INSERT batches, database.py:524-566) becomes one Spark
-job per dataset: csv scan → conjunctive filter → typed projection →
-keep-first window dedup → parquet write."""
+write per dataset: csv scan → conjunctive filter → typed projection →
+keep-first window dedup → parquet write.  The datasets are independent,
+so ``transfer`` writes them concurrently, one driver thread each."""
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from pimdb_spark.plans.store import ParquetDatabase
 from pimdb_spark.schemas import IMDB_DATASET_NAMES, camelized_dot_name
@@ -34,8 +37,14 @@ def transfer(
     ``split_over_bytes`` through sources.tsv.split_gz_tsv (ordered
     plain-text shards under <db_dir>/_split/) so one big non-splittable
     gzip no longer serializes its whole parse/type/dedup/encode pipeline
-    into one task — only the inherent single-stream gunzip stays serial."""
-    for dataset in datasets or IMDB_DATASET_NAMES:
+    into one task — only the inherent single-stream gunzip stays serial.
+
+    Each dataset is read and written in its own thread, started through
+    inheritable_thread_target so the caller's job group, job description
+    and tags reach every job.  The first failure is re-raised once every
+    dataset has finished."""
+
+    def write(dataset: str) -> None:
         df = read_dataset(
             spark,
             dataset_file(source_dir, dataset),
@@ -47,6 +56,12 @@ def transfer(
             split_over_bytes=split_over_bytes,
         )
         db.write(df, camelized_dot_name(dataset))
+
+    names = list(dict.fromkeys(datasets or IMDB_DATASET_NAMES))  # one writer per table
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(write), d) for d in names]
+    for future in futures:
+        future.result()
 
 
 def incremental_transfer(

@@ -20,9 +20,13 @@ the joins whose small side is a key table.
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+from pyspark.util import inheritable_thread_target
 
 from pimdb_spark.functions.ids import (
     release_id_caches,
@@ -83,8 +87,9 @@ def imdb_bucket_spec(num_buckets: int) -> dict[str, tuple[str, int]]:
 
 
 class NormalizedBuild:
-    """Runs the 14-step DAG of SURVEY §3.2 against a ParquetDatabase that
-    already holds the 7 dataset tables (from transfer)."""
+    """Runs the build DAG of SURVEY §3.2, one step per normalized table,
+    against a ParquetDatabase that already holds the 7 dataset tables
+    (from transfer)."""
 
     def __init__(self, db: ParquetDatabase):
         self.db = db
@@ -218,33 +223,39 @@ class NormalizedBuild:
 
     # -- character map (step 11) -------------------------------------------
 
-    def build_character_and_temp_map(self) -> tuple[DataFrame, DataFrame]:
-        """E3 (database.py:705-763): parse each DISTINCT characters JSON
-        once (the reference's temp-table trick — Catalyst does not dedup
-        expression inputs, so the distinct-then-join shape is kept
-        deliberately), explode with per-list ordering, rank names for
-        character ids.
-
-        Returns (character, temp_characters_to_character).
-        Scale: distinct-JSON set ≪ principals rows; the JSON parse is a
-        built-in from_json, not a UDF."""
+    def _characters_exploded(self) -> DataFrame:
+        """Each DISTINCT characters JSON parsed once (the reference's
+        temp-table trick — Catalyst does not dedup expression inputs, so
+        the distinct-then-join shape is kept deliberately) and exploded
+        with per-list ordering.  Scale: distinct-JSON set ≪ principals
+        rows; the JSON parse is a built-in from_json, not a UDF."""
         tp = self.db.read("TitlePrincipals")
         distinct_json = (
             tp.filter(F.col("characters").isNotNull()).select("characters").distinct()
         )
-        exploded = distinct_json.select(
+        return distinct_json.select(
             "characters",
             F.posexplode(F.from_json("characters", ArrayType(StringType()))).alias(
                 "pos", "character_name"
             ),
         ).select("characters", (F.col("pos") + 1).alias("ordering"), "character_name")
-        character = with_key_table_id(
+
+    def build_character(self) -> DataFrame:
+        """E3, first half (database.py:705-763): character names ranked for
+        ids."""
+        exploded = self._characters_exploded()
+        return with_key_table_id(
             exploded.select(F.col("character_name").alias("name")).distinct()
         )
-        temp = exploded.join(
+
+    def build_temp_characters_to_character(self) -> DataFrame:
+        """E3, second half (database.py:705-763): (JSON, ordering) →
+        character id, joined against the written character table."""
+        exploded = self._characters_exploded()
+        character = self.db.read("character")
+        return exploded.join(
             F.broadcast(character), exploded.character_name == character.name
         ).select("characters", "ordering", F.col("id").alias("character_id"))
-        return character, temp
 
     def build_participation_to_character(self) -> DataFrame:
         """J6 5-way join + DISTINCT (database.py:765-811): participation ⋈
@@ -386,46 +397,82 @@ class NormalizedBuild:
 
     # -- orchestration ------------------------------------------------------
 
+    # Every step: the table it writes (through build_<table>) -> the tables
+    # its builder reads.  Listed in the reference's build order
+    # (command.py:203-220); the dataset tables are on disk before run()
+    # starts, so only the edges between steps order the schedule.
+    STEPS: dict[str, tuple[str, ...]] = {
+        "title_alias_type": (),
+        "genre": ("TitleBasics",),
+        "profession": ("TitlePrincipals",),
+        "title_type": ("TitleBasics",),
+        "name": ("NameBasics",),
+        "title": ("TitleBasics", "title_type", "TitleRatings"),
+        "title_alias": ("title", "TitleAkas"),
+        "title_alias_to_title_alias_type": (
+            "title_alias", "title", "TitleAkas", "title_alias_type",
+        ),
+        "episode": ("TitleEpisode", "title"),
+        "participation": ("TitlePrincipals", "name", "title", "profession"),
+        "character": ("TitlePrincipals",),
+        "temp_characters_to_character": ("TitlePrincipals", "character"),
+        "participation_to_character": (
+            "participation", "name", "title", "TitlePrincipals",
+            "temp_characters_to_character", "profession",
+        ),
+        "name_to_known_for_title": ("NameBasics", "name", "title"),
+        "title_to_genre": ("TitleBasics", "title", "genre"),
+    }
+
     def run(self, timings: dict[str, float] | None = None) -> None:
-        """Execute the DAG in the reference's dependency order
-        (command.py:203-220), persisting each table before dependents read
-        it (cuts lineage and makes every step restartable).  Each write is
-        followed by release_id_caches() so the range-partitioned frame
-        with_surrogate_id caches for its offset join is freed as soon as
-        the table is on disk — otherwise executor storage accumulates a
-        cached copy of every large table across the 16-table build.
+        """Execute the DAG dependency-driven and concurrently: this thread
+        submits each step to a thread pool as soon as every table it reads
+        is written, so independent steps overlap and the longest chain
+        (title_type → title → title_alias →
+        title_alias_to_title_alias_type) sets the wall time.  No worker
+        ever waits on another.  Each table is persisted before dependents
+        read it (cuts lineage and makes every step restartable).
 
-        ``timings``, when passed, collects per-table wall-clock seconds
-        (the plan is lazy, so each table's full compute lands in its
-        write) — scripts/bench_build.py uses this to bench the product
-        path end to end."""
-        import time
+        Workers start through inheritable_thread_target, so the caller's
+        job group, job description and tags reach every job.  After its
+        write each step calls release_id_caches(), which frees only the
+        range-partitioned frames with_surrogate_id cached in that step's
+        thread — otherwise executor storage accumulates a cached copy of
+        every large table across the build.
 
+        If a step raises, no further step starts; run() waits for the
+        running ones and re-raises the first failure.
+
+        ``timings``, when passed, collects per-table wall-clock seconds of
+        each step's build and write (the plan is lazy, so each table's
+        full compute lands in its write).  Steps overlap, so their sum can
+        exceed run()'s wall time — scripts/bench_build.py uses them to
+        bench the product path end to end."""
         db = self.db
 
-        def write(df: DataFrame, name: str) -> None:
+        def step(table: str) -> float:
             t0 = time.perf_counter()
-            db.write(df, name)
-            release_id_caches()
-            if timings is not None:
-                timings[name] = time.perf_counter() - t0
+            try:
+                db.write(getattr(self, f"build_{table}")(), table)
+            finally:
+                release_id_caches()
+            return time.perf_counter() - t0
 
-        write(self.build_title_alias_type(), "title_alias_type")
-        write(self.build_genre(), "genre")
-        write(self.build_profession(), "profession")
-        write(self.build_title_type(), "title_type")
-        write(self.build_name(), "name")
-        write(self.build_title(), "title")
-        write(self.build_title_alias(), "title_alias")
-        write(self.build_title_alias_to_title_alias_type(), "title_alias_to_title_alias_type")
-        write(self.build_episode(), "episode")
-        write(self.build_participation(), "participation")
-        character, temp = self.build_character_and_temp_map()
-        write(character, "character")
-        write(temp, "temp_characters_to_character")
-        write(self.build_participation_to_character(), "participation_to_character")
-        write(self.build_name_to_known_for_title(), "name_to_known_for_title")
-        write(self.build_title_to_genre(), "title_to_genre")
+        waiting = dict(self.STEPS)
+        running: dict[Future, str] = {}
+        with ThreadPoolExecutor(max_workers=len(waiting)) as pool:
+            while waiting or running:
+                for table, inputs in list(waiting.items()):
+                    if not any(t in waiting or t in running.values() for t in inputs):
+                        del waiting[table]
+                        task = inheritable_thread_target(db.spark)(step)
+                        running[pool.submit(task, table)] = table
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for future in done:
+                    table = running.pop(future)
+                    seconds = future.result()
+                    if timings is not None:
+                        timings[table] = seconds
         db.drop_obsolete(
             keep=NORMALIZED_TABLE_NAMES
             + [t for t in db.table_names() if t[0].isupper()]  # dataset tables

@@ -15,14 +15,21 @@ ParquetDatabase: ``register_all`` replaces them, and drops each view it
 registered whose table this database does not hold (dropped, deleted on
 disk, or another database's), so a query naming it raises Spark's
 TABLE_OR_VIEW_NOT_FOUND instead of reading stale or foreign files.
+
+Likewise ``read`` starts no schema-inference job for a table version the
+session already knows: ``write`` remembers the schema of what it wrote and
+``read`` the schema it inferred, both under the table's file signature,
+and a later read of the same files passes that schema to Spark.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _SWAP_OLD_SUFFIX = ".swap.old"
 
@@ -31,6 +38,11 @@ _SWAP_OLD_SUFFIX = ".swap.old"
 # temp views are session-scoped, and several databases in one session
 # register the same view names over different directories.
 _REGISTERED: dict[str, dict[str, tuple[tuple[str, bool], tuple]]] = {}
+
+# SparkSession.sessionUUID -> {table path: (file signature, schema)}: the
+# schema Spark reads from each table version the session wrote or read.
+# Without it every spark.read.parquet(path) starts one footer-reading job.
+_SCHEMAS: dict[str, dict[str, tuple[tuple, StructType]]] = {}
 
 
 def _file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
@@ -138,6 +150,10 @@ class ParquetDatabase:
             cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
             w = w.partitionBy(*cols)
         w.parquet(self.path(table))
+        if not partition_by:  # a read moves partition columns to the end
+            # parquet relations read every column as nullable
+            schema = StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
+            self._schemas()[self.path(table)] = (_file_signature(self.path(table)), schema)
 
     def _write_bucketed(
         self, df: DataFrame, table: str, bucket_cols: str | list[str], num_buckets: int
@@ -219,10 +235,24 @@ class ParquetDatabase:
             self._catalog_name(table)
         )
 
+    def _schemas(self) -> dict[str, tuple[tuple, StructType]]:
+        return _SCHEMAS.setdefault(self.spark._jsparkSession.sessionUUID(), {})
+
     def read(self, table: str) -> DataFrame:
+        """The table as a DataFrame.  A parquet table whose files this
+        session wrote or read before is read with the schema remembered
+        for them; otherwise Spark infers it and it is remembered."""
         if self._reads_catalog(table):
             return self.spark.table(self._catalog_name(table))
-        return self.spark.read.parquet(self.path(table))
+        path = self.path(table)
+        signature = _file_signature(path)
+        schemas = self._schemas()
+        known = schemas.get(path)
+        if known is not None and known[0] == signature:
+            return self.spark.read.schema(known[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        schemas[path] = (signature, df.schema)
+        return df
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))

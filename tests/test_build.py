@@ -332,6 +332,173 @@ def test_build_leaves_no_persisted_frames(built_db):
     assert not ids._live_persists
 
 
+def test_release_id_caches_is_per_thread(spark):
+    """release_id_caches() frees only the frames with_surrogate_id cached
+    in the calling thread: the concurrent build must not unpersist another
+    step's frame before that step's write has read it (a recompute may
+    sample other range boundaries, and the id offsets would no longer
+    match)."""
+    import threading
+
+    from pimdb_spark.functions import ids
+
+    cached = threading.Event()
+    checked = threading.Event()
+    errors = []
+
+    def other_step():
+        try:
+            ids.with_surrogate_id(spark.range(100).selectExpr("id AS v"), ["v"])
+        except Exception as exc:
+            errors.append(exc)
+        cached.set()
+        checked.wait(timeout=120)
+        ids.release_id_caches()
+
+    thread = threading.Thread(target=other_step, daemon=True)
+    thread.start()
+    assert cached.wait(timeout=120) and not errors
+    (other,) = ids._live_persists[thread.ident]
+    try:
+        ids.with_surrogate_id(spark.range(50).selectExpr("id AS v"), ["v"])
+        ids.release_id_caches()
+        assert other.storageLevel.useMemory  # still persisted
+        assert list(ids._live_persists) == [thread.ident]
+    finally:
+        checked.set()
+        thread.join(timeout=120)
+    assert not thread.is_alive()
+    assert not other.storageLevel.useMemory
+    assert not ids._live_persists
+
+
+def test_surrogate_ids_under_many_threads(spark):
+    """More threads than cores, switching often: every thread gets dense
+    ids 1..n for its own frame, its release frees exactly the frame it
+    cached, and no cached frame is left behind."""
+    import sys
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from pimdb_spark.functions import ids
+
+    errors = []
+
+    def step(n):
+        try:
+            out = ids.with_surrogate_id(spark.range(n).selectExpr("id AS v"), ["v"])
+            (mine,) = ids._live_persists[threading.get_ident()]
+            got = out.agg(F.min("id"), F.max("id"), F.countDistinct("id")).first()
+            assert tuple(got) == (1, n, n), got
+            ids.release_id_caches()
+            assert not mine.storageLevel.useMemory
+        except Exception as exc:
+            errors.append(exc)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=step, args=(50 + i,), daemon=True) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert not ids._live_persists
+
+
+def test_steps_declare_every_table_they_read(built_db, monkeypatch):
+    """Each builder reads exactly the tables its STEPS entry names, so run()
+    never starts a step before one of its inputs is written."""
+    from pimdb_spark.functions.ids import release_id_caches
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.schemas import NORMALIZED_TABLE_NAMES
+
+    assert sorted(NormalizedBuild.STEPS) == sorted(NORMALIZED_TABLE_NAMES)
+    read = built_db.read
+    seen = []
+    monkeypatch.setattr(built_db, "read", lambda table: seen.append(table) or read(table))
+    build = NormalizedBuild(built_db)
+    try:
+        for table, inputs in NormalizedBuild.STEPS.items():
+            seen.clear()
+            getattr(build, f"build_{table}")()
+            assert sorted(set(seen)) == sorted(inputs), table
+    finally:
+        release_id_caches()
+
+
+def test_run_reraises_a_failed_step_and_starts_no_dependent(spark, tmp_path, monkeypatch):
+    """A step that raises makes run() re-raise it, without hanging, and no
+    step that reads its table (directly or through another step) starts."""
+    import threading
+
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    class StepFailed(RuntimeError):
+        pass
+
+    def fail(self):
+        raise StepFailed("title")
+
+    for table in NormalizedBuild.STEPS:
+        monkeypatch.setattr(NormalizedBuild, f"build_{table}", lambda self: None)
+    monkeypatch.setattr(NormalizedBuild, "build_title", fail)
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    written = []
+    monkeypatch.setattr(db, "write", lambda df, table: written.append(table))
+    raised = []
+
+    def build():
+        try:
+            NormalizedBuild(db).run()
+        except StepFailed as exc:
+            raised.append(exc)
+
+    thread = threading.Thread(target=build, daemon=True)
+    thread.start()
+    thread.join(timeout=120)
+    assert not thread.is_alive()
+    assert len(raised) == 1
+    assert "title_type" in written
+    dependents = {
+        "title",
+        "title_alias",
+        "title_alias_to_title_alias_type",
+        "episode",
+        "participation",
+        "participation_to_character",
+        "name_to_known_for_title",
+        "title_to_genre",
+    }
+    assert not dependents & set(written)
+
+
+def test_etl_jobs_run_in_the_callers_job_group(spark, imdb_fixture_dir, tmp_path):
+    """transfer and run() start their worker threads through
+    inheritable_thread_target, so every job started during the call
+    carries the caller's job group: the ids strictly between a job run
+    just before and one run just after are exactly the group's."""
+    from pimdb_spark.ingest import transfer
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    def marker():
+        return _jobs(spark, lambda: spark.range(1).collect())[1]
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    before = max(marker())
+    _, etl = _jobs(spark, lambda: (transfer(spark, imdb_fixture_dir, db), NormalizedBuild(db).run()))
+    after = min(marker())
+    assert etl == set(range(before + 1, after))
+    assert len(etl) > 15
+
+
 def test_to_jdbc_plumbing(spark, tmp_path, monkeypatch):
     """No JDBC driver ships in this environment, so the writer itself is
     monkeypatched; what's under test is the plumbing contract: the stored
@@ -494,33 +661,34 @@ def test_title_alias_type_frame_ships_worker_code(built_db, monkeypatch):
     assert calls == [built_db.spark]
 
 
-def _sql_jobs(db, query: str):
-    """db.sql under its own job group: the frame, and the number of jobs
-    it launched before any drain."""
+def _jobs(spark, fn):
+    """Call ``fn`` under its own job group: its result, and the ids of the
+    jobs it launched."""
     import uuid
 
-    sc = db.spark.sparkContext
-    group = f"sql-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "db.sql")
+    sc = spark.sparkContext
+    group = f"call-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "call")
     try:
-        df = db.sql(query)
+        out = fn()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, set(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_sql_reuses_views_of_unchanged_tables(spark, tmp_path):
     from pimdb_spark.plans.store import ParquetDatabase
 
     db = ParquetDatabase(spark, str(tmp_path / "db"))
-    db.write(spark.range(3), "a")
-    db.write(spark.range(5), "b")
-    df, jobs = _sql_jobs(db, "select count(*) from a")
-    assert jobs > 0  # first registration reads each table's schema
+    # written outside the database, so the session does not know the schemas
+    spark.range(3).write.parquet(db.path("a"))
+    spark.range(5).write.parquet(db.path("b"))
+    df, jobs = _jobs(spark, lambda: db.sql("select count(*) from a"))
+    assert jobs  # first registration reads each table's schema
     assert df.first()[0] == 3
-    df, jobs = _sql_jobs(db, "select count(*) from b")
-    assert jobs == 0
+    df, jobs = _jobs(spark, lambda: db.sql("select count(*) from b"))
+    assert not jobs
     assert df.first()[0] == 5
 
 
@@ -547,6 +715,37 @@ def test_sql_sees_every_rewrite(spark, tmp_path):
     os.makedirs(db.path("t"))
     pq.write_table(pa.table({"id": [1, 2]}), os.path.join(db.path("t"), "part-0.parquet"))
     assert db.sql(q).first()[0] == 2
+
+
+def test_read_reuses_the_schema_of_a_known_table_version(spark, tmp_path):
+    """read() hands Spark the schema this session wrote or inferred for the
+    table's current files, so it starts no schema-inference job; that
+    schema equals the inferred one, and every rewrite is read with its
+    own schema."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(
+        spark.range(3).selectExpr(
+            "id AS k", "cast(id AS string) AS v", "named_struct('x', id) AS s", "array(id) AS a"
+        ),
+        "t",
+    )
+    df, jobs = _jobs(spark, lambda: db.read("t"))
+    assert not jobs
+    assert df.schema == spark.read.parquet(db.path("t")).schema
+    assert sorted(r.k for r in df.collect()) == [0, 1, 2]
+    db.write(spark.range(2).selectExpr("id * 2 AS w"), "t")
+    df = db.read("t")
+    assert df.schema == spark.read.parquet(db.path("t")).schema
+    assert sorted(r.w for r in df.collect()) == [0, 2]
+    # written outside the database: the first read infers, later ones reuse
+    spark.range(4).write.parquet(db.path("u"))
+    df, jobs = _jobs(spark, lambda: db.read("u"))
+    assert jobs
+    assert df.schema == spark.read.parquet(db.path("u")).schema
+    _, jobs = _jobs(spark, lambda: db.read("u"))
+    assert not jobs
 
 
 def test_sql_drops_views_of_vanished_tables(spark, tmp_path):
