@@ -40,19 +40,9 @@ def main(argv: list[str] | None = None) -> int:
     p_tr.add_argument("names", nargs="*", default=["all"])
     p_tr.add_argument("--dataset-folder", default=".")
     p_tr.add_argument("--database", required=True)
-    p_tr.add_argument(
-        "--buckets", type=int, default=0,
-        help="bucket the join-key tables with this bucket count "
-        "(imdb_bucket_spec; 0 = plain layout). Use the SAME value for "
-        "transfer and build so both halves share the layout.",
-    )
 
     p_b = sub.add_parser("build", help="dataset tables -> normalized tables")
     p_b.add_argument("--database", required=True)
-    p_b.add_argument(
-        "--buckets", type=int, default=0,
-        help="bucket count for the normalized join-key tables (see transfer)",
-    )
 
     p_q = sub.add_parser("query", help="run SQL, print TSV")
     p_q.add_argument("sql", nargs="?")
@@ -73,12 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     from pimdb_spark.plans.store import ParquetDatabase
 
-    bucket_spec = None
-    if getattr(args, "buckets", 0):
-        from pimdb_spark.plans.build import imdb_bucket_spec
-
-        bucket_spec = imdb_bucket_spec(args.buckets)
-    db = ParquetDatabase(spark, args.database, bucket_spec=bucket_spec)
+    db = ParquetDatabase(spark, args.database)
 
     if args.command == "transfer":
         from pimdb_spark.ingest import transfer

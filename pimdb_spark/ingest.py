@@ -30,16 +30,8 @@ def transfer(
     db: ParquetDatabase,
     datasets: list[str] | None = None,
     filtered_name_to_values_map: dict[str, list[str]] | None = None,
-    split_large_gz: bool = False,
-    split_over_bytes: int = 1 << 30,
 ) -> None:
-    """``split_large_gz`` routes any single .tsv.gz over
-    ``split_over_bytes`` through sources.tsv.split_gz_tsv (ordered
-    plain-text shards under <db_dir>/_split/) so one big non-splittable
-    gzip no longer serializes its whole parse/type/dedup/encode pipeline
-    into one task — only the inherent single-stream gunzip stays serial.
-
-    Each dataset is read and written in its own thread, started through
+    """Each dataset is read and written in its own thread, started through
     inheritable_thread_target so the caller's job group, job description
     and tags reach every job.  The first failure is re-raised once every
     dataset has finished."""
@@ -50,10 +42,6 @@ def transfer(
             dataset_file(source_dir, dataset),
             dataset,
             filtered_name_to_values_map,
-            split_work_dir=(
-                os.path.join(db.db_dir, "_split") if split_large_gz else None
-            ),
-            split_over_bytes=split_over_bytes,
         )
         db.write(df, camelized_dot_name(dataset))
 

@@ -277,10 +277,11 @@ def sparse_doc_similarity(
 
     Scale: one gram shuffle for tf; the pair join ships (doc, gram, w,
     n2) for capped grams only; the pair groupBy keys on (doc_a, doc_b)
-    with the two norms riding as functionally dependent grouping keys —
-    no post-aggregation norm join (beyond the broadcast threshold that
-    join would be a pair-frame-sized sort-merge join).  max_df is the
-    cost dial — exactly the knob inverted_index documents."""
+    with the two norms riding along (functionally dependent grouping
+    keys for "fold", min aggregates for "sum") — no post-aggregation
+    norm join (beyond the broadcast threshold that join would be a
+    pair-frame-sized sort-merge join).  max_df is the cost dial —
+    exactly the knob inverted_index documents."""
     if scorer not in ("fold", "sum"):
         raise ValueError(f"unknown scorer {scorer!r}: use 'fold' or 'sum'")
     w = ngram_weights(
@@ -293,8 +294,8 @@ def sparse_doc_similarity(
     # As a window over the doc partition the norm costs the same one
     # doc-keyed exchange the old groupBy paid, every (doc, gram) row
     # carries its norm into the gram join (+1 double on that wire), and
-    # the pair groupBy picks it up as a functionally dependent grouping
-    # key — no post-aggregation join at all.
+    # the pair groupBy carries it along — no post-aggregation join at
+    # all.
     if scorer == "sum":
         # Accumulation order is engine-chosen in this scorer (window
         # partition order here, hash-agg order before); the declared
@@ -335,8 +336,13 @@ def sparse_doc_similarity(
     )
     pairs = a.join(b, "gram").filter(F.col("doc_a") < F.col("doc_b"))
     if scorer == "sum":
-        dots = pairs.groupBy("doc_a", "doc_b", "_n2_a", "_n2_b").agg(
-            F.sum(F.col("w_a") * F.col("w_b")).alias("dot")
+        # the norms are order-dependent double sums here: a recomputed
+        # window may differ in the last ulp, so they ride as aggregates
+        # (equal within one evaluation), never as grouping keys
+        dots = pairs.groupBy("doc_a", "doc_b").agg(
+            F.sum(F.col("w_a") * F.col("w_b")).alias("dot"),
+            F.min("_n2_a").alias("_n2_a"),
+            F.min("_n2_b").alias("_n2_b"),
         )
     else:
         dots = pairs.groupBy("doc_a", "doc_b", "_n2_a", "_n2_b").agg(

@@ -55,37 +55,6 @@ def mappable_title_alias_types(raw: str | None) -> list[str]:
 _mappable_udf = F.udf(mappable_title_alias_types, ArrayType(StringType()))
 
 
-def imdb_bucket_spec(num_buckets: int) -> dict[str, tuple[str, int]]:
-    """Bucketing layout for the normalized build (pass to
-    ParquetDatabase(bucket_spec=...)): every table is bucketed on the key
-    its DAG joins probe, so the episode / participation / known-for /
-    ratings joins read pre-partitioned, pre-sorted buckets and skip the
-    Exchange (and Sort) on each bucketed side.
-
-    What remains is the irreducible mid-pipeline rekey: build_episode's
-    second join probes ``parentTconst`` on an intermediate that is
-    partitioned by ``tconst`` — no storage layout can satisfy both keys at
-    once, so that single Exchange (and the surrogate-id range shuffle) is
-    the floor.  Plan-asserted in tests/test_build.py.
-
-    Size ``num_buckets`` to the target scale: buckets are the unit of join
-    parallelism AND the file count per table — at 100 TB, hundreds to a
-    few thousand; at fixture scale, 4."""
-    return {
-        # dataset tables (written by transfer)
-        "TitleBasics": ("tconst", num_buckets),
-        "TitleRatings": ("tconst", num_buckets),
-        "TitleEpisode": ("tconst", num_buckets),
-        "TitlePrincipals": ("nconst", num_buckets),
-        "NameBasics": ("nconst", num_buckets),
-        # normalized tables re-probed by later DAG steps
-        "TitleAkas": ("titleId", num_buckets),
-        "title": ("tconst", num_buckets),
-        "name": ("nconst", num_buckets),
-        "title_alias": ("title_id", num_buckets),
-    }
-
-
 class NormalizedBuild:
     """Runs the build DAG of SURVEY §3.2, one step per normalized table,
     against a ParquetDatabase that already holds the 7 dataset tables
@@ -183,10 +152,7 @@ class NormalizedBuild:
     def build_episode(self) -> DataFrame:
         """J3 double self-join (database.py:944-980): TitleEpisode ⋈ title
         (tconst) ⋈ title (parentTconst); unknown parents drop via the inner
-        join.  Scale: with imdb_bucket_spec both tconst probes are
-        shuffle-free bucket joins; only the parentTconst rekey of the
-        intermediate exchanges (the floor — no layout satisfies both
-        keys).  Unbucketed, every input shuffles."""
+        join."""
         te = self.db.read("TitleEpisode")
         t = self.db.read("title").select("id", "tconst")
         t1 = t.alias("t1")
@@ -362,13 +328,7 @@ class NormalizedBuild:
         tat = self.db.read("title_alias_type").select(
             F.col("id").alias("title_alias_type_id"), F.col("name").alias("type_name")
         )
-        # join order matters for layout reuse: akas ⋈ t runs on
-        # (titleId = tconst) — the keys imdb_bucket_spec buckets both
-        # tables on, so that join is exchange-free when bucketing is on —
-        # and only the (small, types-filtered) intermediate reshuffles to
-        # probe title_alias on its own bucket key (title_id, ordering;
-        # a titleId bucket co-partitions the composite, Spark joins on a
-        # subset of the join keys without re-shuffling the bucketed side)
+        # only akas rows with types reach the title_alias join
         typed_akas = (
             akas.filter(akas.types.isNotNull())
             .join(t, akas.titleId == t.tconst)

@@ -7,9 +7,9 @@ deleting datasets not in the current table list.  Every table is registered
 as a temp view so ``spark.sql`` serves the pass-through query surface.
 
 A view is registered once per table version per session: ``register_all``
-re-reads a table only when its files on disk (name, size, mtime of each)
-or its source (path, bucketed catalog relation or not) differ from what
-the session last registered under that name, so repeated queries skip the
+re-reads a table only when its path or its files on disk (name, size,
+mtime of each) differ from what the session last registered under that
+name, so repeated queries skip the
 per-table schema jobs.  View names that equal table names are owned by
 ParquetDatabase: ``register_all`` replaces them, and drops each view it
 registered whose table this database does not hold (dropped, deleted on
@@ -33,11 +33,11 @@ from pyspark.sql.types import StructType
 
 _SWAP_OLD_SUFFIX = ".swap.old"
 
-# SparkSession.sessionUUID -> {view name: ((table path, reads the bucketed
-# catalog relation), file signature)}.  Session-wide, not per database:
-# temp views are session-scoped, and several databases in one session
-# register the same view names over different directories.
-_REGISTERED: dict[str, dict[str, tuple[tuple[str, bool], tuple]]] = {}
+# SparkSession.sessionUUID -> {view name: (table path, file signature)}.
+# Session-wide, not per database: temp views are session-scoped, and
+# several databases in one session register the same view names over
+# different directories.
+_REGISTERED: dict[str, dict[str, tuple[str, tuple]]] = {}
 
 # SparkSession.sessionUUID -> {table path: (file signature, schema)}: the
 # schema Spark reads from each table version the session wrote or read.
@@ -97,40 +97,13 @@ def recover_swap(path: str) -> bool:
 
 
 class ParquetDatabase:
-    def __init__(
-        self,
-        spark: SparkSession,
-        db_dir: str,
-        bucket_spec: dict[str, tuple[str | list[str], int]] | None = None,
-    ):
-        """``bucket_spec`` maps table name -> (bucket columns, bucket
-        count).  Tables in the spec are written as EXTERNAL bucketed
-        tables: the parquet files still live at ``path(table)`` (so
-        exists/drop/plain readers keep working), while the bucketing
-        metadata lives in the session catalog and ``read`` returns the
-        catalog relation — joins on the bucket key then skip their
-        Exchange entirely (SURVEY §4: bucketing is the Spark replacement
-        for the reference's join-key indexes).  The metadata is
-        session-scoped: a NEW session over the same directory reads plain
-        parquet (same rows, no bucket optimization) until the tables are
-        re-registered."""
+    def __init__(self, spark: SparkSession, db_dir: str):
         self.spark = spark
         self.db_dir = db_dir
-        self.bucket_spec = dict(bucket_spec or {})
         os.makedirs(db_dir, exist_ok=True)
-        # catalog identifiers are db_dir-scoped so two databases in one
-        # session never collide
-        import hashlib
-
-        self._bkt_prefix = (
-            "bkt_" + hashlib.md5(db_dir.encode()).hexdigest()[:8] + "_"
-        )
 
     def path(self, table: str) -> str:
         return os.path.join(self.db_dir, f"{table}.parquet")
-
-    def _catalog_name(self, table: str) -> str:
-        return self._bkt_prefix + table.lower()
 
     def write(
         self, df: DataFrame, table: str, partition_by: str | list[str] | None = None
@@ -139,12 +112,7 @@ class ParquetDatabase:
         dataset so equality/range filters on those columns prune whole
         directories at scan time (PartitionFilters — the Spark form of
         coarse indexing; use low-cardinality columns only, high-cardinality
-        partitioning makes small files).  Tables named in ``bucket_spec``
-        are written bucketed instead (see __init__)."""
-        if table in self.bucket_spec:
-            cols, n = self.bucket_spec[table]
-            self._write_bucketed(df, table, cols, n)
-            return
+        partitioning makes small files)."""
         w = df.write.mode("overwrite")
         if partition_by:
             cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
@@ -154,56 +122,6 @@ class ParquetDatabase:
             # parquet relations read every column as nullable
             schema = StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
             self._schemas()[self.path(table)] = (_file_signature(self.path(table)), schema)
-
-    def _write_bucketed(
-        self, df: DataFrame, table: str, bucket_cols: str | list[str], num_buckets: int
-    ) -> None:
-        """External bucketed write: repartition on the bucket key first so
-        each task holds exactly one bucket (one file per bucket — without
-        this, every task writes a file per bucket it touches, and the
-        resulting multi-file buckets also stop Spark from exploiting the
-        within-bucket sort).  sortBy the same key so downstream sort-merge
-        joins skip their Sort as well as their Exchange.
-
-        The write lands in a temp path under a temp catalog name first and
-        is swapped in only once complete (swap_directory), so a crash
-        mid-write leaves the old table intact and ``df`` may safely read
-        from the very table being replaced — the old files are never
-        deleted before the new ones exist (the failure mode compact()'s
-        docstring warns about).  The final catalog entry is re-created
-        over the swapped-in files via external-table DDL, preserving the
-        bucket metadata."""
-        cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-        name = self._catalog_name(table)
-        tmp_name = name + "_swaptmp"
-        path = self.path(table)
-        tmp_path = path + ".bucket.tmp"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        if os.path.exists(tmp_path):
-            shutil.rmtree(tmp_path)
-        (
-            df.repartition(num_buckets, *cols)
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(num_buckets, *cols)
-            .sortBy(*cols)
-            .option("path", tmp_path)
-            .saveAsTable(tmp_name)
-        )
-        schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in self.spark.table(tmp_name).schema.fields
-        )
-        swap_directory(path, tmp_path)
-        # both entries are EXTERNAL: dropping them is metadata-only
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        bucket_cols_sql = ", ".join(f"`{c}`" for c in cols)
-        self.spark.sql(
-            f"CREATE TABLE {name} ({schema_ddl}) USING PARQUET "
-            f"CLUSTERED BY ({bucket_cols_sql}) SORTED BY ({bucket_cols_sql}) "
-            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-        )
 
     def to_jdbc(
         self,
@@ -230,11 +148,6 @@ class ParquetDatabase:
             df = df.coalesce(num_partitions)
         df.write.mode(mode).jdbc(url, jdbc_table or table, properties=dict(properties))
 
-    def _reads_catalog(self, table: str) -> bool:
-        return table in self.bucket_spec and self.spark.catalog.tableExists(
-            self._catalog_name(table)
-        )
-
     def _schemas(self) -> dict[str, tuple[tuple, StructType]]:
         return _SCHEMAS.setdefault(self.spark._jsparkSession.sessionUUID(), {})
 
@@ -242,8 +155,6 @@ class ParquetDatabase:
         """The table as a DataFrame.  A parquet table whose files this
         session wrote or read before is read with the schema remembered
         for them; otherwise Spark infers it and it is remembered."""
-        if self._reads_catalog(table):
-            return self.spark.table(self._catalog_name(table))
         path = self.path(table)
         signature = _file_signature(path)
         schemas = self._schemas()
@@ -258,7 +169,6 @@ class ParquetDatabase:
         return os.path.exists(self.path(table))
 
     def drop(self, table: str) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table)}")
         if self.exists(table):
             shutil.rmtree(self.path(table))
 
@@ -274,7 +184,7 @@ class ParquetDatabase:
 
     def register_all(self) -> None:
         """Make the session's temp views match this database's tables (see
-        the module docstring).  A table whose source and file signature
+        the module docstring).  A table whose path and file signature
         are unchanged since this session registered it keeps its view and
         costs one directory walk; any write — through this instance,
         another instance or another process — changes the signature."""
@@ -284,39 +194,18 @@ class ParquetDatabase:
             self.spark.catalog.dropTempView(stale)
             del views[stale]
         for t in tables:
-            path, from_catalog = self.path(t), self._reads_catalog(t)
+            path = self.path(t)
             # signature before read: a write racing the read re-registers
             # on the next call instead of being missed
-            entry = ((path, from_catalog), _file_signature(path))
+            entry = (path, _file_signature(path))
             if views.get(t) == entry:
                 continue
-            if from_catalog:
-                self.spark.catalog.refreshTable(self._catalog_name(t))
             self.read(t).createOrReplaceTempView(t)
             views[t] = entry
 
     def sql(self, query: str) -> DataFrame:
         self.register_all()
         return self.spark.sql(query)
-
-    def analyze(self, table: str, columns: list[str] | None = None) -> bool:
-        """Collect table (and optionally column) statistics for the
-        cost-based optimizer.  Only meaningful for bucketed tables (they
-        live in the session catalog; path-read parquet relations take
-        sizes from files directly): accurate rowCount/sizeInBytes lets
-        Catalyst pick broadcast vs shuffle joins and reorder multi-way
-        joins instead of guessing from compressed file sizes.  Returns
-        False (no-op) for non-catalog tables."""
-        if table not in self.bucket_spec:
-            return False
-        name = self._catalog_name(table)
-        if not self.spark.catalog.tableExists(name):
-            return False
-        self.spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-        if columns:
-            cols = ", ".join(columns)
-            self.spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}")
-        return True
 
     def compact(self, table: str, target_file_mb: int = 512) -> int:
         """Rewrite a table into ~target_file_mb-sized files and return the
@@ -329,18 +218,7 @@ class ParquetDatabase:
         guessed — and the rewrite is one narrow coalesce stage (no
         shuffle) followed by a directory swap (swap_directory), so a
         reader sees the old or the new table, never a half-written mix;
-        a crash mid-swap is repaired by recover_swap().
-
-        Bucketed tables keep their layout: the rewrite goes through
-        _write_bucketed (bucket count fixes the file count, so
-        ``target_file_mb`` is ignored and num_buckets is returned) —
-        swapping plain files under a still-registered bucketed catalog
-        entry would make the bucketed scan reject the non-bucket-named
-        files and quietly invalidate shuffle-free join plans."""
-        if table in self.bucket_spec:
-            cols, n = self.bucket_spec[table]
-            self._write_bucketed(self.read(table), table, cols, n)
-            return int(n)
+        a crash mid-swap is repaired by recover_swap()."""
         path = self.path(table)
         size_b = sum(
             os.path.getsize(os.path.join(root, f))
@@ -366,18 +244,8 @@ def write_sorted(
     covers a narrow min/max range of those columns and a range/equality
     filter skips whole files via footer statistics — the Spark-native
     form of coarse range indexing (complementary to hive partitioning,
-    which needs low cardinality, and bucketing, which serves joins).
-    One range-exchange (sampled boundaries); ``num_files`` bounds the
-    output file count.
-
-    A range-sorted layout REPLACES a bucketed one: if ``table`` was in
-    the database's bucket_spec, the catalog's bucketed entry is dropped
-    and the spec entry removed, so later read()s return the plain
-    parquet relation instead of a bucketed scan over files that no
-    longer honor bucket naming."""
-    if table in db.bucket_spec:
-        db.spark.sql(f"DROP TABLE IF EXISTS {db._catalog_name(table)}")
-        db.bucket_spec.pop(table, None)
+    which needs low cardinality).  One range-exchange (sampled
+    boundaries); ``num_files`` bounds the output file count."""
     cols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
     out = (
         df.repartitionByRange(*([num_files] if num_files else []), *cols)
@@ -408,9 +276,6 @@ def write_zordered(
     patterns."""
     from pimdb_spark.functions.zorder import zorder_key_2d
 
-    if table in db.bucket_spec:
-        db.spark.sql(f"DROP TABLE IF EXISTS {db._catalog_name(table)}")
-        db.bucket_spec.pop(table, None)
     keyed = df.withColumn("_zkey", zorder_key_2d(dim_a, dim_b))
     out = (
         keyed.repartitionByRange(*([num_files] if num_files else []), "_zkey")
@@ -419,28 +284,3 @@ def write_zordered(
     )
     out.write.mode("overwrite").parquet(db.path(table))
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: str | list[str],
-    num_buckets: int,
-    sort_cols: str | list[str] | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-within-bucket)
-    parquet table in the session catalog.
-
-    Bucketing is the Spark replacement for the reference's join-key indexes
-    (SURVEY §4): two tables bucketed on the same key with the same bucket
-    count join WITHOUT any shuffle — each task zips bucket i with bucket i.
-    At 100 TB this turns the fact⋈fact join (e.g. orders⋈lineitem on
-    orderkey) from the dominant shuffle into a local merge; sortBy
-    additionally removes the sort from sort-merge joins."""
-    cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    writer = (
-        df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *cols)
-    )
-    if sort_cols:
-        s = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        writer = writer.sortBy(*s)
-    writer.saveAsTable(table)

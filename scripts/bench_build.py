@@ -11,8 +11,7 @@ Usage: python scripts/bench_build.py [small_titles] [scale_mult]
   default: 20000 titles, then 10x that (200000) — ~0.13M and ~1.3M
   principal rows respectively.
 
-Env: SPARK_GRAFT_CPUS (default 8), SPARK_GRAFT_BUCKETS (0 = unbucketed,
-else bucket count for imdb_bucket_spec).
+Env: SPARK_GRAFT_CPUS (default 8).
 """
 
 from __future__ import annotations
@@ -27,21 +26,20 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pimdb_spark.ingest import transfer  # noqa: E402
-from pimdb_spark.plans.build import NormalizedBuild, imdb_bucket_spec  # noqa: E402
+from pimdb_spark.plans.build import NormalizedBuild  # noqa: E402
 from pimdb_spark.plans.store import ParquetDatabase  # noqa: E402
 from pimdb_spark.session import get_spark  # noqa: E402
 from tests.fixtures_imdb import synth_imdb_tsv  # noqa: E402
 
 
-def bench_scale(spark, n_titles: int, n_names: int, buckets: int) -> dict:
+def bench_scale(spark, n_titles: int, n_names: int) -> dict:
     work = tempfile.mkdtemp(prefix=f"bench_build_{n_titles}_")
     try:
         t0 = time.perf_counter()
         src = synth_imdb_tsv(os.path.join(work, "tsv"), n_titles, n_names)
         gen_s = time.perf_counter() - t0
 
-        spec = imdb_bucket_spec(buckets) if buckets else None
-        db = ParquetDatabase(spark, os.path.join(work, "db"), bucket_spec=spec)
+        db = ParquetDatabase(spark, os.path.join(work, "db"))
 
         t0 = time.perf_counter()
         transfer(spark, src, db)
@@ -71,13 +69,12 @@ def bench_scale(spark, n_titles: int, n_names: int, buckets: int) -> dict:
 def main() -> None:
     small = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    buckets = int(os.environ.get("SPARK_GRAFT_BUCKETS", "0"))
     spark = get_spark("pimdb-spark-bench-build")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = []
     for n_titles in (small, small * mult):
-        r = bench_scale(spark, n_titles, n_titles // 2, buckets)
+        r = bench_scale(spark, n_titles, n_titles // 2)
         out.append(r)
         print(json.dumps(r))
 
@@ -87,7 +84,6 @@ def main() -> None:
             {
                 "metric": "flagship_build",
                 "scale_mult": mult,
-                "buckets": buckets,
                 "transfer_scaling": round(b["transfer_sec"] / a["transfer_sec"], 2),
                 "build_scaling": round(b["build_sec"] / a["build_sec"], 2),
             }

@@ -218,6 +218,9 @@ def test_mappable_title_alias_types_unit():
 
 
 def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
+    """compact() reads the very table it replaces: the rewrite lands in a
+    temp directory that is swapped in only when complete, so the old
+    files outlive the new write and no temp directory is left behind."""
     import glob
 
     from pimdb_spark.plans.store import ParquetDatabase
@@ -231,63 +234,14 @@ def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
     n = db.compact("t", target_file_mb=512)  # tiny table -> single file
     after = len(glob.glob(db.path("t") + "/*.parquet"))
     assert n == 1 and after == 1
+    assert not glob.glob(db.path("t") + ".*"), os.listdir(db.db_dir)
     got = db.read("t")
     assert got.count() == 10_000
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
 
 
-def test_compact_bucketed_preserves_layout_and_self_read(spark, tmp_path):
-    """compact() on a bucketed table must keep the bucketed layout (a
-    plain-file rewrite under a live bucketed catalog entry makes the scan
-    reject non-bucket-named files), and the rewrite reads from the very
-    table being replaced — the temp-write-then-swap protocol makes that
-    safe (old files outlive the new write)."""
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"), bucket_spec={"t": ("k", 4)})
-    df = spark.range(5_000).withColumnRenamed("id", "k")
-    db.write(df, "t")
-    assert spark.catalog.tableExists(db._catalog_name("t"))
-
-    n = db.compact("t")
-    assert n == 4  # bucket count fixes the file count
-    got = db.read("t")  # bucketed catalog relation must still scan cleanly
-    assert got.count() == 5_000
-    assert got.agg({"k": "sum"}).first()[0] == sum(range(5_000))
-    # layout survived: catalog metadata still declares 4 buckets ...
-    desc = spark.sql(f"DESCRIBE FORMATTED {db._catalog_name('t')}").collect()
-    desc_map = {r[0]: r[1] for r in desc}
-    assert desc_map.get("Num Buckets") == "4", desc_map
-    # ... and the files honor it: a bucketed self-join plans zero Exchanges
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = db.read("t")
-        b = db.read("t").withColumnRenamed("k", "k2")
-        j = a.join(b, a["k"] == b["k2"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Exchange" not in plan, plan[:2000]
 
 
-def test_write_sorted_drops_stale_bucket_entry(spark, tmp_path):
-    """write_sorted over a previously-bucketed table replaces the layout:
-    the bucketed catalog entry must be dropped so read() returns the plain
-    parquet relation instead of a bucketed scan over unbucketed files."""
-    from pimdb_spark.plans.store import ParquetDatabase, write_sorted
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"), bucket_spec={"t": ("k", 4)})
-    df = spark.range(2_000).withColumnRenamed("id", "k")
-    db.write(df, "t")
-    assert spark.catalog.tableExists(db._catalog_name("t"))
-
-    write_sorted(db, spark.range(2_000).withColumnRenamed("id", "k"), "t", "k",
-                 num_files=2)
-    assert not spark.catalog.tableExists(db._catalog_name("t"))
-    assert "t" not in db.bucket_spec
-    got = db.read("t")
-    assert got.count() == 2_000
 
 
 def test_ensure_worker_code_ships_once(spark):
@@ -537,68 +491,8 @@ def test_to_jdbc_plumbing(spark, tmp_path, monkeypatch):
     assert calls["partitions"] == 2
 
 
-def test_bucketed_build_plan_and_parity(spark, imdb_fixture_dir, tmp_path_factory):
-    """imdb_bucket_spec wired through ParquetDatabase: (a) the episode
-    double self-join drops to exactly ONE Exchange (the irreducible
-    parentTconst rekey of the intermediate — both bucketed tconst probes
-    are exchange-free), vs >= 3 unbucketed; (b) every normalized table is
-    row-identical to the unbucketed build (the session-scoped built_db)."""
-    import contextlib
-    import io
-
-    from pimdb_spark.ingest import transfer
-    from pimdb_spark.plans.build import NormalizedBuild, imdb_bucket_spec
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db_dir = str(tmp_path_factory.mktemp("imdb_db_bucketed"))
-    db = ParquetDatabase(spark, db_dir, bucket_spec=imdb_bucket_spec(4))
-    transfer(spark, imdb_fixture_dir, db)
-    build = NormalizedBuild(db)
-
-    def n_exchanges(df) -> int:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
-        return sum(
-            1
-            for line in tree.splitlines()
-            if line.split("(")[0].strip().lstrip("+-: ").strip() == "Exchange"
-        )
-
-    # build up to title so the bucketed episode inputs exist
-    db.write(build.build_title_type(), "title_type")
-    db.write(build.build_title(), "title")
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        got = n_exchanges(build.build_episode())
-        assert got == 1, f"bucketed episode plan has {got} Exchanges, want 1"
-
-        plain_db = ParquetDatabase(spark, db_dir)  # same files, no bucket info
-        plain = n_exchanges(NormalizedBuild(plain_db).build_episode())
-        assert plain >= 3, f"unbucketed episode plan has {plain} Exchanges"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bucketed_build_matches_unbucketed(built_db, spark, imdb_fixture_dir, tmp_path_factory):
-    """Full-DAG parity: a bucketed build produces row-identical normalized
-    tables to the unbucketed session build."""
-    from pimdb_spark.ingest import transfer
-    from pimdb_spark.plans.build import NormalizedBuild, imdb_bucket_spec
-    from pimdb_spark.plans.store import ParquetDatabase
-    from pimdb_spark.schemas import NORMALIZED_TABLE_NAMES
-
-    db_dir = str(tmp_path_factory.mktemp("imdb_db_bucketed_parity"))
-    db = ParquetDatabase(spark, db_dir, bucket_spec=imdb_bucket_spec(4))
-    transfer(spark, imdb_fixture_dir, db)
-    NormalizedBuild(db).run()
-    for table in NORMALIZED_TABLE_NAMES:
-        want = sorted(map(tuple, built_db.read(table).collect()))
-        got = sorted(map(tuple, db.read(table).collect()))
-        assert got == want, f"bucketed {table} differs from unbucketed"
 
 
 def test_write_sorted_clusters_ranges(spark, tmp_path):
@@ -633,19 +527,6 @@ def test_write_sorted_clusters_ranges(spark, tmp_path):
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
 
 
-def test_analyze_collects_stats_for_bucketed(spark, tmp_path):
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"), bucket_spec={"t": ("k", 4)})
-    db.write(spark.range(1000).selectExpr("id AS k", "id % 7 AS v"), "t")
-    assert db.analyze("t", columns=["k"])
-    desc = spark.sql(f"DESCRIBE EXTENDED {db._catalog_name('t')}").collect()
-    stats = [r.data_type for r in desc if r.col_name == "Statistics"]
-    assert stats and "1000 rows" in stats[0]
-    # non-bucketed tables are a documented no-op
-    db2 = ParquetDatabase(spark, str(tmp_path / "db2"))
-    db2.write(spark.range(10).selectExpr("id AS k"), "t")
-    assert db2.analyze("t") is False
 
 
 def test_title_alias_type_frame_ships_worker_code(built_db, monkeypatch):
@@ -780,20 +661,3 @@ def test_sql_views_follow_the_database(built_db, examples_db):
     assert examples_db.sql(q).first()[0] == n_examples
     assert built_db.sql(q).first()[0] == n_built
 
-
-def test_sql_plain_and_bucketed_instances_own_relations(spark, tmp_path):
-    """A bucketed instance's view is the catalog relation; a plain instance
-    over the same directory gets a plain parquet relation, and back."""
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    bucketed = ParquetDatabase(spark, str(tmp_path / "db"), bucket_spec={"t": ("k", 4)})
-    bucketed.write(spark.range(100).withColumnRenamed("id", "k"), "t")
-    plain = ParquetDatabase(spark, bucketed.db_dir)
-    name = bucketed._catalog_name("t")
-
-    def relation(db):
-        return db.sql("select * from t")._jdf.queryExecution().analyzed().toString()
-
-    assert name in relation(bucketed)
-    assert name not in relation(plain)
-    assert name in relation(bucketed)

@@ -90,19 +90,3 @@ def test_query_from_file(cli_db_dir, tmp_path, capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert out == ["n", "4"]
 
-
-def test_cli_bucketed_build_matches_plain(cli_db_dir, imdb_fixture_dir, tmp_path_factory, capsys):
-    """transfer/build --buckets N wires imdb_bucket_spec end to end; the
-    queryable result is identical to the plain layout."""
-    from pimdb_spark.cli import main
-
-    db_dir = str(tmp_path_factory.mktemp("cli_db_bkt"))
-    assert main(["transfer", "all", "--dataset-folder", imdb_fixture_dir,
-                 "--database", db_dir, "--buckets", "4"]) == 0
-    assert main(["build", "--database", db_dir, "--buckets", "4"]) == 0
-
-    sql = "SELECT count(1) FROM participation"
-    assert main(["query", sql, "--database", db_dir]) == 0
-    got = capsys.readouterr().out
-    assert main(["query", sql, "--database", cli_db_dir]) == 0
-    assert capsys.readouterr().out == got
