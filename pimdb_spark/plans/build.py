@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 from pyspark.util import inheritable_thread_target
 
-from pimdb_spark.functions.ids import (
-    release_id_caches,
-    with_key_table_id,
-    with_surrogate_id,
-)
+from pimdb_spark.functions.ids import with_key_table_id, with_surrogate_id
 from pimdb_spark.plans.store import ParquetDatabase
 from pimdb_spark.schemas import IMDB_TITLE_ALIAS_TYPES, NORMALIZED_TABLE_NAMES
 
@@ -394,11 +390,10 @@ class NormalizedBuild:
         read it (cuts lineage and makes every step restartable).
 
         Workers start through inheritable_thread_target, so the caller's
-        job group, job description and tags reach every job.  After its
-        write each step calls release_id_caches(), which frees only the
-        range-partitioned frames with_surrogate_id cached in that step's
-        thread — otherwise executor storage accumulates a cached copy of
-        every large table across the build.
+        job group, job description and tags reach every job.  Steps hold
+        no cache across their write: building a step's frame runs no job,
+        and the child a surrogate-id step caches for its count is freed by
+        Spark when that write's query stage completes.
 
         If a step raises, no further step starts; run() waits for the
         running ones and re-raises the first failure.
@@ -412,10 +407,7 @@ class NormalizedBuild:
 
         def step(table: str) -> float:
             t0 = time.perf_counter()
-            try:
-                db.write(getattr(self, f"build_{table}")(), table)
-            finally:
-                release_id_caches()
+            db.write(getattr(self, f"build_{table}")(), table)
             return time.perf_counter() - t0
 
         waiting = dict(self.STEPS)

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 
@@ -258,82 +259,140 @@ def test_ensure_worker_code_ships_once(spark):
     assert any("pimdb_spark_" in f for f in files)
 
 
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _assert_released(spark, before, timeout=30.0):
+    """Every RDD persisted since ``before`` is unpersisted.  AQE frees the
+    id node's cache from its query stage's completion callback, which can
+    run just after the action has returned, so wait for it."""
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not _persisted_rdd_ids(spark) <= before:
+        assert time.monotonic() < deadline, _persisted_rdd_ids(spark) - before
+        time.sleep(0.05)
+
+
 def test_surrogate_id_bigint_and_cache_released(spark):
-    """with_surrogate_id must (a) assign bigint ids — int32 silently
-    overflows on billion-row tables — and (b) leave no persisted frame
-    behind once release_id_caches() runs (the 16-table build would
+    """with_surrogate_id must (a) assign dense 1..n bigint ids — int32
+    silently overflows on billion-row tables — and (b) leave no persisted
+    frame behind once the result is materialized (the 15-step build would
     otherwise accumulate a cached copy of every large table)."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     from pimdb_spark.functions import ids
 
+    before = _persisted_rdd_ids(spark)
     df = spark.range(0, 5000).selectExpr("cast(id as string) AS v")
     out = ids.with_surrogate_id(df, ["v"], id_col="rid")
     assert isinstance(out.schema["rid"].dataType, LongType)
-    got = out.agg({"rid": "max"}).first()[0]
-    assert got == 5000
-    assert ids._live_persists  # cache held until the caller materializes
-    ids.release_id_caches()
-    assert not ids._live_persists
+    got = out.agg(F.min("rid"), F.max("rid"), F.countDistinct("rid")).first()
+    assert tuple(got) == (1, 5000, 5000)
+    _assert_released(spark, before)
 
 
-def test_build_leaves_no_persisted_frames(built_db):
-    """After NormalizedBuild.run() every with_surrogate_id cache must have
-    been released — nothing from the build may still be pinned in executor
-    storage."""
-    from pimdb_spark.functions import ids
-
-    assert not ids._live_persists
-
-
-def test_release_id_caches_is_per_thread(spark):
-    """release_id_caches() frees only the frames with_surrogate_id cached
-    in the calling thread: the concurrent build must not unpersist another
-    step's frame before that step's write has read it (a recompute may
-    sample other range boundaries, and the id offsets would no longer
-    match)."""
-    import threading
-
-    from pimdb_spark.functions import ids
-
-    cached = threading.Event()
-    checked = threading.Event()
-    errors = []
-
-    def other_step():
-        try:
-            ids.with_surrogate_id(spark.range(100).selectExpr("id AS v"), ["v"])
-        except Exception as exc:
-            errors.append(exc)
-        cached.set()
-        checked.wait(timeout=120)
-        ids.release_id_caches()
-
-    thread = threading.Thread(target=other_step, daemon=True)
-    thread.start()
-    assert cached.wait(timeout=120) and not errors
-    (other,) = ids._live_persists[thread.ident]
+@contextlib.contextmanager
+def _no_coalesce(spark):
+    """Keep every range partition, so the id node really counts and
+    offsets more than one partition."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
-        ids.with_surrogate_id(spark.range(50).selectExpr("id AS v"), ["v"])
-        ids.release_id_caches()
-        assert other.storageLevel.useMemory  # still persisted
-        assert list(ids._live_persists) == [thread.ident]
+        yield
     finally:
-        checked.set()
-        thread.join(timeout=120)
-    assert not thread.is_alive()
-    assert not other.storageLevel.useMemory
-    assert not ids._live_persists
+        spark.conf.set(key, prev)
+
+
+def test_surrogate_id_equals_row_number(spark):
+    """With a string key and with a composite (int, int) key, over at least
+    four range partitions, the id is exactly row_number() over the same
+    order."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pimdb_spark.functions import ids
+
+    base = spark.range(0, 4000).selectExpr(
+        "cast(id * 7919 % 4000 as string) AS s", "cast(id % 37 as int) AS a",
+        "cast(id div 37 as int) AS b", "id AS payload",
+    )
+    with _no_coalesce(spark):
+        for order in (["s"], ["a", "b"]):
+            out = ids.with_surrogate_id(base, order)
+            assert out.rdd.getNumPartitions() >= 4, order
+            want = base.select(
+                F.row_number().over(Window.orderBy(*order)).cast("bigint").alias("id"), "*"
+            )
+            assert out.columns == want.columns
+            assert out.exceptAll(want).count() == 0, order
+            assert want.exceptAll(out).count() == 0, order
+
+
+def test_surrogate_id_is_one_lazy_plan(spark, tmp_path):
+    """The id comes from Spark's AttachDistributedSequence node inside the
+    returned frame's own plan, and the child that node caches for its
+    partition count is released once the write has run."""
+    from pimdb_spark.functions import ids
+
+    df = spark.range(0, 3000).selectExpr("cast(id as string) AS v")
+    with _no_coalesce(spark):
+        out = ids.with_surrogate_id(df, ["v"])
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "AttachDistributedSequence" in plan
+        before = _persisted_rdd_ids(spark)
+        out.write.parquet(str(tmp_path / "ids"))
+        _assert_released(spark, before)
+    assert spark.read.parquet(str(tmp_path / "ids")).count() == 3000
+
+
+def test_build_leaves_no_persisted_frames(spark, imdb_fixture_dir, tmp_path):
+    """NormalizedBuild.run() leaves nothing of the build pinned in executor
+    storage, and its surrogate ids are dense bigints 1..n."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from pimdb_spark.ingest import transfer
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    transfer(spark, imdb_fixture_dir, db)
+    before = _persisted_rdd_ids(spark)
+    NormalizedBuild(db).run()
+    _assert_released(spark, before)
+    for table in ("name", "title", "title_alias", "participation"):
+        t = db.read(table)
+        assert isinstance(t.schema["id"].dataType, LongType), table
+        n = t.count()
+        got = t.agg(F.min("id"), F.max("id"), F.countDistinct("id")).first()
+        assert tuple(got) == (1, n, n), table
+
+
+def test_building_entity_frames_starts_no_job(built_db):
+    """Building a surrogate-id step's frame is lazy: build_name() and
+    build_title() start no Spark job; their ids are computed inside the
+    caller's write."""
+    from pimdb_spark.plans.build import NormalizedBuild
+
+    build = NormalizedBuild(built_db)
+    for step in (build.build_name, build.build_title):
+        _, jobs = _jobs(built_db.spark, step)
+        assert not jobs, step.__name__
 
 
 def test_surrogate_ids_under_many_threads(spark):
     """More threads than cores, switching often: every thread gets dense
-    ids 1..n for its own frame, its release frees exactly the frame it
-    cached, and no cached frame is left behind."""
+    bigint ids 1..n for its own frame, and no cached frame is left
+    behind."""
     import sys
     import threading
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
 
     from pimdb_spark.functions import ids
 
@@ -342,14 +401,13 @@ def test_surrogate_ids_under_many_threads(spark):
     def step(n):
         try:
             out = ids.with_surrogate_id(spark.range(n).selectExpr("id AS v"), ["v"])
-            (mine,) = ids._live_persists[threading.get_ident()]
+            assert isinstance(out.schema["id"].dataType, LongType)
             got = out.agg(F.min("id"), F.max("id"), F.countDistinct("id")).first()
             assert tuple(got) == (1, n, n), got
-            ids.release_id_caches()
-            assert not mine.storageLevel.useMemory
         except Exception as exc:
             errors.append(exc)
 
+    before = _persisted_rdd_ids(spark)
     prev = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
@@ -362,13 +420,12 @@ def test_surrogate_ids_under_many_threads(spark):
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    assert not ids._live_persists
+    _assert_released(spark, before)
 
 
 def test_steps_declare_every_table_they_read(built_db, monkeypatch):
     """Each builder reads exactly the tables its STEPS entry names, so run()
     never starts a step before one of its inputs is written."""
-    from pimdb_spark.functions.ids import release_id_caches
     from pimdb_spark.plans.build import NormalizedBuild
     from pimdb_spark.schemas import NORMALIZED_TABLE_NAMES
 
@@ -377,13 +434,10 @@ def test_steps_declare_every_table_they_read(built_db, monkeypatch):
     seen = []
     monkeypatch.setattr(built_db, "read", lambda table: seen.append(table) or read(table))
     build = NormalizedBuild(built_db)
-    try:
-        for table, inputs in NormalizedBuild.STEPS.items():
-            seen.clear()
-            getattr(build, f"build_{table}")()
-            assert sorted(set(seen)) == sorted(inputs), table
-    finally:
-        release_id_caches()
+    for table, inputs in NormalizedBuild.STEPS.items():
+        seen.clear()
+        getattr(build, f"build_{table}")()
+        assert sorted(set(seen)) == sorted(inputs), table
 
 
 def test_run_reraises_a_failed_step_and_starts_no_dependent(spark, tmp_path, monkeypatch):

@@ -133,7 +133,9 @@ def test_streaming_linear_attribution_randomized_splits(spark, tmp_path):
     three time-ordered micro-batches (maxFilesPerTrigger=1) produces
     exactly the batch operator's credit rows — the carried touch list
     survives arbitrary batch boundaries, not just the crafted ones."""
+    import os
     import random
+    import time
 
     import pandas as pd
     import pyarrow as pa
@@ -165,7 +167,12 @@ def test_streaming_linear_attribution_randomized_splits(spark, tmp_path):
         pdf = pd.DataFrame(
             chunk, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
         )
-        pq.write_table(pa.Table.from_pandas(pdf), src / f"b{i}.parquet")
+        path = src / f"b{i}.parquet"
+        pq.write_table(pa.Table.from_pandas(pdf), path)
+        # the file source picks files oldest first; files written in the
+        # same instant would arrive in listing order, out of time order
+        stamp = time.time() - 60 + 10 * i
+        os.utime(path, (stamp, stamp))
 
     from pimdb_spark.streaming.events import EVENTS_SCHEMA
     from pimdb_spark.streaming.linear_attribution import linear_attribute_stream
