@@ -93,7 +93,7 @@ def q_token_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4-shaped declaration-order token decomposition: match a fixed token
     list against a concatenated string, emitting matches numbered in
     DECLARATION order (the alias-types shape, database.py:1003-1029; the
-    exact greedy-removal variant is plans/build.mappable_title_alias_types).
+    exact greedy-removal variant is plans/build.greedy_title_alias_types).
     Scale: pure projection + explode, no shuffle, no UDF."""
     p = load(spark, sf_dir, "part")
     toks = F.filter(

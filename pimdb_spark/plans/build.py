@@ -23,7 +23,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 from pyspark.util import inheritable_thread_target
@@ -33,22 +33,29 @@ from pimdb_spark.plans.store import ParquetDatabase
 from pimdb_spark.schemas import IMDB_TITLE_ALIAS_TYPES, NORMALIZED_TABLE_NAMES
 
 
-def mappable_title_alias_types(raw: str | None) -> list[str]:
-    """E4 greedy token decomposition (spec: database.py:1003-1029): check
-    the 8 known alias types in DECLARATION order; a type contained in the
-    remaining string is appended to the result and all its occurrences
-    removed from the remainder; unknown leftovers are ignored."""
-    result: list[str] = []
-    if raw:
-        remaining = raw
-        for known in IMDB_TITLE_ALIAS_TYPES:
-            if known in remaining:
-                result.append(known)
-                remaining = remaining.replace(known, "")
-    return result
+def _known_alias_types() -> Column:
+    """The 8 known alias types, in declaration order, as an array literal."""
+    return F.array(*[F.lit(t) for t in IMDB_TITLE_ALIAS_TYPES])
 
 
-_mappable_udf = F.udf(mappable_title_alias_types, ArrayType(StringType()))
+def greedy_title_alias_types(types: Column) -> Column:
+    """E4 greedy token decomposition (spec: database.py:1003-1029) as one
+    native expression: fold over the 8 known alias types in DECLARATION
+    order; a type contained in the remaining string is appended to the
+    result and all its occurrences removed from the remainder; unknown
+    leftovers are ignored.  NULL or empty input gives an empty array."""
+    start = F.struct(F.array().cast("array<string>").alias("out"), types.alias("rest"))
+
+    def step(acc: Column, k: Column) -> Column:
+        return F.when(
+            F.instr(acc["rest"], k) > 0,
+            F.struct(
+                F.array_append(acc["out"], k).alias("out"),
+                F.replace(acc["rest"], k, F.lit("")).alias("rest"),
+            ),
+        ).otherwise(acc)
+
+    return F.aggregate(_known_alias_types(), start, step, lambda acc: acc["out"])
 
 
 class NormalizedBuild:
@@ -62,9 +69,10 @@ class NormalizedBuild:
     # -- key tables (steps 1-4) --------------------------------------------
 
     def build_title_alias_type(self) -> DataFrame:
-        """Static 8-value key table (database.py:637-639)."""
-        spark = self.db.spark
-        df = spark.createDataFrame([(t,) for t in IMDB_TITLE_ALIAS_TYPES], "name string")
+        """Static 8-value key table (database.py:637-639), exploded from
+        literals so the plan stays in the JVM (a Python list would plan as
+        a Scan ExistingRDD fed by a Python worker)."""
+        df = self.db.spark.range(1).select(F.explode(_known_alias_types()).alias("name"))
         return with_key_table_id(df)
 
     def build_genre(self) -> DataFrame:
@@ -306,18 +314,12 @@ class NormalizedBuild:
 
     def build_title_alias_to_title_alias_type(self) -> DataFrame:
         """J5+E4 (database.py:1065-1112): title_alias ⋈ title ⋈ TitleAkas on
-        the composite (titleId, ordering), types NOT NULL, then greedy
-        decomposition of each DISTINCT types string via the one genuine UDF
-        (the reference's lru_cache becomes dedup-before-UDF + join back —
-        the same temp-table trick its TODO at database.py:1066 wishes for),
-        posexploded to (title_alias_id, ordering, title_alias_type_id).
-
-        The UDF runs in Python workers, which import this package:
-        ensure_worker_code ships it, so a session started outside the
-        repository does not fail there with ModuleNotFoundError."""
-        from pimdb_spark.catalog import ensure_worker_code
-
-        ensure_worker_code(self.db.spark)
+        the composite (titleId, ordering), types NOT NULL, then the greedy
+        decomposition of each row's types string, posexploded to
+        (title_alias_id, ordering, title_alias_type_id).  The decomposition
+        is greedy_title_alias_types, a native fold over 8 types: cheap
+        enough per row that the reference's lru_cache needs no Spark
+        counterpart (no distinct + join back), and no Python worker runs."""
         ta = self.db.read("title_alias")
         t = self.db.read("title").select("id", "tconst")
         akas = self.db.read("TitleAkas")
@@ -330,25 +332,18 @@ class NormalizedBuild:
             .join(t, akas.titleId == t.tconst)
             .select(t.id.alias("akas_title_id"), akas.ordering.alias("akas_ordering"), akas.types)
         )
-        source = ta.join(
+        decomposed = ta.join(
             typed_akas,
             (ta.title_id == F.col("akas_title_id"))
             & (ta.ordering == F.col("akas_ordering")),
-        ).select(ta.id.alias("title_alias_id"), "types")
-        distinct_types = source.select("types").distinct().withColumn(
-            "mapped", _mappable_udf("types")
+        ).select(
+            ta.id.alias("title_alias_id"),
+            F.posexplode(greedy_title_alias_types(F.col("types"))).alias("pos", "type_name"),
         )
-        decomposed = distinct_types.select(
-            "types", F.posexplode("mapped").alias("pos", "type_name")
-        )
-        return (
-            source.join(F.broadcast(decomposed), "types")
-            .join(F.broadcast(tat), "type_name")
-            .select(
-                "title_alias_id",
-                (F.col("pos") + 1).alias("ordering"),
-                "title_alias_type_id",
-            )
+        return decomposed.join(F.broadcast(tat), "type_name").select(
+            "title_alias_id",
+            (F.col("pos") + 1).alias("ordering"),
+            "title_alias_type_id",
         )
 
     # -- orchestration ------------------------------------------------------

@@ -12,6 +12,11 @@ also be the right default on a large cluster:
 - Session timezone UTC so timestamp semantics are reproducible and match the
   DuckDB oracle.
 - Arrow enabled for any pandas interchange (Pandas UDFs, toPandas).
+- Codegen cache of 1000 classes: one ``transfer`` + build generates ~205
+  Janino classes, and Spark's default cache of 100 evicts them in LRU
+  order before the next ETL asks for them again, so every warm ETL
+  recompiled all of them (and HotSpot re-JITted them).  With 1000 a
+  second ETL in the same session compiles none.
 """
 
 from __future__ import annotations
@@ -35,6 +40,8 @@ def get_spark(app_name: str = "pimdb_spark", extra_conf: dict | None = None) -> 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # static conf: ~205 generated classes per ETL thrash the default 100
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -73,6 +73,36 @@ EXAMPLE_EXTRA_ROWS: dict[str, str] = {
 }
 
 
+def greedy_title_alias_types_oracle(raw: str | None) -> list[str]:
+    """The E4 rule in plain Python (spec: database.py:1003-1029), the
+    oracle for plans.build.greedy_title_alias_types: check the 8 known
+    alias types in DECLARATION order; a type contained in the remaining
+    string is appended to the result and all its occurrences removed from
+    the remainder; unknown leftovers are ignored."""
+    from pimdb_spark.schemas import IMDB_TITLE_ALIAS_TYPES
+
+    result: list[str] = []
+    if raw:
+        remaining = raw
+        for known in IMDB_TITLE_ALIAS_TYPES:
+            if known in remaining:
+                result.append(known)
+                remaining = remaining.replace(known, "")
+    return result
+
+
+def greedy_title_alias_types_spark(spark, raws: list[str | None]) -> list[list[str]]:
+    """plans.build.greedy_title_alias_types applied to every string of
+    ``raws`` in one Spark job, in input order."""
+    from pyspark.sql import functions as F
+
+    from pimdb_spark.plans.build import greedy_title_alias_types
+
+    df = spark.createDataFrame(list(enumerate(raws)), "i int, raw string")
+    got = df.select("i", greedy_title_alias_types(F.col("raw")).alias("out")).collect()
+    return [r.out for r in sorted(got, key=lambda r: r.i)]
+
+
 def write_fixtures(
     target_dir: str, gzipped: bool = True, extra_rows: dict[str, str] | None = None
 ) -> str:

@@ -205,17 +205,33 @@ def test_alias_type_greedy_decomposition(built_db):
     )
 
 
-def test_mappable_title_alias_types_unit():
-    from pimdb_spark.plans.build import mappable_title_alias_types as m
+def test_mappable_title_alias_types_unit(spark):
+    """The native E4 expression against the pure-Python oracle, all cases
+    in one job."""
+    from tests.fixtures_imdb import (
+        greedy_title_alias_types_oracle as oracle,
+        greedy_title_alias_types_spark,
+    )
 
-    assert m(None) == []
-    assert m("") == []
-    assert m("imdbDisplay") == ["imdbDisplay"]
-    assert m("festivalworking") == ["festival", "working"]
-    assert m("originalalternative") == ["alternative", "original"]
-    assert m("bogustype") == []
-    # removal is global: repeated token contributes once
-    assert m("dvddvd") == ["dvd"]
+    cases = {
+        None: [],
+        "": [],
+        "imdbDisplay": ["imdbDisplay"],
+        "festivalworking": ["festival", "working"],
+        "originalalternative": ["alternative", "original"],
+        "bogustype": [],
+        # removal is global: a repeated token contributes once
+        "dvddvd": ["dvd"],
+        # 'tv' is checked before 'video' and its removal breaks 'video'
+        "tvideo": ["tv"],
+        "videotv": ["tv", "video"],
+        # non-ASCII around and between tokens
+        "ñdvdé東京festival": ["dvd", "festival"],
+        "tëv": [],
+    }
+    got = greedy_title_alias_types_spark(spark, list(cases))
+    assert got == list(cases.values())
+    assert [oracle(raw) for raw in cases] == list(cases.values())
 
 
 def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
@@ -239,10 +255,6 @@ def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
     got = db.read("t")
     assert got.count() == 10_000
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
-
-
-
-
 
 
 def test_ensure_worker_code_ships_once(spark):
@@ -507,6 +519,50 @@ def test_etl_jobs_run_in_the_callers_job_group(spark, imdb_fixture_dir, tmp_path
     assert len(etl) > 15
 
 
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM: the codegen cache's misses."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_etl_compiles_no_generated_code(spark, imdb_fixture_dir, tmp_path):
+    """The codegen cache holds every class one ETL generates, so a second
+    transfer + build in the same session compiles nothing."""
+    from pimdb_spark.ingest import transfer
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    def etl(name):
+        db = ParquetDatabase(spark, str(tmp_path / name))
+        transfer(spark, imdb_fixture_dir, db)
+        NormalizedBuild(db).run()
+
+    etl("first")
+    before = _compiles(spark)
+    etl("second")
+    assert _compiles(spark) == before
+
+
+def test_etl_plans_run_no_python(built_db, imdb_fixture_dir):
+    """Every frame transfer writes and every build step's frame runs inside
+    the JVM: no Python UDF, and no Python list scanned as an RDD."""
+    from pimdb_spark.ingest import dataset_file
+    from pimdb_spark.plans.build import NormalizedBuild
+    from pimdb_spark.schemas import IMDB_DATASET_NAMES
+    from pimdb_spark.sources.tsv import read_dataset
+
+    spark = built_db.spark
+    build = NormalizedBuild(built_db)
+    frames = {
+        d: read_dataset(spark, dataset_file(imdb_fixture_dir, d), d) for d in IMDB_DATASET_NAMES
+    }
+    frames.update({t: getattr(build, f"build_{t}")() for t in NormalizedBuild.STEPS})
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("BatchEvalPython", "ArrowEvalPython", "ExistingRDD", "PythonUDF"):
+            assert node not in plan, (name, node)
+
+
 def test_to_jdbc_plumbing(spark, tmp_path, monkeypatch):
     """No JDBC driver ships in this environment, so the writer itself is
     monkeypatched; what's under test is the plumbing contract: the stored
@@ -579,21 +635,6 @@ def test_write_sorted_clusters_ranges(spark, tmp_path):
     got = db.read("t")
     assert got.count() == 10_000
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
-
-
-
-
-def test_title_alias_type_frame_ships_worker_code(built_db, monkeypatch):
-    """The alias-type step is the build's one Python UDF: building its
-    frame ships the package to the Python workers, so a build started
-    outside the repository does not die there with ModuleNotFoundError."""
-    from pimdb_spark import catalog
-    from pimdb_spark.plans.build import NormalizedBuild
-
-    calls = []
-    monkeypatch.setattr(catalog, "ensure_worker_code", calls.append)
-    NormalizedBuild(built_db).build_title_alias_to_title_alias_type()
-    assert calls == [built_db.spark]
 
 
 def _jobs(spark, fn):

@@ -7,7 +7,8 @@ to get subtly wrong, each against an independent brute-force Python model:
 - range join: neighbor-bucket explode must produce EXACTLY the |dt| <= R
   pairs — no duplicates from the triple-bucket explode, no misses at
   bucket boundaries, negative times included.
-- E4 greedy token decomposition invariants on random concatenations.
+- E4 greedy token decomposition: the native Spark expression equals the
+  pure-Python rule, and keeps its invariants, on random concatenations.
 """
 
 from __future__ import annotations
@@ -15,30 +16,35 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings, strategies as st
 
-# -- pure-python E4 ---------------------------------------------------------
+# -- E4: the native expression vs the pure-Python rule ---------------------
 
 
-@given(st.lists(st.sampled_from(
+@given(st.lists(st.lists(st.sampled_from(
     ["alternative", "dvd", "festival", "tv", "video", "working", "original",
-     "imdbDisplay", "xx", "7"]), max_size=6),
+     "imdbDisplay", "xx", "7", "é"]), max_size=6), min_size=1, max_size=25),
 )
-@settings(max_examples=200, deadline=None)  # first example pays the import
-def test_e4_decomposition_invariants(tokens):
-    from pimdb_spark.plans.build import mappable_title_alias_types
+@settings(max_examples=20, deadline=None)  # one Spark job per batch
+def test_e4_decomposition_invariants(spark, batch):
     from pimdb_spark.schemas import IMDB_TITLE_ALIAS_TYPES
+    from tests.fixtures_imdb import (
+        greedy_title_alias_types_oracle,
+        greedy_title_alias_types_spark,
+    )
 
-    raw = "".join(tokens)
-    out = mappable_title_alias_types(raw)
-    # unique, in declaration order, and each output type occurred in raw
-    assert out == [t for t in IMDB_TITLE_ALIAS_TYPES if t in out]
-    assert len(out) == len(set(out))
-    for t in out:
-        assert t in raw
-    # every declared type present verbatim in raw is found (greedy removal
-    # only deletes matched types, which cannot create new occurrences of an
-    # EARLIER-checked type, and 'tv'/'video' overlaps resolve in order)
-    first_pass = [t for t in IMDB_TITLE_ALIAS_TYPES if t in raw]
-    assert out[:1] == first_pass[:1]
+    raws = ["".join(tokens) for tokens in batch]
+    for raw, out in zip(raws, greedy_title_alias_types_spark(spark, raws)):
+        assert out == greedy_title_alias_types_oracle(raw), raw
+        # unique, in declaration order, and each output type occurred in raw
+        assert out == [t for t in IMDB_TITLE_ALIAS_TYPES if t in out]
+        assert len(out) == len(set(out))
+        for t in out:
+            assert t in raw
+        # every declared type present verbatim in raw is found (greedy
+        # removal only deletes matched types, which cannot create new
+        # occurrences of an EARLIER-checked type, and 'tv'/'video'
+        # overlaps resolve in order)
+        first_pass = [t for t in IMDB_TITLE_ALIAS_TYPES if t in raw]
+        assert out[:1] == first_pass[:1]
 
 
 # -- spark operators vs brute force ----------------------------------------
