@@ -387,16 +387,15 @@ _ZORDER_ORACLE = f"""
 @register("q_zorder_key", oracle=_ZORDER_ORACLE)
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (customer, order-day)
-    (functions/zorder.zorder_key_2d): the multi-dimensional layout key
-    behind plans/store.write_zordered — files sorted by this key have
-    small bounding boxes in BOTH dimensions, so parquet min/max stats
-    prune range filters on either.  Pure JVM bit arithmetic (parallel-
-    prefix spreads, shifts, ors); the oracle runs the textually identical
-    bit expressions, so a hash match proves exact key parity.
+    (functions/zorder.zorder_key_2d): the multi-dimensional layout key —
+    files sorted by it have small bounding boxes in BOTH dimensions, so
+    parquet min/max stats prune range filters on either.  Pure JVM bit
+    arithmetic (parallel-prefix spreads, shifts, ors); the oracle runs the
+    textually identical bit expressions, so a hash match proves exact key
+    parity.
 
-    Scale: zero-shuffle projection; the clustered write built on it costs
-    one range exchange (tests/test_build.py asserts the bounding-box
-    property)."""
+    Scale: zero-shuffle projection (tests/test_linkage_zorder.py checks
+    the key against a Python reference)."""
     from pimdb_spark.functions.zorder import zorder_key_2d
 
     orders = load(spark, sf_dir, "orders")

@@ -4,17 +4,14 @@ Multi-dimensional clustering for file skipping: sorting by a Z-order key
 gives every parquet file a small bounding box in ALL interleaved
 dimensions, so min/max footer statistics prune range filters on any of
 them — where a plain sort only prunes its leading column.  This is the
-Spark-expression form of the layout Delta/Iceberg expose as OPTIMIZE
-ZORDER BY; here it composes with plans/store.write_sorted (range-exchange
-on the z key + sortWithinPartitions).
+Spark-expression form of the key behind Delta/Iceberg's OPTIMIZE ZORDER
+BY; a clustered write range-partitions on it and sorts within partitions.
 
 All bit arithmetic (shifts, masks, or) happens JVM-side on longs — no
 UDF — and the identical expressions run in ANSI SQL, so a DuckDB oracle
 reproduces keys bit-for-bit (catalog q_zorder_key).
 
-Scale: computing the key is a zero-shuffle projection; the clustered
-write is one range exchange — the same cost as a single-column sorted
-write, but the resulting layout prunes on every interleaved dimension.
+Scale: computing the key is a zero-shuffle projection.
 """
 
 from __future__ import annotations

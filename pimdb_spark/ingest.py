@@ -51,56 +51,3 @@ def transfer(
     for future in futures:
         future.result()
 
-
-def incremental_transfer(
-    spark: SparkSession,
-    source_dir: str,
-    db: ParquetDatabase,
-    datasets: list[str] | None = None,
-) -> dict[str, dict[str, int]]:
-    """Refresh dataset tables from a NEW snapshot by digest-diffing
-    against the stored table instead of truncate-and-reload.
-
-    The reference refreshes by re-downloading and re-transferring whole
-    snapshots (pimdb/common.py:155-180 download-if-newer +
-    database.py:524-566 truncate-and-reload); at 100 TB the winning move
-    is to diff first: the comparison shuffles only (key, md5-digest)
-    pairs (operators/delta.snapshot_diff), an UNCHANGED dataset is
-    detected with zero rewrite (its files are not touched — the common
-    case for daily dumps where most datasets are stable), and a changed
-    one is rewritten from the already-parsed snapshot frame.
-
-    Returns per-dataset counts: {"added": n, "removed": n, "changed": n}
-    (all zero -> table untouched).  Cold start (table absent) behaves
-    like transfer and reports everything as added.
-    """
-    from pyspark.sql import functions as F
-
-    from pimdb_spark.operators.delta import snapshot_diff
-    from pimdb_spark.schemas import DATASET_KEY_COLUMNS
-
-    stats: dict[str, dict[str, int]] = {}
-    for dataset in datasets or IMDB_DATASET_NAMES:
-        table = camelized_dot_name(dataset)
-        new = read_dataset(spark, dataset_file(source_dir, dataset), dataset)
-        if not db.exists(table):
-            db.write(new, table)
-            stats[table] = {"added": db.read(table).count(), "removed": 0, "changed": 0}
-            continue
-        keys = list(DATASET_KEY_COLUMNS[dataset])
-        compare = [c for c in new.columns if c not in keys]
-        counts = {
-            r["status"]: r["n"]
-            for r in snapshot_diff(db.read(table), new, keys, compare)
-            .groupBy("status")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        stats[table] = {
-            "added": counts.get("added", 0),
-            "removed": counts.get("removed", 0),
-            "changed": counts.get("changed", 0),
-        }
-        if any(stats[table].values()):
-            db.write(new, table)  # rewrite only datasets that moved
-    return stats

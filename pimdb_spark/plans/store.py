@@ -9,17 +9,21 @@ as a temp view so ``spark.sql`` serves the pass-through query surface.
 A view is registered once per table version per session: ``register_all``
 re-reads a table only when its path or its files on disk (name, size,
 mtime of each) differ from what the session last registered under that
-name, so repeated queries skip the
-per-table schema jobs.  View names that equal table names are owned by
+name, so repeated queries skip re-reading and re-analysing unchanged
+tables.  View names that equal table names are owned by
 ParquetDatabase: ``register_all`` replaces them, and drops each view it
 registered whose table this database does not hold (dropped, deleted on
 disk, or another database's), so a query naming it raises Spark's
 TABLE_OR_VIEW_NOT_FOUND instead of reading stale or foreign files.
 
-Likewise ``read`` starts no schema-inference job for a table version the
-session already knows: ``write`` remembers the schema of what it wrote and
-``read`` the schema it inferred, both under the table's file signature,
-and a later read of the same files passes that schema to Spark.
+``read`` starts no schema-inference job for a table Spark wrote: Spark
+stores each file's schema as JSON under the footer key
+``org.apache.spark.sql.parquet.row.metadata``, and ``read`` parses that
+key from the table's first data file on the driver, makes it nullable
+(as every parquet relation reads) and passes it to Spark.  Spark's own
+inference reads the same key, so the two schemas are equal.  A table
+without such a file or key (written by another engine, or a hive-layout
+directory) is read with Spark's inference.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -39,10 +44,7 @@ _SWAP_OLD_SUFFIX = ".swap.old"
 # different directories.
 _REGISTERED: dict[str, dict[str, tuple[str, tuple]]] = {}
 
-# SparkSession.sessionUUID -> {table path: (file signature, schema)}: the
-# schema Spark reads from each table version the session wrote or read.
-# Without it every spark.read.parquet(path) starts one footer-reading job.
-_SCHEMAS: dict[str, dict[str, tuple[tuple, StructType]]] = {}
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
@@ -55,6 +57,26 @@ def _file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
             st = os.stat(full)
             sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
     return tuple(sorted(sig))
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The nullable schema Spark wrote into the footer of the first data
+    file of table directory ``path``, or None if there is none."""
+    try:
+        names = sorted(
+            f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    except OSError:  # missing, or a single file
+        return None
+    if not names:
+        return None
+    meta = pq.read_metadata(os.path.join(path, names[0])).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    dtype = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+        meta[_SPARK_SCHEMA_KEY].decode()
+    )
+    return StructType.fromJson(json.loads(dtype.asNullable().json()))
 
 
 def swap_directory(path: str, tmp: str) -> None:
@@ -105,65 +127,17 @@ class ParquetDatabase:
     def path(self, table: str) -> str:
         return os.path.join(self.db_dir, f"{table}.parquet")
 
-    def write(
-        self, df: DataFrame, table: str, partition_by: str | list[str] | None = None
-    ) -> None:
-        """Overwrite-write a table; ``partition_by`` hive-partitions the
-        dataset so equality/range filters on those columns prune whole
-        directories at scan time (PartitionFilters — the Spark form of
-        coarse indexing; use low-cardinality columns only, high-cardinality
-        partitioning makes small files)."""
-        w = df.write.mode("overwrite")
-        if partition_by:
-            cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-            w = w.partitionBy(*cols)
-        w.parquet(self.path(table))
-        if not partition_by:  # a read moves partition columns to the end
-            # parquet relations read every column as nullable
-            schema = StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
-            self._schemas()[self.path(table)] = (_file_signature(self.path(table)), schema)
-
-    def to_jdbc(
-        self,
-        table: str,
-        url: str,
-        jdbc_table: str | None = None,
-        mode: str = "overwrite",
-        num_partitions: int | None = None,
-        **properties: str,
-    ) -> None:
-        """Escape hatch to a real RDBMS: push a stored table out over JDBC
-        — the literal form of the reference's batched-INSERT / COPY bulk
-        load (pimdb/bulk.py:22-113), which this engine otherwise renders
-        moot by writing parquet.
-
-        Each partition opens one connection and streams batched INSERTs,
-        so ``num_partitions`` bounds the connection count (coalesce, no
-        shuffle) — at scale, size it to what the target database accepts,
-        not to the cluster.  Requires the target's JDBC driver jar on the
-        Spark classpath; extra ``properties`` (user, password, driver,
-        batchsize, ...) pass through to the writer."""
-        df = self.read(table)
-        if num_partitions is not None:
-            df = df.coalesce(num_partitions)
-        df.write.mode(mode).jdbc(url, jdbc_table or table, properties=dict(properties))
-
-    def _schemas(self) -> dict[str, tuple[tuple, StructType]]:
-        return _SCHEMAS.setdefault(self.spark._jsparkSession.sessionUUID(), {})
+    def write(self, df: DataFrame, table: str) -> None:
+        """Overwrite-write a table."""
+        df.write.mode("overwrite").parquet(self.path(table))
 
     def read(self, table: str) -> DataFrame:
-        """The table as a DataFrame.  A parquet table whose files this
-        session wrote or read before is read with the schema remembered
-        for them; otherwise Spark infers it and it is remembered."""
+        """The table as a DataFrame, with the schema from its footer (see
+        the module docstring)."""
         path = self.path(table)
-        signature = _file_signature(path)
-        schemas = self._schemas()
-        known = schemas.get(path)
-        if known is not None and known[0] == signature:
-            return self.spark.read.schema(known[1]).parquet(path)
-        df = self.spark.read.parquet(path)
-        schemas[path] = (signature, df.schema)
-        return df
+        schema = _footer_schema(self.spark, path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
@@ -206,81 +180,3 @@ class ParquetDatabase:
     def sql(self, query: str) -> DataFrame:
         self.register_all()
         return self.spark.sql(query)
-
-    def compact(self, table: str, target_file_mb: int = 512) -> int:
-        """Rewrite a table into ~target_file_mb-sized files and return the
-        new file count.
-
-        Incremental writers (streaming refresh, per-batch appends) leave
-        many small files; at 100 TB small files dominate scan cost (task
-        scheduling + footer reads, lost column-chunk locality).  The file
-        count comes from the table's CURRENT on-disk size — measured, not
-        guessed — and the rewrite is one narrow coalesce stage (no
-        shuffle) followed by a directory swap (swap_directory), so a
-        reader sees the old or the new table, never a half-written mix;
-        a crash mid-swap is repaired by recover_swap()."""
-        path = self.path(table)
-        size_b = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-size_b // (target_file_mb * 1024 * 1024)))
-        tmp = path + ".compact.tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        self.spark.read.parquet(path).coalesce(int(n_files)).write.parquet(tmp)
-        swap_directory(path, tmp)
-        return int(n_files)
-
-
-def write_sorted(
-    db: "ParquetDatabase", df: DataFrame, table: str, sort_cols: str | list[str],
-    num_files: int | None = None,
-) -> None:
-    """Range-partition + sort-within-partitions write: rows are globally
-    clustered on ``sort_cols``, so every parquet file (and row group)
-    covers a narrow min/max range of those columns and a range/equality
-    filter skips whole files via footer statistics — the Spark-native
-    form of coarse range indexing (complementary to hive partitioning,
-    which needs low cardinality).  One range-exchange (sampled
-    boundaries); ``num_files`` bounds the output file count."""
-    cols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-    out = (
-        df.repartitionByRange(*([num_files] if num_files else []), *cols)
-        .sortWithinPartitions(*cols)
-    )
-    out.write.mode("overwrite").parquet(db.path(table))
-
-
-def write_zordered(
-    db: "ParquetDatabase",
-    df: DataFrame,
-    table: str,
-    dim_a,
-    dim_b,
-    num_files: int | None = None,
-) -> None:
-    """Z-order clustered write: interleave two dimensions into a Morton
-    key (functions/zorder.zorder_key_2d — pure JVM bit expressions) and
-    range-cluster on it via write_sorted.  Every output file then covers
-    a small bounding box in BOTH dimensions, so min/max footer stats
-    prune range filters on either — the multi-dimensional generalization
-    of the single-column sorted layout.  ``dim_a``/``dim_b`` are column
-    expressions already normalized to non-negative 16-bit ranges
-    (``F.col(k) % 65536``, or a precomputed rank for continuous values).
-
-    Scale: one projection + one range exchange — identical cost to
-    write_sorted, strictly better pruning for two-dimensional access
-    patterns."""
-    from pimdb_spark.functions.zorder import zorder_key_2d
-
-    keyed = df.withColumn("_zkey", zorder_key_2d(dim_a, dim_b))
-    out = (
-        keyed.repartitionByRange(*([num_files] if num_files else []), "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")  # projection preserves the per-file clustering
-    )
-    out.write.mode("overwrite").parquet(db.path(table))
-

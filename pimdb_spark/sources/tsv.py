@@ -9,20 +9,12 @@ Reference behavior being re-expressed Spark-first:
   the column is non-nullable; booleans parse strictly from '1'/'0'.
 - TsvDictWriter (pimdb/common.py:268-295): tab-joined rows with header.
 
-Scale notes: a single .tsv.gz is one task (gzip is not splittable) — for
-100 TB inputs, pass a directory of many .gz shards, or let
-``split_gz_tsv`` decompress-and-split one large file into plain-text
-shards first: the serial part shrinks to the inherent single-stream
-gunzip (~1-2 GB/min), while the expensive downstream work (CSV parse,
-typed projection, dedup window, parquet encode — several times the
-decompress cost) fans out across all cores/executors.  The keep-first
-dedup shuffles once on the key columns.
+Scale notes: gzip is not splittable, so one .tsv.gz is one scan task
+(the filter and typed projection run in it too).  The keep-first dedup
+shuffles once on the key columns; the work after it runs in parallel.
 """
 
 from __future__ import annotations
-
-import gzip
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -94,83 +86,13 @@ def conjunctive_filter(df: DataFrame, name_to_values: dict[str, list[str]] | Non
     return df
 
 
-def split_gz_tsv(
-    gz_path: str, out_dir: str, target_shard_bytes: int = 128 << 20
-) -> list[str]:
-    """Decompress-and-split ONE large .tsv.gz into ordered plain-text
-    shards so a non-splittable gzip dataset stops serializing the
-    transfer (SCALE.md 'splittable ingest').
-
-    One streaming gunzip pass (constant memory: 8 MiB chunks, shard
-    boundaries only on line breaks) writes ``shard-NNNNN.tsv`` files of
-    ~target_shard_bytes, each with the header line prepended (Spark's
-    ``header=True`` drops the first line of EVERY file).  Shard names
-    sort in stream order and plain text is further splittable, so Spark
-    orders splits by (file, offset) — exactly the original byte order —
-    which keeps ``dedup_keep_first``'s monotonically_increasing_id
-    ordering identical to reading the single gz.
-
-    The gunzip itself is inherently single-stream (DEFLATE back-refs),
-    but it is pure IO+inflate; the CPU-heavy parse/type/dedup/encode
-    stages — several times the decompress cost — then run wide.  Returns
-    the shard paths."""
-    os.makedirs(out_dir, exist_ok=True)
-    chunk_bytes = 8 << 20
-    shards: list[str] = []
-
-    def write_shard(data: bytes) -> None:
-        path = os.path.join(out_dir, f"shard-{len(shards):05d}.tsv")
-        with open(path, "wb") as out:
-            out.write(header)
-            out.write(data)
-        shards.append(path)
-
-    # memory bound: pending holds at most ~target_shard_bytes + one chunk
-    with gzip.open(gz_path, "rb") as f:
-        header = f.readline()
-        pending = b""
-        while True:
-            chunk = f.read(chunk_bytes)
-            pending += chunk
-            while len(pending) >= target_shard_bytes:
-                cut = pending.rfind(b"\n", 0, target_shard_bytes)
-                if cut < 0:  # one line longer than the target: extend
-                    cut = pending.find(b"\n", target_shard_bytes)
-                if cut < 0:
-                    break  # no line boundary in the buffer yet
-                write_shard(pending[: cut + 1])
-                pending = pending[cut + 1 :]
-            if not chunk:
-                if pending or not shards:
-                    write_shard(pending)
-                break
-    return shards
-
-
 def read_dataset(
     spark: SparkSession,
     path: str,
     dataset: str,
     filtered_name_to_values_map: dict[str, list[str]] | None = None,
-    split_work_dir: str | None = None,
-    split_over_bytes: int = 1 << 30,
-    split_shard_bytes: int = 128 << 20,
 ) -> DataFrame:
-    """Full S2+S4+P1+S3 pipeline for one dataset file.
-
-    With ``split_work_dir`` set, a single ``.gz`` file larger than
-    ``split_over_bytes`` is first decompressed into ordered plain-text
-    shards there (split_gz_tsv) so the scan parallelizes; results are
-    row- and order-identical to reading the gz directly (tested)."""
-    if (
-        split_work_dir is not None
-        and path.endswith(".gz")
-        and os.path.isfile(path)
-        and os.path.getsize(path) > split_over_bytes
-    ):
-        shard_dir = os.path.join(split_work_dir, dataset)
-        split_gz_tsv(path, shard_dir, split_shard_bytes)
-        path = shard_dir
+    """Full S2+S4+P1+S3 pipeline for one dataset file."""
     df = read_tsv(spark, path, dataset)
     df = conjunctive_filter(df, filtered_name_to_values_map)
     df = typed(df, dataset)

@@ -234,29 +234,6 @@ def test_mappable_title_alias_types_unit(spark):
     assert [oracle(raw) for raw in cases] == list(cases.values())
 
 
-def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
-    """compact() reads the very table it replaces: the rewrite lands in a
-    temp directory that is swapped in only when complete, so the old
-    files outlive the new write and no temp directory is left behind."""
-    import glob
-
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"))
-    df = spark.range(10_000).withColumnRenamed("id", "k")
-    df.repartition(40).write.parquet(db.path("t"))  # simulate small-file debris
-    before = len(glob.glob(db.path("t") + "/*.parquet"))
-    assert before >= 40
-
-    n = db.compact("t", target_file_mb=512)  # tiny table -> single file
-    after = len(glob.glob(db.path("t") + "/*.parquet"))
-    assert n == 1 and after == 1
-    assert not glob.glob(db.path("t") + ".*"), os.listdir(db.db_dir)
-    got = db.read("t")
-    assert got.count() == 10_000
-    assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
-
-
 def test_ensure_worker_code_ships_once(spark):
     from pimdb_spark import catalog
 
@@ -563,80 +540,6 @@ def test_etl_plans_run_no_python(built_db, imdb_fixture_dir):
             assert node not in plan, (name, node)
 
 
-def test_to_jdbc_plumbing(spark, tmp_path, monkeypatch):
-    """No JDBC driver ships in this environment, so the writer itself is
-    monkeypatched; what's under test is the plumbing contract: the stored
-    table is read back, coalesced to the requested connection count, and
-    handed to DataFrameWriter.jdbc with mode/url/table/properties intact."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"))
-    db.write(spark.range(100).selectExpr("id AS k", "id * 2 AS v"), "t")
-
-    calls = {}
-
-    def fake_jdbc(self, url, table, mode=None, properties=None):
-        calls["url"] = url
-        calls["table"] = table
-        calls["mode"] = self._jwrite.toString()  # not inspectable; just record
-        calls["properties"] = properties
-        calls["rows"] = self._df.count()
-        calls["partitions"] = self._df.rdd.getNumPartitions()
-
-    monkeypatch.setattr(DataFrameWriter, "jdbc", fake_jdbc)
-    db.to_jdbc(
-        "t",
-        "jdbc:postgresql://host/db",
-        num_partitions=2,
-        user="u",
-        password="p",
-        batchsize="500",
-    )
-    assert calls["url"] == "jdbc:postgresql://host/db"
-    assert calls["table"] == "t"
-    assert calls["properties"] == {"user": "u", "password": "p", "batchsize": "500"}
-    assert calls["rows"] == 100
-    assert calls["partitions"] == 2
-
-
-
-
-
-
-def test_write_sorted_clusters_ranges(spark, tmp_path):
-    """write_sorted must produce files whose min/max ranges of the sort
-    column are disjoint (global range clustering), so footer stats can
-    skip whole files for range predicates."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from pimdb_spark.plans.store import ParquetDatabase, write_sorted
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"))
-    df = spark.range(10_000).selectExpr("id AS k", "id % 97 AS v").repartition(8)
-    write_sorted(db, df, "t", "k", num_files=4)
-
-    ranges = []
-    for f in glob.glob(db.path("t") + "/*.parquet"):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2  # disjoint: a k-range filter prunes whole files
-    got = db.read("t")
-    assert got.count() == 10_000
-    assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
-
-
 def _jobs(spark, fn):
     """Call ``fn`` under its own job group: its result, and the ids of the
     jobs it launched."""
@@ -657,11 +560,11 @@ def test_sql_reuses_views_of_unchanged_tables(spark, tmp_path):
     from pimdb_spark.plans.store import ParquetDatabase
 
     db = ParquetDatabase(spark, str(tmp_path / "db"))
-    # written outside the database, so the session does not know the schemas
+    # written outside the database: the schemas come from the footers
     spark.range(3).write.parquet(db.path("a"))
     spark.range(5).write.parquet(db.path("b"))
     df, jobs = _jobs(spark, lambda: db.sql("select count(*) from a"))
-    assert jobs  # first registration reads each table's schema
+    assert not jobs  # the first registration starts no schema job either
     assert df.first()[0] == 3
     df, jobs = _jobs(spark, lambda: db.sql("select count(*) from b"))
     assert not jobs
@@ -694,8 +597,8 @@ def test_sql_sees_every_rewrite(spark, tmp_path):
 
 
 def test_read_reuses_the_schema_of_a_known_table_version(spark, tmp_path):
-    """read() hands Spark the schema this session wrote or inferred for the
-    table's current files, so it starts no schema-inference job; that
+    """read() hands Spark the schema Spark wrote into the table's footer,
+    so it starts no schema-inference job, whoever wrote the table; that
     schema equals the inferred one, and every rewrite is read with its
     own schema."""
     from pimdb_spark.plans.store import ParquetDatabase
@@ -715,13 +618,52 @@ def test_read_reuses_the_schema_of_a_known_table_version(spark, tmp_path):
     df = db.read("t")
     assert df.schema == spark.read.parquet(db.path("t")).schema
     assert sorted(r.w for r in df.collect()) == [0, 2]
-    # written outside the database: the first read infers, later ones reuse
+    # written outside the database: no read infers, not even the first
     spark.range(4).write.parquet(db.path("u"))
     df, jobs = _jobs(spark, lambda: db.read("u"))
-    assert jobs
+    assert not jobs
     assert df.schema == spark.read.parquet(db.path("u")).schema
     _, jobs = _jobs(spark, lambda: db.read("u"))
     assert not jobs
+
+
+
+def test_read_in_a_fresh_session_starts_no_schema_job(spark, tmp_path):
+    """A new process knows nothing of the one that wrote the database; a
+    new session on the same directory stands in for it."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db_dir = str(tmp_path / "db")
+    ParquetDatabase(spark, db_dir).write(spark.range(3).selectExpr("id AS k"), "t")
+    fresh = ParquetDatabase(spark.newSession(), db_dir)
+    df, jobs = _jobs(spark, lambda: fresh.read("t"))
+    assert not jobs
+    _, jobs = _jobs(spark, fresh.register_all)
+    assert not jobs
+    assert sorted(r.k for r in df.collect()) == [0, 1, 2]
+
+
+def test_footer_schema_equals_inferred(built_db, examples_db, tmp_path):
+    """The schema read() takes from a Spark-written footer, in a session
+    that never saw the table written, equals the one Spark infers, and
+    reads the same rows.  A table without Spark's footer key (here a
+    hive-layout directory) falls back to inference."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    spark = built_db.spark
+    extra = ParquetDatabase(spark, str(tmp_path / "db"))
+    extra.write(spark.range(0).selectExpr("id AS k", "cast(id AS string) AS v"), "empty")
+    spark.range(4).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(
+        extra.path("hive")
+    )
+    fresh = spark.newSession()
+    for db in (built_db, examples_db, extra):
+        for t in db.table_names():
+            df, jobs = _jobs(spark, lambda: ParquetDatabase(fresh, db.db_dir).read(t))
+            inferred = spark.read.parquet(db.path(t))
+            assert df.schema == inferred.schema, t
+            assert df.count() == inferred.count(), t
+            assert t == "hive" or not jobs, t
 
 
 def test_sql_drops_views_of_vanished_tables(spark, tmp_path):

@@ -1,9 +1,6 @@
-"""fuzzy_link blocking semantics + Z-order key parity and clustered-write
-bounding-box property."""
+"""fuzzy_link blocking semantics + Z-order key parity."""
 
 from __future__ import annotations
-
-import glob
 
 
 def test_fuzzy_link_blocks_and_verifies(spark):
@@ -66,49 +63,6 @@ def test_zorder_key_matches_python_reference(spark):
     }
     for a, b in rows:
         assert got[(a, b)] == spread(a) | (spread(b) << 1), (a, b)
-
-
-def test_write_zordered_bounding_boxes(spark, tmp_path):
-    """Z-order clustered files must have small bounding boxes in BOTH
-    dimensions — the property that makes min/max footer stats prune
-    range filters on either dimension."""
-    from pyspark.sql import functions as F
-
-    from pimdb_spark.plans.store import ParquetDatabase, write_zordered
-
-    db = ParquetDatabase(spark, str(tmp_path / "db"))
-    n = 20_000
-    df = (
-        spark.range(n)
-        .select(
-            (F.hash("id").bitwiseAND(F.lit(0x7FFFFFFF)) % 4096).alias("x"),
-            (F.hash((F.col("id") + 1).cast("long")).bitwiseAND(F.lit(0x7FFFFFFF)) % 4096).alias("y"),
-        )
-    )
-    write_zordered(db, df, "t", F.col("x"), F.col("y"), num_files=16)
-    files = sorted(glob.glob(db.path("t") + "/part-*.parquet"))
-    assert len(files) >= 8
-    fractions = []
-    for f in files:
-        r = (
-            spark.read.parquet(f)
-            .agg(
-                F.min("x"), F.max("x"), F.min("y"), F.max("y"), F.count(F.lit(1))
-            )
-            .first()
-        )
-        if r[4] < 100:  # ignore tiny boundary files
-            continue
-        fractions.append(((r[1] - r[0]) / 4096.0, (r[3] - r[2]) / 4096.0))
-    assert fractions
-    # every substantive file covers a proper sub-box on BOTH dimensions;
-    # a single-column sort would leave one dimension's range at ~1.0
-    avg_x = sum(f[0] for f in fractions) / len(fractions)
-    avg_y = sum(f[1] for f in fractions) / len(fractions)
-    assert avg_x < 0.8 and avg_y < 0.8
-    assert min(avg_x, avg_y) < 0.6
-    # stored schema is clean: the transient _zkey column is dropped
-    assert spark.read.parquet(db.path("t")).columns == ["x", "y"]
 
 
 def test_sorted_neighborhood_link_semantics(spark):

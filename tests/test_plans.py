@@ -423,21 +423,6 @@ def test_grouping_analytics_expand(spark):
     assert count_op(plan, "Expand") == 3, plan
 
 
-def test_partitioned_write_prunes(spark, tmp_path):
-    """Partition-by write + equality filter must prune at the directory
-    level (PartitionFilters in the scan), not scan-and-discard."""
-    from pimdb_spark.plans.store import ParquetDatabase
-
-    db = ParquetDatabase(spark, str(tmp_path / "pdb"))
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    db.write(o, "orders_p", partition_by="o_orderstatus")
-    got = db.read("orders_p").filter("o_orderstatus = 'F'")
-    plan = plan_of(got)
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "o_orderstatus" in pf
-    assert got.count() == o.filter("o_orderstatus = 'F'").count()
-
-
 def test_salted_join_spreads_keys(spark):
     """The salted join must plan as an equi-join on (key, salt) — no
     nested loop — and return exactly the plain join's aggregate."""

@@ -70,135 +70,3 @@ def test_conjunctive_filter(spark, imdb_fixture_dir):
         {"titleType": ["movie"], "tconst": ["tt0000001", "tt0000002"]},
     )
     assert [r.tconst for r in df.collect()] == ["tt0000001"]
-
-
-def test_incremental_transfer_skips_unchanged(spark, imdb_fixture_dir, tmp_path):
-    """Digest-diff refresh: an identical snapshot touches NOTHING on disk;
-    a one-dataset change rewrites only that dataset and reports exact
-    added/removed/changed counts."""
-    import os
-    import shutil
-
-    from pimdb_spark.ingest import incremental_transfer, transfer
-    from pimdb_spark.plans.store import ParquetDatabase
-    from tests.fixtures_imdb import FIXTURE_TSVS, write_fixtures
-
-    db_dir = str(tmp_path / "db")
-    db = ParquetDatabase(spark, db_dir)
-    transfer(spark, imdb_fixture_dir, db)
-
-    def mtimes():
-        out = {}
-        for t in db.table_names():
-            p = db.path(t)
-            out[t] = max(
-                os.path.getmtime(os.path.join(root, f))
-                for root, _, files in os.walk(p)
-                for f in files
-            )
-        return out
-
-    before = mtimes()
-    stats = incremental_transfer(spark, imdb_fixture_dir, db)
-    assert all(v == {"added": 0, "removed": 0, "changed": 0} for v in stats.values())
-    assert mtimes() == before  # zero rewrite on an identical snapshot
-
-    # new snapshot: ratings gains one row, loses one, changes one
-    snap2 = str(tmp_path / "snap2")
-    shutil.copytree(imdb_fixture_dir, snap2, dirs_exist_ok=True)
-    ratings = FIXTURE_TSVS["title.ratings"].splitlines()
-    # header, tt0000001 7.5 -> 7.9 (changed), drop tt0000002 (removed),
-    # add tt0000003 (added)
-    new_ratings = "\n".join(
-        [ratings[0], "tt0000001\t7.9\t1000", "tt0000003\t5.0\t42"]
-    ) + "\n"
-    import gzip
-
-    with gzip.open(os.path.join(snap2, "title.ratings.tsv.gz"), "wt") as f:
-        f.write(new_ratings)
-
-    stats2 = incremental_transfer(spark, snap2, db)
-    assert stats2["TitleRatings"] == {"added": 1, "removed": 1, "changed": 1}
-    after = mtimes()
-    for t, m in after.items():
-        if t == "TitleRatings":
-            assert m > before[t]
-        else:
-            assert m == before[t]  # untouched datasets not rewritten
-    got = {r.tconst: (r.averageRating, r.numVotes) for r in db.read("TitleRatings").collect()}
-    assert got == {"tt0000001": (7.9, 1000), "tt0000003": (5.0, 42)}
-
-
-def test_split_gz_tsv_parity_and_ordering(spark, tmp_path):
-    """split_gz_tsv must (a) produce >1 ordered shard each carrying the
-    header, (b) reassemble to the exact original byte stream, and (c) give
-    ROW-IDENTICAL read_dataset output INCLUDING the keep-first dedup
-    winners — the order-sensitive part: the first-in-file duplicate must
-    win under the sharded scan exactly as under the single-gz scan."""
-    import gzip
-    import os
-
-    from pimdb_spark.sources.tsv import read_dataset, split_gz_tsv
-
-    # 2000 rating rows with every 10th key duplicated later in the file
-    # (the later duplicate carries a different value and must LOSE)
-    lines = ["tconst\taverageRating\tnumVotes"]
-    for i in range(2000):
-        lines.append(f"tt{i:07d}\t{(i % 90) / 10.0 + 1.0}\t{i}")
-    for i in range(0, 2000, 10):
-        lines.append(f"tt{i:07d}\t9.9\t-1")  # dup: must not survive
-    body = "\n".join(lines) + "\n"
-    gz = str(tmp_path / "title.ratings.tsv.gz")
-    with gzip.open(gz, "wt") as f:
-        f.write(body)
-
-    shard_dir = str(tmp_path / "shards")
-    shards = split_gz_tsv(gz, shard_dir, target_shard_bytes=8 << 10)
-    assert len(shards) > 3
-    assert [os.path.basename(s) for s in shards] == sorted(
-        os.path.basename(s) for s in shards
-    )
-    header = lines[0] + "\n"
-    reassembled = ""
-    for s in shards:
-        content = open(s).read()
-        assert content.startswith(header)
-        reassembled += content[len(header):]
-    assert header + reassembled == body  # byte-exact stream
-
-    direct = read_dataset(spark, gz, "title.ratings")
-    sharded = read_dataset(spark, shard_dir, "title.ratings")
-    d = {r.tconst: (r.averageRating, r.numVotes) for r in direct.collect()}
-    s = {r.tconst: (r.averageRating, r.numVotes) for r in sharded.collect()}
-    assert d == s and len(d) == 2000
-    assert all(v != (9.9, -1) for v in s.values())  # first occurrence won
-
-
-def test_read_dataset_auto_split_threshold(spark, tmp_path):
-    """read_dataset with split_work_dir splits only files OVER the
-    threshold, and the split path produces the same table."""
-    import gzip
-    import os
-
-    from pimdb_spark.sources.tsv import read_dataset
-
-    lines = ["tconst\taverageRating\tnumVotes"] + [
-        f"tt{i:07d}\t5.0\t{i}" for i in range(500)
-    ]
-    gz = str(tmp_path / "title.ratings.tsv.gz")
-    with gzip.open(gz, "wt") as f:
-        f.write("\n".join(lines) + "\n")
-
-    work = str(tmp_path / "work")
-    # under threshold: no split dir created
-    df = read_dataset(
-        spark, gz, "title.ratings", split_work_dir=work, split_over_bytes=1 << 30
-    )
-    assert df.count() == 500 and not os.path.exists(os.path.join(work, "title.ratings"))
-    # over threshold (0 bytes): split kicks in, same rows
-    df2 = read_dataset(
-        spark, gz, "title.ratings", split_work_dir=work, split_over_bytes=0,
-        split_shard_bytes=4 << 10,
-    )
-    assert df2.count() == 500
-    assert len(os.listdir(os.path.join(work, "title.ratings"))) > 1
