@@ -756,8 +756,8 @@ def q_sparse_doc_sim_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the per-pair array_sort(collect_list) ordered folds the
     oracle entry pays for bit-parity.  Engine-chosen accumulation order
     makes the sum differ from the fold by last-ulp only; the
-    round-to-4-digits contract (the dense _np twins' convention)
-    absorbs it, so the DuckDB hash still matches.
+    round-to-4-digits contract absorbs it, so the DuckDB hash still
+    matches.
 
     Scale: same candidate discipline as q_sparse_doc_sim (capped-gram
     equi-join, Σdf² bounded) minus the fold overhead — no per-pair

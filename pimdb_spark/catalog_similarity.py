@@ -91,8 +91,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bench-only since builder r17 (second demotion pair, freeing the
     flagship-pipeline promotion slots): the exhaustive baseline of the
     ANN ladder — q_ann_recall_lsh recomputes this exact top-k inside its
-    driver-attested recall harness, and the np twin-equality test pins
-    the scorer; hash-gated here via _EXTRA_BENCH_ORACLE."""
+    driver-attested recall harness; hash-gated here via
+    _EXTRA_BENCH_ORACLE."""
     emb = load(spark, sf_dir, "embeddings")
     # independent scan for the query side: sharing `emb` across both join
     # sides risks Catalyst's self-join HOF-lambda rebind bug (see
@@ -201,8 +201,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship-pipeline promotion slots): the training-free IVF base form —
     the driver-attested IVF path runs through q_ivf_int8_topk /
     q_ivf_pq_topk, which compose this same cell-prune plan; hash-gated
-    here via _EXTRA_BENCH_ORACLE with the np twin-equality test pinning
-    the scorer."""
+    here via _EXTRA_BENCH_ORACLE."""
     emb = load(spark, sf_dir, "embeddings")
     # independent scan for the query side: sharing `emb` across both join
     # sides risks Catalyst's self-join HOF-lambda rebind bug (see
@@ -258,60 +257,6 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     )
     return S.embedding_dup_pairs(base, "vec_id", "embedding", n_bits=8, threshold=0.95)
-
-
-# -- numpy-scored bench variants --------------------------------------------
-# Same plan shape and the SAME oracle as the fold entries: the scoring
-# column comes from the Arrow-batched einsum (similarity.cosine_pandas)
-# instead of the JVM fold.  The round-to-4-digits contract absorbs the
-# last-ulp BLAS-order difference, so the DuckDB hash still matches — and
-# the bench measures the path you'd run at dim >> 8 in production.
-
-def q_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_cosine_topk scored via Arrow-batched numpy einsum (the wide-vector
-    fast path; see scored_cosine)."""
-    emb = load(spark, sf_dir, "embeddings")
-    # independent scan for the query side: sharing `emb` across both join
-    # sides risks Catalyst's self-join HOF-lambda rebind bug (see
-    # operators/similarity.embedding_dup_pairs docstring)
-    queries = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
-    return S.cosine_topk(
-        queries, emb, "vec_id", "vec_id", "embedding", k=5, scorer="numpy"
-    )
-
-
-def q_ivf_ann_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_ivf_ann_topk with numpy-scored probes (cell assignment stays a
-    JVM fold over the 8-centroid broadcast — that cost is O(n_centroids),
-    not O(pairs))."""
-    emb = load(spark, sf_dir, "embeddings")
-    # independent scan for the query side: sharing `emb` across both join
-    # sides risks Catalyst's self-join HOF-lambda rebind bug (see
-    # operators/similarity.embedding_dup_pairs docstring)
-    queries = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 16)
-    return S.ivf_topk(
-        queries, emb, "vec_id", "vec_id", "embedding",
-        n_centroids=8, nprobe=2, k=3, scorer="numpy",
-    )
-
-
-from pimdb_spark.catalog import _EXTRA_BENCH_ORACLE, register_bench_only  # noqa: E402
-
-# Bench-only since the round-10 consolidation: each twin's oracle is the
-# LITERAL oracle of its fold base entry (identical query parameters,
-# different physical scorer — verified hash-green through r7 while these
-# held registry slots).  Registering the duplicate oracle keeps the
-# twins under tests/test_catalog_oracle.py's pytest hash gate (the r10
-# demotion had left them on twin-equality property tests alone).  The
-# base entries are themselves bench-only since builder r17 (the second
-# demotion pair, freeing the flagship-pipeline promotion slots), so the
-# shared oracles now live in _EXTRA_BENCH_ORACLE.
-register_bench_only(
-    "q_cosine_topk_np", oracle=_EXTRA_BENCH_ORACLE["q_cosine_topk"]
-)(q_cosine_topk_np)
-register_bench_only(
-    "q_ivf_ann_topk_np", oracle=_EXTRA_BENCH_ORACLE["q_ivf_ann_topk"]
-)(q_ivf_ann_topk_np)
 
 
 _SQDIST = """

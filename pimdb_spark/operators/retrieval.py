@@ -273,7 +273,7 @@ def sparse_doc_similarity(
     aggregation instead of collect_list+array_sort per pair, the shape
     you run in production; accumulation order is engine-chosen, so pair
     it with ``round_digits`` (the last-ulp order difference is absorbed
-    by rounding, the contract the dense ``_np`` twins established).
+    by rounding).
 
     Scale: one gram shuffle for tf; the pair join ships (doc, gram, w,
     n2) for capped grams only; the pair groupBy keys on (doc_a, doc_b)

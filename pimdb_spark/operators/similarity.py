@@ -10,10 +10,10 @@ Design for 100 TB:
   dimensions (or of b random hyperplanes — here fixed axes for
   determinism), turning the cross join into an equi-join on bucket id:
   candidates shrink by ~2^b, the classic recall/cost trade.
-- The dot product is a sequential fold (zip_with + aggregate), JVM-side;
-  for very wide vectors a Pandas UDF over Arrow batches (numpy matmul)
-  becomes faster — that variant is in operators/multimodal.py's style and
-  can be swapped in per-column width.
+- The dot product is a sequential fold (zip_with + aggregate), JVM-side,
+  so every score is bit-reproducible against the DuckDB oracle.
+- Every top-k operator ends in the same tail (`_topk`): optional round,
+  then rank per query by score with ties broken by candidate id.
 """
 
 from __future__ import annotations
@@ -75,6 +75,170 @@ def sqdist(a: Column, b: Column) -> Column:
     return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
 
 
+# -- shared stages of the top-k operators -------------------------------------
+# Every scored frame carries (q_id, c_id, <score>).  Column names that
+# differ between operators are arguments of the stage that makes them.
+
+
+def _topk(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    round_digits: int | None,
+    ascending: bool = False,
+    cols: tuple | None = None,
+) -> DataFrame:
+    """Per-query top-k: round BEFORE ranking, so rank ties at the output
+    precision break by candidate id (the policy every oracle shares).
+    ``ascending`` ranks distances (smaller = closer)."""
+    if round_digits is not None:
+        scored = scored.withColumn(score, F.round(score, round_digits))
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("q_id").orderBy(order, "c_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*(cols or ("q_id", "rank", "c_id", score)))
+    )
+
+
+def _pairs(c: DataFrame, q: DataFrame, on: Column | None = None) -> DataFrame:
+    """Candidate x query pairs without self-matches: a cross join, or a
+    join on ``on``."""
+    joined = c.crossJoin(q) if on is None else c.join(q, on)
+    return joined.filter(F.col("q_id") != F.col("c_id"))
+
+
+def _lowest_id_vecs(
+    candidates: DataFrame, cand_id: str, vec_col: str, n: int, alias: str, *aggs: Column
+) -> DataFrame:
+    """One row: the ``n`` lowest-id candidate vectors in id order, the
+    training-free centroid / codebook convention (plus any ``aggs`` over
+    the same head rows)."""
+    return (
+        candidates.orderBy(cand_id)
+        .limit(n)
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(F.col(cand_id).alias("cid"), F.col(vec_col).alias("cvec"))
+                    )
+                ),
+                lambda s: s.cvec,
+            ).alias(alias),
+            *aggs,
+        )
+    )
+
+
+def _with_cell_dists(
+    df: DataFrame, coarse: DataFrame, vec: str, cents: str = "coarse_vecs", dists: str = "cdists"
+) -> DataFrame:
+    """Attach the one-row centroid frame and each row's squared-L2
+    distance to every centroid."""
+    return df.crossJoin(F.broadcast(coarse)).withColumn(
+        dists, F.transform(F.col(cents), lambda cv: sqdist(F.col(vec), cv))
+    )
+
+
+def _nearest(dists: str) -> Column:
+    """1-based index of the first minimum distance (ties break toward the
+    lower centroid id on both engines)."""
+    return F.array_position(dists, F.array_min(dists))
+
+
+def _probe(
+    df: DataFrame, dists: str, keep: list[str], nprobe: int, cell: str = "q_cell"
+) -> DataFrame:
+    """``keep`` plus ``cell`` for each query's ``nprobe`` nearest cells,
+    ties by cell id."""
+    w = Window.partitionBy("q_id").orderBy("dist", cell)
+    return (
+        df.select(*keep, F.posexplode(dists).alias("pos", "dist"))
+        .withColumn(cell, (F.col("pos") + 1).cast("bigint"))
+        .withColumn("probe_rank", F.row_number().over(w))
+        .filter(F.col("probe_rank") <= nprobe)
+    )
+
+
+def _pq_codes(vec: str, m: int, sub: int, **layout) -> Column:
+    """PQ code per subspace: first-minimum position in the vector's
+    sub-distance table (``layout``: _subdist_tables' table and flags)."""
+    return F.transform(
+        _subdist_tables(vec, m, sub, **layout),
+        lambda d: F.array_position(d, F.array_min(d)).cast("int"),
+    )
+
+
+def _adc_topk(pairs: DataFrame, m: int, k: int, round_digits: int | None) -> DataFrame:
+    """Score (dtab, codes) pairs by asymmetric distance, the sum of m
+    table lookups left-associated, and keep the k smallest."""
+    adc = F.aggregate(
+        F.sequence(F.lit(1), F.lit(m)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
+    )
+    return _topk(
+        pairs.select("q_id", "c_id", adc.alias("adc")), "adc", k, round_digits, ascending=True
+    )
+
+
+def _ivf_adc_topk(
+    c: DataFrame,
+    q: DataFrame,
+    books: DataFrame,
+    c_vec: str,
+    q_vec: str,
+    m: int,
+    sub: int,
+    k: int,
+    round_digits: int | None,
+    **layout,
+) -> DataFrame:
+    """IVF-PQ scoring: code the candidates ``c`` (c_id, c_cell, c_vec),
+    build each probed query row's sub-distance table from ``q`` (q_id,
+    q_cell, q_vec), join on cell and rank by ADC."""
+    c = c.crossJoin(F.broadcast(books)).select(
+        "c_id", "c_cell", _pq_codes(c_vec, m, sub, **layout).alias("codes")
+    )
+    q = q.crossJoin(F.broadcast(books)).select(
+        "q_id", "q_cell", _subdist_tables(q_vec, m, sub, **layout).alias("dtab")
+    )
+    return _adc_topk(
+        _pairs(c, q, F.col("c_cell").eqNullSafe(F.col("q_cell"))), m, k, round_digits
+    )
+
+
+def _cos_side(df: DataFrame, id_col: str, vec_col: str, p: str, *extra: Column) -> DataFrame:
+    """(p_id, p_vec, p_nrm, *extra) side frame of a cosine scorer, norms
+    computed once per vector.  The query side (p = "q") is lazily
+    localCheckpoint-ed: small by contract, and it keeps the optimizer
+    from re-merging query and candidate scans of one table into a
+    self-join with mis-rebound HOF lambdas (see embedding_dup_pairs)."""
+    side = df.select(
+        F.col(id_col).alias(p + "_id"),
+        F.col(vec_col).alias(p + "_vec"),
+        norm(F.col(vec_col)).alias(p + "_nrm"),
+        *extra,
+    )
+    return side.localCheckpoint(eager=False) if p == "q" else side
+
+
+def _split(dim: int, m: int, fn: str) -> int:
+    """Sub-vector width dim/m; m must divide dim."""
+    sub = dim // m
+    if sub * m != dim:
+        raise ValueError(f"{fn}: dim {dim} not divisible by m {m}")
+    return sub
+
+
+# _subdist_tables layout of the training-free codebooks: full-width
+# lowest-id vectors, sliced per subspace, raw floats cast on both sides
+_FREE_LAYOUT = {"table": "cvecs", "sliced_table": True, "cast_x": True, "cast_y": True}
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -101,127 +265,66 @@ def ivf_topk(
     Scale: the centroid set is one broadcast row; assignment is a
     projection over the candidate scan (no shuffle of candidates); the
     probe join is an equi-join on cell id, so scored pairs shrink by
-    ~n_centroids/nprobe versus brute force.  For large K x dim, swap the
-    per-row fold for an Arrow-batched numpy matmul (mapInPandas) with the
-    same output contract.
+    ~n_centroids/nprobe versus brute force.
 
-    scorer: "fold" (oracle bit-parity) / "numpy" (Arrow einsum fast
-    path) / "int8" — the quantized composition: probe pairs carry int8
-    codes (8x narrower payload through the cell equi-join) and score
-    with the exact integer dot + rescale, engine-exact by construction
-    (see int8_ann_topk).
+    scorer: "fold" (oracle bit-parity) / "int8" — the quantized
+    composition: probe pairs carry int8 codes (8x narrower payload
+    through the cell equi-join) and score with the exact integer dot +
+    rescale, engine-exact by construction (see int8_ann_topk).
     """
-    cents = (
-        candidates.orderBy(cand_id)
-        .limit(n_centroids)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col(cand_id).alias("cid"), F.col(vec_col).alias("cvec"))
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("cvecs")
-        )
-    )
+    if scorer not in ("fold", "int8"):
+        raise ValueError(f"unknown scorer {scorer!r}: use 'fold' or 'int8'")
+    cents = _lowest_id_vecs(candidates, cand_id, vec_col, n_centroids, "cvecs")
 
-    def with_dists(df: DataFrame, id_alias: str) -> DataFrame:
-        cols = [
-            F.col(query_id if id_alias == "q_id" else cand_id).alias(id_alias),
-            F.col(vec_col).alias(id_alias[0] + "_vec"),
-            norm(F.col(vec_col)).alias(id_alias[0] + "_nrm"),
-        ]
-        if scorer == "int8":
-            cols.append(int8_struct(F.col(vec_col)).alias(id_alias[0] + "_q"))
-        side = df.select(*cols)
-        if id_alias == "q_id":
-            # query side lazily checkpointed — small by contract, and it
-            # prevents the optimizer re-merging query/candidate scans of
-            # the same table into a self-join with mis-rebound HOF
-            # lambdas (see embedding_dup_pairs docstring)
-            side = side.localCheckpoint(eager=False)
-        return side.crossJoin(F.broadcast(cents)).withColumn(
-            "dists",
-            F.transform(F.col("cvecs"), lambda c: sqdist(F.col(id_alias[0] + "_vec"), c)),
-        )
+    def with_dists(df: DataFrame, id_col: str, p: str) -> DataFrame:
+        extra = [int8_struct(F.col(vec_col)).alias(p + "_q")] if scorer == "int8" else []
+        side = _cos_side(df, id_col, vec_col, p, *extra)
+        return _with_cell_dists(side, cents, p + "_vec", "cvecs", "dists")
 
     # distinct per-side cell names + eqNullSafe probe join: both guard the
     # Catalyst constraint-propagation / self-join HOF rebind bug (see
     # lsh_ann_topk docstring) — cells are non-null, semantics identical,
     # still a hash equi-join
-    c_extra = ["c_q"] if scorer == "int8" else []
-    q_extra = ["q_q"] if scorer == "int8" else []
-    assigned = with_dists(candidates, "c_id").select(
-        "c_id", "c_vec", "c_nrm", *c_extra,
-        F.array_position("dists", F.array_min("dists")).alias("c_cell"),
+    c_cols = ["c_id", "c_vec", "c_nrm"] + (["c_q"] if scorer == "int8" else [])
+    q_cols = ["q_id", "q_vec", "q_nrm"] + (["q_q"] if scorer == "int8" else [])
+    assigned = with_dists(candidates, cand_id, "c").select(
+        *c_cols, _nearest("dists").alias("c_cell")
     )
-    probe_w = Window.partitionBy("q_id").orderBy("dist", "q_cell")
-    probes = (
-        with_dists(queries, "q_id")
-        .select(
-            "q_id", "q_vec", "q_nrm", *q_extra,
-            F.posexplode("dists").alias("pos", "dist"),
-        )
-        .withColumn("q_cell", (F.col("pos") + 1).cast("bigint"))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("q_id", "q_vec", "q_nrm", *q_extra, "q_cell")
+    probes = _probe(with_dists(queries, query_id, "q"), "dists", q_cols, nprobe).select(
+        *q_cols, "q_cell"
     )
-    pairs = assigned.join(
-        probes, F.col("c_cell").eqNullSafe(F.col("q_cell"))
-    ).filter(F.col("q_id") != F.col("c_id"))
+    pairs = _pairs(assigned, probes, F.col("c_cell").eqNullSafe(F.col("q_cell")))
     if scorer == "int8":
         # quantized probe scoring: exact integer dot + rescale — the
         # IVF x int8 composition (candidate pruning from the cell
         # equi-join, 8x-narrower pair payload from the codes)
         scored = pairs.select("q_id", "c_id", int8_score().alias("cos"))
     else:
-        scored = scored_cosine(
-            pairs, "q_vec", "c_vec", scorer, a_norm="q_nrm", b_norm="c_nrm"
-        )
-    scored = scored.withColumn("cos", F.round("cos", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "cos")
-    )
+        scored = scored_cosine(pairs, "q_vec", "c_vec", a_norm="q_nrm", b_norm="c_nrm")
+    return _topk(scored, "cos", k, round_digits)
 
 
 def scored_cosine(
     df: DataFrame,
     a: str,
     b: str,
-    scorer: str = "fold",
     a_norm: str | None = None,
     b_norm: str | None = None,
 ) -> DataFrame:
-    """Attach a ``cos`` column scoring df[a] x df[b].
+    """Attach a ``cos`` column scoring df[a] x df[b] with the JVM-side
+    sequential fold — deterministic accumulation order, bit-reproducible
+    against the DuckDB oracle.
 
-    scorer="fold": JVM-side sequential fold — deterministic accumulation
-    order, bit-reproducible against the DuckDB oracle.  scorer="numpy":
-    Arrow-batched einsum (cosine_pandas) — the fast path for wide vectors;
-    BLAS summation order may differ from the fold in the last ulp, which
-    the round-digits contract downstream absorbs (ranking happens on
-    values rounded to >=4 fewer digits than the ulp gap, ties break by
-    id).
-
-    With ``a_norm``/``b_norm`` (names of PRE-COMPUTED norm columns), the
-    fold path runs one fold per pair (the dot) instead of three —
-    bit-identical to inline norms (same expression over the same floats;
-    the semdedup measurement: ~3x less interpreted-fold work).  Callers
-    should compute norms once per vector in their side frames."""
-    if scorer == "numpy":
-        return df.withColumn("cos", cosine_pandas(a, b))
-    if scorer == "fold":
-        if a_norm is not None and b_norm is not None:
-            return df.withColumn(
-                "cos",
-                dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm)),
-            )
-        return df.withColumn("cos", cosine(F.col(a), F.col(b)))
-    raise ValueError(f"unknown scorer {scorer!r}: use 'fold' or 'numpy'")
+    With ``a_norm``/``b_norm`` (names of PRE-COMPUTED norm columns), it
+    runs one fold per pair (the dot) instead of three — bit-identical to
+    inline norms (same expression over the same floats; the semdedup
+    measurement: ~3x less interpreted-fold work).  Callers should compute
+    norms once per vector in their side frames."""
+    if a_norm is not None and b_norm is not None:
+        return df.withColumn(
+            "cos", dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm))
+        )
+    return df.withColumn("cos", cosine(F.col(a), F.col(b)))
 
 
 def sign_bucket(vec: Column, n_bits: int = 8, offset: int = 0) -> Column:
@@ -245,7 +348,6 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int | None = 4,
-    scorer: str = "fold",
 ) -> DataFrame:
     """Exact top-k: broadcast the query set, score every candidate, rank
     per query (ties broken by candidate id).  Self-matches excluded.
@@ -255,34 +357,12 @@ def cosine_topk(
     optimizer into a self-join whose HOF lambdas Catalyst can mis-rebind
     (see embedding_dup_pairs docstring); the query set is small by
     contract (it broadcasts), so the checkpoint is cheap."""
-    q = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-    ).localCheckpoint(eager=False)
-    c = candidates.select(
-        F.col(cand_id).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_nrm"),
-    )
+    q = _cos_side(queries, query_id, vec_col, "q")
+    c = _cos_side(candidates, cand_id, vec_col, "c")
     scored = scored_cosine(
-        c.crossJoin(F.broadcast(q)).filter(F.col("q_id") != F.col("c_id")),
-        "q_vec",
-        "c_vec",
-        scorer,
-        a_norm="q_nrm",
-        b_norm="c_nrm",
+        _pairs(c, F.broadcast(q)), "q_vec", "c_vec", a_norm="q_nrm", b_norm="c_nrm"
     )
-    if round_digits is not None:
-        # round BEFORE ranking so rank ties at the output precision break
-        # by candidate id deterministically (oracle does the same)
-        scored = scored.withColumn("cos", F.round("cos", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "cos")
-    )
+    return _topk(scored, "cos", k, round_digits)
 
 
 def lsh_ann_topk(
@@ -294,7 +374,6 @@ def lsh_ann_topk(
     k: int = 3,
     n_bits: int = 8,
     round_digits: int | None = 4,
-    scorer: str = "fold",
 ) -> DataFrame:
     """Approximate top-k: score only candidates in the query's sign-LSH
     bucket.  Equi-join on bucket id replaces the cross join.
@@ -311,35 +390,17 @@ def lsh_ann_topk(
     side's output, where its lambda binds against attributes that no
     longer exist (executor-side INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) —
     EqualNullSafe is opaque to that transitive closure."""
-    q = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-        sign_bucket(F.col(vec_col), n_bits).alias("q_bucket"),
-    ).localCheckpoint(eager=False)
-    c = candidates.select(
-        F.col(cand_id).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_nrm"),
-        sign_bucket(F.col(vec_col), n_bits).alias("c_bucket"),
+    q = _cos_side(
+        queries, query_id, vec_col, "q", sign_bucket(F.col(vec_col), n_bits).alias("q_bucket")
     )
-    scored = scored_cosine(
-        c.join(F.broadcast(q), F.col("q_bucket").eqNullSafe(F.col("c_bucket"))).filter(
-            F.col("q_id") != F.col("c_id")
-        ),
-        "q_vec",
-        "c_vec",
-        scorer,
-        a_norm="q_nrm",
-        b_norm="c_nrm",
+    c = _cos_side(
+        candidates, cand_id, vec_col, "c", sign_bucket(F.col(vec_col), n_bits).alias("c_bucket")
     )
-    if round_digits is not None:
-        scored = scored.withColumn("cos", F.round("cos", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("q_bucket").alias("bucket"), "rank", "c_id", "cos")
+    pairs = _pairs(c, F.broadcast(q), F.col("q_bucket").eqNullSafe(F.col("c_bucket")))
+    scored = scored_cosine(pairs, "q_vec", "c_vec", a_norm="q_nrm", b_norm="c_nrm")
+    return _topk(
+        scored, "cos", k, round_digits,
+        cols=("q_id", F.col("q_bucket").alias("bucket"), "rank", "c_id", "cos"),
     )
 
 
@@ -512,19 +573,8 @@ def int8_ann_topk(
 def _int8_brute(q: DataFrame, c: DataFrame, k: int, round_digits: int | None) -> DataFrame:
     """Shared quantized brute-force tail: q = (q_id, q_q, q_nrm)
     broadcast against c = (c_id, c_q, c_nrm), WindowGroupLimit top-k."""
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", int8_score().alias("qcos"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("qcos", F.round("qcos", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.desc("qcos"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "qcos")
-    )
+    scored = _pairs(c, F.broadcast(q)).select("q_id", "c_id", int8_score().alias("qcos"))
+    return _topk(scored, "qcos", k, round_digits)
 
 
 def int8_topk_from_codes(
@@ -602,69 +652,11 @@ def pq_topk(
     code assignment is first-minimum (list_position semantics, both
     engines); the ADC sum unrolls m left-associated adds — the DuckDB
     oracle reproduces each value exactly."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"pq_topk: dim {dim} not divisible by m {m}")
-    cents = (
-        candidates.orderBy(cand_id)
-        .limit(n_centroids)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("cvecs")
-        )
-    )
-
-    c = (
-        candidates.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("c_vec"))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "c_id",
-            _subdist_tables("c_vec", m, sub, "cvecs", sliced_table=True, cast_x=True, cast_y=True).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
-    )
-    q = (
-        queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .localCheckpoint(eager=False)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            _subdist_tables("q_vec", m, sub, "cvecs", sliced_table=True, cast_x=True, cast_y=True).alias("dtab"),
-        )
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
+    sub = _split(dim, m, "pq_topk")
+    cents = _lowest_id_vecs(candidates, cand_id, vec_col, n_centroids, "cvecs")
+    coded = _pq_encode(candidates, cents, cand_id, vec_col, m, sub, **_FREE_LAYOUT)
+    return _pq_from_codes(
+        queries, coded, cents, query_id, vec_col, m, sub, k, round_digits, **_FREE_LAYOUT
     )
 
 
@@ -739,7 +731,6 @@ def exact_rerank(
     k: int = 3,
     round_digits: int | None = 4,
     metric: str = "cosine",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Stage 2 of two-stage retrieval, composable behind ANY shortlist
     generator (``short``: a (q_id, c_id) frame from pq_topk, ivf_pq_topk,
@@ -749,13 +740,9 @@ def exact_rerank(
     L2, smaller = closer).  Scale: the shortlist is |Q| x shortlist rows
     and BROADCASTS against the candidate scan — one broadcast hash join,
     no corpus shuffle, exact scoring on survivors only.  The QUERY-vector
-    frame is force-broadcast too (raw floats, not just ids): correct for
-    the serving shape this stage exists for — a query batch orders of
-    magnitude smaller than the corpus — but wrong for corpus-sized query
-    sets (an all-pairs dedup sweep), where a broadcast would ship every
-    float vector to every executor; pass ``broadcast_queries=False``
-    there to let the q_id equi-join shuffle instead (the shortlist side
-    stays broadcast either way — ids only, always small)."""
+    frame is force-broadcast too (raw floats, not just ids): the serving
+    shape this stage exists for has a query batch orders of magnitude
+    smaller than the corpus."""
     if metric not in ("cosine", "l2"):
         raise ValueError(f"exact_rerank: unknown metric {metric!r}")
     # distinct: a multi-table candidate UNION can list the same (q, c)
@@ -773,22 +760,12 @@ def exact_rerank(
         if metric == "cosine"
         else sqdist(F.col("q_vec"), F.col("c_vec"))
     )
-    if broadcast_queries:
-        q_vecs = F.broadcast(q_vecs)
     rescored = (
         cand_vecs.join(F.broadcast(short), "c_id")
-        .join(q_vecs, "q_id")
+        .join(F.broadcast(q_vecs), "q_id")
         .select("q_id", "c_id", scorer.alias(score_col))
     )
-    if round_digits is not None:
-        rescored = rescored.withColumn(score_col, F.round(score_col, round_digits))
-    order = F.desc(score_col) if metric == "cosine" else F.asc(score_col)
-    w = Window.partitionBy("q_id").orderBy(order, "c_id")
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", score_col)
-    )
+    return _topk(rescored, score_col, k, round_digits, ascending=metric == "l2")
 
 
 def ivf_pq_rerank_topk(
@@ -863,111 +840,46 @@ def ivf_pq_topk(
     codebooks; both assignments are projections over the candidate scan;
     the probe join is a hash equi-join on cell id; scoring is m array
     lookups per surviving pair."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"ivf_pq_topk: dim {dim} not divisible by m {m}")
-    coarse = (
-        candidates.orderBy(cand_id)
-        .limit(n_cells)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("coarse_vecs")
-        )
-    )
-    fine = (
-        candidates.orderBy(cand_id)
-        .limit(n_centroids)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("cvecs")
-        )
+    sub = _split(dim, m, "ivf_pq_topk")
+    fine = _lowest_id_vecs(candidates, cand_id, vec_col, n_centroids, "cvecs")
+    return _ivf_pq(
+        queries, candidates, fine, query_id, cand_id, vec_col,
+        n_cells, nprobe, m, sub, k, round_digits, **_FREE_LAYOUT,
     )
 
-    c = (
-        candidates.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("c_vec"))
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("c_vec"), cv)),
-        )
-        .select(
-            "c_id",
-            "c_vec",
-            F.array_position("cdists", F.array_min("cdists")).alias("c_cell"),
-        )
-        .crossJoin(F.broadcast(fine))
-        .select(
-            "c_id",
-            "c_cell",
-            _subdist_tables("c_vec", m, sub, "cvecs", sliced_table=True, cast_x=True, cast_y=True).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            "c_cell",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
-    )
-    probe_w = Window.partitionBy("q_id").orderBy("dist", "q_cell")
-    q = (
+
+def _ivf_pq(
+    queries: DataFrame,
+    candidates: DataFrame,
+    fine: DataFrame,
+    query_id: str,
+    cand_id: str,
+    vec_col: str,
+    n_cells: int,
+    nprobe: int,
+    m: int,
+    sub: int,
+    k: int,
+    round_digits: int | None,
+    **layout,
+) -> DataFrame:
+    """IVF-PQ over raw vectors against the one-row fine-codebook frame
+    ``fine`` (``layout``: its _subdist_tables table and flags); the
+    coarse quantizer is the training-free lowest-id convention."""
+    coarse = _lowest_id_vecs(candidates, cand_id, vec_col, n_cells, "coarse_vecs")
+    c = _with_cell_dists(
+        candidates.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("c_vec")),
+        coarse,
+        "c_vec",
+    ).select("c_id", "c_vec", _nearest("cdists").alias("c_cell"))
+    q = _with_cell_dists(
         queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .localCheckpoint(eager=False)
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("q_vec"), cv)),
-        )
-        .select("q_id", "q_vec", F.posexplode("cdists").alias("pos", "dist"))
-        .withColumn("q_cell", (F.col("pos") + 1).cast("bigint"))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("q_id", "q_vec", "q_cell")
-        .crossJoin(F.broadcast(fine))
-        .select(
-            "q_id",
-            "q_cell",
-            _subdist_tables("q_vec", m, sub, "cvecs", sliced_table=True, cast_x=True, cast_y=True).alias("dtab"),
-        )
+        .localCheckpoint(eager=False),
+        coarse,
+        "q_vec",
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
-    )
-    scored = (
-        c.join(q, F.col("c_cell").eqNullSafe(F.col("q_cell")))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
-    )
+    q = _probe(q, "cdists", ["q_id", "q_vec"], nprobe).select("q_id", "q_vec", "q_cell")
+    return _ivf_adc_topk(c, q, fine, "c_vec", "q_vec", m, sub, k, round_digits, **layout)
 
 
 def ann_recall(
@@ -1033,7 +945,6 @@ def lsh_multitable_topk(
     n_tables: int = 4,
     dim: int = 64,
     round_digits: int | None = 4,
-    scorer: str = "fold",
 ) -> DataFrame:
     """Multi-table sign-LSH top-k — the standard recall repair for
     single-table LSH: L independent bucketings (here: disjoint
@@ -1067,16 +978,8 @@ def lsh_multitable_topk(
             f"= {n_tables * n_bits} exceeds dim ({dim}) — disjoint slices "
             "would read past the vector"
         )
-    q = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_nrm"),
-    ).localCheckpoint(eager=False)
-    c = candidates.select(
-        F.col(cand_id).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_nrm"),
-    )
+    q = _cos_side(queries, query_id, vec_col, "q")
+    c = _cos_side(candidates, cand_id, vec_col, "c")
 
     def tabbed(side: DataFrame, id_col: str, bucket_alias: str, tab_alias: str):
         vec = "q_vec" if id_col == "q_id" else "c_vec"
@@ -1098,27 +1001,17 @@ def lsh_multitable_topk(
         )
 
     pairs = (
-        tabbed(c, "c_id", "c_bucket", "c_tab")
-        .join(
+        _pairs(
+            tabbed(c, "c_id", "c_bucket", "c_tab"),
             F.broadcast(tabbed(q, "q_id", "q_bucket", "q_tab")),
             F.col("q_tab").eqNullSafe(F.col("c_tab"))
             & F.col("q_bucket").eqNullSafe(F.col("c_bucket")),
         )
-        .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "q_vec", "q_nrm", "c_id", "c_vec", "c_nrm")
         .distinct()
     )
-    scored = scored_cosine(
-        pairs, "q_vec", "c_vec", scorer, a_norm="q_nrm", b_norm="c_nrm"
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("cos", F.round("cos", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "cos")
-    )
+    scored = scored_cosine(pairs, "q_vec", "c_vec", a_norm="q_nrm", b_norm="c_nrm")
+    return _topk(scored, "cos", k, round_digits)
 
 
 def train_pq_codebooks(
@@ -1160,9 +1053,7 @@ def train_pq_codebooks(
     (the quantize-on-write argument); callers localCheckpoint the
     returned row to cut the training lineage out of every downstream
     scoring plan."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"train_pq_codebooks: dim {dim} not divisible by m {m}")
+    sub = _split(dim, m, "train_pq_codebooks")
     # FUSED across subspaces (r18 optimization round, guide §1.2/§2.4):
     # one k-means chain over (s, vec_id, sub-vector) rows replaces the m
     # independent per-subspace chains — m x fewer jobs/scans/shuffles per
@@ -1378,23 +1269,24 @@ def pq_encode(
     Determinism: identical coding expressions to pq_topk_books
     (first-minimum array_position per subspace), so codes written by
     this encoder score identically to inline coding."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"pq_encode: dim {dim} not divisible by m {m}")
+    sub = _split(dim, m, "pq_encode")
+    return _pq_encode(candidates, books, cand_id, vec_col, m, sub)
+
+
+def _pq_encode(
+    candidates: DataFrame,
+    books: DataFrame,
+    cand_id: str,
+    vec_col: str,
+    m: int,
+    sub: int,
+    **layout,
+) -> DataFrame:
+    """(c_id, codes) against the one-row codebook frame ``books``."""
     return (
         candidates.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("c_vec"))
         .crossJoin(F.broadcast(books))
-        .select(
-            "c_id",
-            _subdist_tables("c_vec", m, sub).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
+        .select("c_id", _pq_codes("c_vec", m, sub, **layout).alias("codes"))
     )
 
 
@@ -1423,38 +1315,32 @@ def pq_topk_from_codes(
     only) and the q_cosine_topk brute broadcast shape over ~8 B/vector;
     compose an IVF cell equi-join in front exactly as ivf_pq_topk does
     when the corpus outgrows one pass."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"pq_topk_from_codes: dim {dim} not divisible by m {m}")
+    sub = _split(dim, m, "pq_topk_from_codes")
     c = coded.select(F.col(cand_id).alias("c_id"), F.col("codes").alias("codes"))
+    return _pq_from_codes(queries, c, books, query_id, vec_col, m, sub, k, round_digits)
+
+
+def _pq_from_codes(
+    queries: DataFrame,
+    c: DataFrame,
+    books: DataFrame,
+    query_id: str,
+    vec_col: str,
+    m: int,
+    sub: int,
+    k: int,
+    round_digits: int | None,
+    **layout,
+) -> DataFrame:
+    """Brute ADC top-k of coded candidates ``c`` (c_id, codes): each
+    query's sub-distance table against ``books``, broadcast."""
     q = (
         queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("q_vec"))
         .localCheckpoint(eager=False)
         .crossJoin(F.broadcast(books))
-        .select(
-            "q_id",
-            _subdist_tables("q_vec", m, sub).alias("dtab"),
-        )
+        .select("q_id", _subdist_tables("q_vec", m, sub, **layout).alias("dtab"))
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
-    )
+    return _adc_topk(_pairs(c, F.broadcast(q)), m, k, round_digits)
 
 
 def ivf_pq_topk_books(
@@ -1483,93 +1369,10 @@ def ivf_pq_topk_books(
     Scale: two one-row broadcasts (coarse centroids, fine codebooks),
     both assignments projections over the candidate scan, one hash
     equi-join on cell id, m lookups per surviving pair."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"ivf_pq_topk_books: dim {dim} not divisible by m {m}")
-    coarse = (
-        candidates.orderBy(cand_id)
-        .limit(n_cells)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("coarse_vecs")
-        )
-    )
-
-    c = (
-        candidates.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("c_vec"))
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("c_vec"), cv)),
-        )
-        .select(
-            "c_id",
-            "c_vec",
-            F.array_position("cdists", F.array_min("cdists")).alias("c_cell"),
-        )
-        .crossJoin(F.broadcast(books))
-        .select(
-            "c_id",
-            "c_cell",
-            _subdist_tables("c_vec", m, sub).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            "c_cell",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
-    )
-    probe_w = Window.partitionBy("q_id").orderBy("dist", "q_cell")
-    q = (
-        queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .localCheckpoint(eager=False)
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("q_vec"), cv)),
-        )
-        .select("q_id", "q_vec", F.posexplode("cdists").alias("pos", "dist"))
-        .withColumn("q_cell", (F.col("pos") + 1).cast("bigint"))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("q_id", "q_vec", "q_cell")
-        .crossJoin(F.broadcast(books))
-        .select(
-            "q_id",
-            "q_cell",
-            _subdist_tables("q_vec", m, sub).alias("dtab"),
-        )
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
-    )
-    scored = (
-        c.join(q, F.col("c_cell").eqNullSafe(F.col("q_cell")))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
+    sub = _split(dim, m, "ivf_pq_topk_books")
+    return _ivf_pq(
+        queries, candidates, books, query_id, cand_id, vec_col,
+        n_cells, nprobe, m, sub, k, round_digits,
     )
 
 
@@ -1698,61 +1501,18 @@ def ivf_pq_residual_topk(
 
     Scale: identical join shapes to ivf_pq_topk (two one-row broadcasts,
     cell hash equi-join, m lookups per surviving pair)."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(f"ivf_pq_residual_topk: dim {dim} not divisible by m {m}")
-    coarse = (
-        candidates.orderBy(cand_id)
-        .limit(n_cells)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("coarse_vecs")
-        )
-    )
-
-    def resid(vec: Column) -> Column:
-        # residual vs the row's own `cell` (requires coarse_vecs in scope)
-        return F.zip_with(
-            vec,
-            F.element_at(F.col("coarse_vecs"), F.col("cell").cast("int")),
-            lambda x, y: x.cast("double") - y.cast("double"),
-        )
-
-    def with_cell(df: DataFrame, id_alias: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(cand_id if id_alias == "c_id" else query_id).alias(id_alias),
-                F.col(vec_col).alias("_vec"),
-            )
-            .crossJoin(F.broadcast(coarse))
-            .withColumn(
-                "cdists",
-                F.transform(
-                    F.col("coarse_vecs"), lambda cv: sqdist(F.col("_vec"), cv)
-                ),
-            )
-            .withColumn(
-                "cell", F.array_position("cdists", F.array_min("cdists"))
-            )
-        )
-
+    sub = _split(dim, m, "ivf_pq_residual_topk")
+    coarse = _lowest_id_vecs(candidates, cand_id, vec_col, n_cells, "coarse_vecs")
     # residual codebook: ranks n_cells+1 .. n_cells+n_centroids in id
     # order, each residualized against its own nearest cell
     rank_w = Window.orderBy(F.col("c_id"))
     books = (
-        with_cell(candidates.orderBy(cand_id).limit(n_cells + n_centroids), "c_id")
+        _residual_cells(
+            candidates.orderBy(cand_id).limit(n_cells + n_centroids), coarse, cand_id, vec_col
+        )
         .withColumn("_rn", F.row_number().over(rank_w))
         .filter(F.col("_rn") > n_cells)
-        .select(F.col("c_id"), resid(F.col("_vec")).alias("rvec"))
+        .select(F.col("c_id"), _resid(F.col("_vec")).alias("rvec"))
         .agg(
             F.transform(
                 F.array_sort(
@@ -1763,73 +1523,62 @@ def ivf_pq_residual_topk(
         )
         .localCheckpoint(eager=False)
     )
+    c = _residual_cells(candidates, coarse, cand_id, vec_col).select(
+        "c_id", F.col("cell").alias("c_cell"), _resid(F.col("_vec")).alias("c_res")
+    )
+    return _ivf_pq_residual(
+        queries, c, coarse, books, query_id, vec_col, nprobe, m, sub, k, round_digits,
+        table="rvecs", sliced_table=True, cast_x=False, cast_y=False,
+    )
 
-    c = (
-        with_cell(candidates, "c_id")
-        .select("c_id", F.col("cell").alias("c_cell"), resid(F.col("_vec")).alias("c_res"))
-        .crossJoin(F.broadcast(books))
-        .select(
-            "c_id",
-            "c_cell",
-            _subdist_tables("c_res", m, sub, "rvecs", sliced_table=True, cast_x=False, cast_y=False).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            "c_cell",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
+
+def _resid(vec: Column) -> Column:
+    """Residual of ``vec`` vs the row's own ``cell`` centroid (requires
+    coarse_vecs in scope)."""
+    return F.zip_with(
+        vec,
+        F.element_at(F.col("coarse_vecs"), F.col("cell").cast("int")),
+        lambda x, y: x.cast("double") - y.cast("double"),
     )
-    q = (
+
+
+def _residual_cells(
+    df: DataFrame, coarse: DataFrame, cand_id: str, vec_col: str
+) -> DataFrame:
+    """Candidates as (c_id, _vec) with their nearest coarse ``cell``."""
+    return _with_cell_dists(
+        df.select(F.col(cand_id).alias("c_id"), F.col(vec_col).alias("_vec")), coarse, "_vec"
+    ).withColumn("cell", _nearest("cdists"))
+
+
+def _ivf_pq_residual(
+    queries: DataFrame,
+    c: DataFrame,
+    coarse: DataFrame,
+    books: DataFrame,
+    query_id: str,
+    vec_col: str,
+    nprobe: int,
+    m: int,
+    sub: int,
+    k: int,
+    round_digits: int | None,
+    **layout,
+) -> DataFrame:
+    """Residual IVF-PQ scoring of candidate residuals ``c`` (c_id,
+    c_cell, c_res) against the residual codebook frame ``books``: one
+    sub-distance table per (query, probed cell), over the query's
+    residual to that cell."""
+    q = _with_cell_dists(
         queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("_vec"))
-        .localCheckpoint(eager=False)
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("_vec"), cv)),
-        )
-        .select(
-            "q_id", "_vec", "coarse_vecs",
-            F.posexplode("cdists").alias("pos", "dist"),
-        )
-        .withColumn("cell", (F.col("pos") + 1).cast("bigint"))
-        .withColumn("probe_rank", F.row_number().over(
-            Window.partitionBy("q_id").orderBy("dist", "cell")
-        ))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select(
-            "q_id",
-            F.col("cell").alias("q_cell"),
-            resid(F.col("_vec")).alias("q_res"),
-        )
-        .crossJoin(F.broadcast(books))
-        .select(
-            "q_id",
-            "q_cell",
-            _subdist_tables("q_res", m, sub, "rvecs", sliced_table=True, cast_x=False, cast_y=False).alias("dtab"),
-        )
+        .localCheckpoint(eager=False),
+        coarse,
+        "_vec",
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
+    q = _probe(q, "cdists", ["q_id", "_vec", "coarse_vecs"], nprobe, cell="cell").select(
+        "q_id", F.col("cell").alias("q_cell"), _resid(F.col("_vec")).alias("q_res")
     )
-    scored = (
-        c.join(q, F.col("c_cell").eqNullSafe(F.col("q_cell")))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
-    )
+    return _ivf_adc_topk(c, q, books, "c_res", "q_res", m, sub, k, round_digits, **layout)
 
 
 def ivf_pq_residual_topk_trained(
@@ -1878,70 +1627,24 @@ def ivf_pq_residual_topk_trained(
     paid once per index build (quantize-on-write), and the trained books
     collapse to ONE localCheckpoint-ed broadcast row so the scoring plan
     is as shallow as the training-free form's."""
-    sub = dim // m
-    if sub * m != dim:
-        raise ValueError(
-            f"ivf_pq_residual_topk_trained: dim {dim} not divisible by m {m}"
-        )
+    sub = _split(dim, m, "ivf_pq_residual_topk_trained")
     # ONE TakeOrdered pass yields both the coarse centroids and the
     # training-exclusion threshold (max of the n_cells lowest ids);
     # localCheckpoint materializes the one-row frame once so the two
     # projections below never re-run the corpus pass
-    head = (
-        candidates.orderBy(cand_id)
-        .limit(n_cells)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(cand_id).alias("cid"),
-                            F.col(vec_col).alias("cvec"),
-                        )
-                    )
-                ),
-                lambda s: s.cvec,
-            ).alias("coarse_vecs"),
-            F.max(F.col(cand_id)).alias("_mx"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    head = _lowest_id_vecs(
+        candidates, cand_id, vec_col, n_cells, "coarse_vecs", F.max(F.col(cand_id)).alias("_mx")
+    ).localCheckpoint(eager=False)
     coarse = head.select("coarse_vecs")
     thresh = head.select("_mx")
-
-    def resid(vec: Column) -> Column:
-        # residual vs the row's own `cell` (requires coarse_vecs in scope)
-        return F.zip_with(
-            vec,
-            F.element_at(F.col("coarse_vecs"), F.col("cell").cast("int")),
-            lambda x, y: x.cast("double") - y.cast("double"),
-        )
-
-    def with_cell_c(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.col(cand_id).alias("c_id"),
-                F.col(vec_col).alias("_vec"),
-            )
-            .crossJoin(F.broadcast(coarse))
-            .withColumn(
-                "cdists",
-                F.transform(
-                    F.col("coarse_vecs"), lambda cv: sqdist(F.col("_vec"), cv)
-                ),
-            )
-            .withColumn(
-                "cell", F.array_position("cdists", F.array_min("cdists"))
-            )
-        )
 
     # one residual pass serves training AND coding; localCheckpoint cuts
     # the coarse-attach lineage so the m-subspace training loop and the
     # scoring plan both start from a flat frame (the self-join HOF-rebind
     # discipline — see embedding_dup_pairs)
     res_all = (
-        with_cell_c(candidates)
-        .select("c_id", F.col("cell").alias("c_cell"), resid(F.col("_vec")).alias("rvec"))
+        _residual_cells(candidates, coarse, cand_id, vec_col)
+        .select("c_id", F.col("cell").alias("c_cell"), _resid(F.col("_vec")).alias("rvec"))
         .localCheckpoint(eager=False)
     )
     # exclude the zero-residual coarse-centroid rows from TRAINING only
@@ -1954,69 +1657,7 @@ def ivf_pq_residual_topk_trained(
     books = train_pq_codebooks(
         train, "c_id", "rvec", m=m, dim=dim, n_centroids=n_centroids, n_iter=n_iter
     ).localCheckpoint(eager=False)
-
-    c = (
-        res_all.withColumnRenamed("rvec", "c_res")
-        .crossJoin(F.broadcast(books))
-        .select(
-            "c_id",
-            "c_cell",
-            _subdist_tables("c_res", m, sub, cast_x=False).alias("_dtabs"),
-        )
-        .select(
-            "c_id",
-            "c_cell",
-            F.transform(
-                F.col("_dtabs"),
-                lambda d: F.array_position(d, F.array_min(d)).cast("int"),
-            ).alias("codes"),
-        )
-    )
-    q = (
-        queries.select(F.col(query_id).alias("q_id"), F.col(vec_col).alias("_vec"))
-        .localCheckpoint(eager=False)
-        .crossJoin(F.broadcast(coarse))
-        .withColumn(
-            "cdists",
-            F.transform(F.col("coarse_vecs"), lambda cv: sqdist(F.col("_vec"), cv)),
-        )
-        .select(
-            "q_id", "_vec", "coarse_vecs",
-            F.posexplode("cdists").alias("pos", "dist"),
-        )
-        .withColumn("cell", (F.col("pos") + 1).cast("bigint"))
-        .withColumn("probe_rank", F.row_number().over(
-            Window.partitionBy("q_id").orderBy("dist", "cell")
-        ))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select(
-            "q_id",
-            F.col("cell").alias("q_cell"),
-            resid(F.col("_vec")).alias("q_res"),
-        )
-        .crossJoin(F.broadcast(books))
-        .select(
-            "q_id",
-            "q_cell",
-            _subdist_tables("q_res", m, sub, cast_x=False).alias("dtab"),
-        )
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at(F.col("dtab"), s), F.element_at(F.col("codes"), s)),
-    )
-    scored = (
-        c.join(q, F.col("c_cell").eqNullSafe(F.col("q_cell")))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", adc.alias("adc"))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn("adc", F.round("adc", round_digits))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), "c_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "adc")
+    return _ivf_pq_residual(
+        queries, res_all.withColumnRenamed("rvec", "c_res"), coarse, books,
+        query_id, vec_col, nprobe, m, sub, k, round_digits, cast_x=False,
     )

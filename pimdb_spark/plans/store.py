@@ -1,10 +1,12 @@
 """Parquet 'database' directory (SURVEY §2.1 S8/S9 and §7 architecture).
 
-A database is a directory with one parquet dataset per table.  Writing with
-mode=overwrite is the Spark form of pimdb's truncate-before-load
-(database.py:369-371); dropping obsolete tables (database.py:582-586) is
-deleting datasets not in the current table list.  Every table is registered
-as a temp view so ``spark.sql`` serves the pass-through query surface.
+A database is a directory with one parquet dataset per table.  Writing a
+table in full to a temp directory and swapping it in is the Spark form of
+pimdb's truncate-before-load (database.py:369-371), so a failed write
+leaves the old table readable; dropping obsolete tables
+(database.py:582-586) is deleting datasets not in the current table list.
+Every table is registered as a temp view so ``spark.sql`` serves the
+pass-through query surface.
 
 A view is registered once per table version per session: ``register_all``
 re-reads a table only when its path or its files on disk (name, size,
@@ -103,6 +105,20 @@ def swap_directory(path: str, tmp: str) -> None:
         shutil.rmtree(old)
 
 
+def write_swapped(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet to a temp directory next to ``path``, then
+    swap it in (swap_directory).  A failed write leaves ``path`` as it
+    was.  The temp name does not end in ``.parquet``, so
+    ParquetDatabase.table_names never lists it."""
+    tmp = path.rstrip("/") + ".write.tmp"
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    swap_directory(path, tmp)
+
+
 def recover_swap(path: str) -> bool:
     """Repair an interrupted swap_directory: if a crash left
     ``<path>.swap.old``, roll back (restore it as ``path`` when ``path``
@@ -128,8 +144,9 @@ class ParquetDatabase:
         return os.path.join(self.db_dir, f"{table}.parquet")
 
     def write(self, df: DataFrame, table: str) -> None:
-        """Overwrite-write a table."""
-        df.write.mode("overwrite").parquet(self.path(table))
+        """Overwrite a table; a failed write keeps its old rows (see
+        write_swapped)."""
+        write_swapped(df, self.path(table))
 
     def read(self, table: str) -> DataFrame:
         """The table as a DataFrame, with the schema from its footer (see

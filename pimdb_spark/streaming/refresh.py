@@ -53,13 +53,13 @@ def merge_batch(
 
     The merged frame is fully written to a TEMP directory while the
     current table is still intact on disk, then swapped in
-    (store.swap_directory).  Never read-then-overwrite-in-place: that
+    (store.write_swapped).  Never read-then-overwrite-in-place: that
     relies on a cache staying resident for correctness — evicted blocks
     or a lost executor mid-write would recompute the merge from input
     files the overwrite already deleted, corrupting the table.  (With
     Delta/Iceberg this becomes MERGE INTO and the rewrite is confined to
     touched files.)"""
-    from pimdb_spark.plans.store import recover_swap, swap_directory
+    from pimdb_spark.plans.store import recover_swap, write_swapped
 
     if not updates.take(1):
         return
@@ -67,9 +67,7 @@ def merge_batch(
     best = latest_per_key(updates, key_cols, version_col)
     base = spark.read.parquet(table_path)
     merged = snapshot_merge(base, best.select(*base.columns), key_cols)
-    tmp = table_path.rstrip("/") + ".merge.tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swap_directory(table_path, tmp)
+    write_swapped(merged, table_path)
 
 
 def incremental_refresh(

@@ -688,6 +688,24 @@ def test_sql_drops_views_of_vanished_tables(spark, tmp_path):
         db.sql("select count(*) from u")
 
 
+def test_failed_overwrite_keeps_the_old_table(spark, tmp_path):
+    """An overwrite whose job fails leaves the table's old rows in place,
+    so queries on it and on every other table still run."""
+    import pytest
+
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(3), "t")
+    db.write(spark.range(2), "u")
+    failing = spark.range(5).selectExpr("if(id >= 0, raise_error('boom'), id) AS id")
+    with pytest.raises(Exception, match="boom"):
+        db.write(failing, "u")
+    assert sorted(os.listdir(db.db_dir)) == ["t.parquet", "u.parquet"]
+    assert db.sql("select count(*) from t").first()[0] == 3
+    assert sorted(r.id for r in db.read("u").collect()) == [0, 1]
+
+
 def test_sql_views_follow_the_database(built_db, examples_db):
     """Two databases in one session register the same view names over
     different directories; each query answers from its own database."""

@@ -355,10 +355,8 @@ def test_no_plan_red_flags(spark, name, entry):
     plan = plan_of(entry.fn(spark, SF))
     if name not in (
         "q_cosine_topk",
-        "q_cosine_topk_np",
         "q_int8_ann_topk",
         "q_ivf_ann_topk",
-        "q_ivf_ann_topk_np",
         "q_ivf_int8_topk",
         "q_pq_adc_topk",
         "q_pq_from_codes_topk",

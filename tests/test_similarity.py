@@ -4,7 +4,10 @@ percentile sketch must respect its error bound."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from pimdb_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
 
@@ -747,3 +750,60 @@ def test_pq_codes_parquet_round_trip_equals_inline(spark):
             ).collect()
         }
     assert served == inline and len(served) == 24
+
+
+def _pq_from_codes(q, c, k):
+    books = S.train_pq_codebooks(c, "vec_id", m=4, dim=8, n_centroids=4, n_iter=1)
+    coded = S.pq_encode(c, books, "vec_id", m=4, dim=8)
+    return S.pq_topk_from_codes(q, coded, books, "vec_id", m=4, dim=8, k=k)
+
+
+_PQ = {"m": 4, "dim": 8, "n_centroids": 4}
+_TIE_OPS = {
+    "cosine_topk": lambda q, c, k: S.cosine_topk(q, c, "vec_id", "vec_id", k=k),
+    "lsh_ann_topk": lambda q, c, k: S.lsh_ann_topk(q, c, "vec_id", "vec_id", k=k, n_bits=4),
+    "ivf_topk": lambda q, c, k: S.ivf_topk(
+        q, c, "vec_id", "vec_id", n_centroids=2, nprobe=2, k=k
+    ),
+    "pq_topk": lambda q, c, k: S.pq_topk(q, c, "vec_id", "vec_id", k=k, **_PQ),
+    "pq_topk_from_codes": _pq_from_codes,
+    "ivf_pq_topk": lambda q, c, k: S.ivf_pq_topk(
+        q, c, "vec_id", "vec_id", n_cells=2, nprobe=2, k=k, **_PQ
+    ),
+    "ivf_pq_residual_topk": lambda q, c, k: S.ivf_pq_residual_topk(
+        q, c, "vec_id", "vec_id", n_cells=2, nprobe=1, k=k, **_PQ
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TIE_OPS))
+def test_topk_breaks_score_ties_by_candidate_id(spark, op):
+    """Two candidates with identical vectors (ids 12 and 13) tie on every
+    scorer; the query has their vector too, so they are its two best
+    hits.  The lower candidate id takes the lower rank, and exactly k
+    rows come back."""
+    import random
+
+    rng = random.Random(5)
+
+    def vec():
+        # positive components: one sign-LSH bucket for every vector
+        return [round(rng.uniform(0.1, 1.0), 2) for _ in range(8)]
+
+    rows = [(i, vec()) for i in range(12)]
+    twin = vec()
+    rows += [(13, list(twin)), (12, twin)]
+    schema = "vec_id long, embedding array<float>"
+    q = spark.createDataFrame([(100, twin)], schema)
+    c = spark.createDataFrame(rows, schema)
+    got = sorted((r.q_id, r.rank, r.c_id) for r in _TIE_OPS[op](q, c, 2).collect())
+    assert got == [(100, 1, 12), (100, 2, 13)]
+
+
+@pytest.mark.parametrize("scorer", ["numpy", "sum"])
+def test_ivf_topk_rejects_unknown_scorer(spark, scorer):
+    """ivf_topk scores with the fold or int8 only; any other scorer is
+    refused before a plan is built."""
+    df = spark.range(1).selectExpr("id AS vec_id", "array(1.0f) AS embedding")
+    with pytest.raises(ValueError, match="unknown scorer"):
+        S.ivf_topk(df, df, "vec_id", "vec_id", scorer=scorer)
