@@ -5,17 +5,19 @@ table in full to a temp directory and swapping it in is the Spark form of
 pimdb's truncate-before-load (database.py:369-371), so a failed write
 leaves the old table readable; dropping obsolete tables
 (database.py:582-586) is deleting datasets not in the current table list.
-Every table is registered as a temp view so ``spark.sql`` serves the
-pass-through query surface.
+Tables are registered as temp views so ``spark.sql`` serves the
+pass-through query surface: ``sql`` registers the tables its statement
+names, ``register_all`` every table.
 
 A view is registered once per table version per session: ``register_all``
 re-reads a table only when its path or its files on disk (name, size,
 mtime of each) differ from what the session last registered under that
 name, so repeated queries skip re-reading and re-analysing unchanged
 tables.  View names that equal table names are owned by
-ParquetDatabase: ``register_all`` replaces them, and drops each view it
-registered whose table this database does not hold (dropped, deleted on
-disk, or another database's), so a query naming it raises Spark's
+ParquetDatabase: ``register_all`` replaces them (``sql`` the ones its
+statement names), and both drop each view registered whose table this
+database does not hold (dropped, deleted on disk, or another
+database's), so a query naming it raises Spark's
 TABLE_OR_VIEW_NOT_FOUND instead of reading stale or foreign files.
 
 ``read`` starts no schema-inference job for a table Spark wrote: Spark
@@ -32,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pyarrow.parquet as pq
@@ -179,11 +182,22 @@ class ParquetDatabase:
         are unchanged since this session registered it keeps its view and
         costs one directory walk; any write — through this instance,
         another instance or another process — changes the signature."""
+        self._register()
+
+    def _register(self, query: str | None = None) -> None:
+        """register_all, restricted to the tables whose names occur in
+        ``query`` as case-insensitive whole words when one is given: a
+        superset of the tables the query reads, quoted or not.  Views of
+        tables this database does not hold are dropped either way."""
         views = _REGISTERED.setdefault(self.spark._jsparkSession.sessionUUID(), {})
         tables = self.table_names()
         for stale in views.keys() - set(tables):
             self.spark.catalog.dropTempView(stale)
             del views[stale]
+        if query is not None:
+            tables = [
+                t for t in tables if re.search(rf"(?<!\w){re.escape(t)}(?!\w)", query, re.I)
+            ]
         for t in tables:
             path = self.path(t)
             # signature before read: a write racing the read re-registers
@@ -195,5 +209,7 @@ class ParquetDatabase:
             views[t] = entry
 
     def sql(self, query: str) -> DataFrame:
-        self.register_all()
+        """``spark.sql(query)`` over views of the tables it names, so a
+        one-table query does not pay for reading the other tables."""
+        self._register(query)
         return self.spark.sql(query)

@@ -16,9 +16,11 @@ shuffles once on the key columns; the work after it runs in parallel.
 
 from __future__ import annotations
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType
+from pyspark.util import _create_local_socket
 
 from pimdb_spark.schemas import DATASET_COLUMNS, DATASET_KEY_COLUMNS, dataset_schema, type_default
 
@@ -107,8 +109,29 @@ def write_tsv(df: DataFrame, path: str) -> None:
 
 
 def print_tsv(df: DataFrame) -> None:
-    """S5 stdout variant (pimdb/command.py:237): stream partitions via
-    toLocalIterator — never materializes the full result on the driver."""
+    """S5 stdout variant (pimdb/command.py:237): header, then one
+    tab-joined line per row, ``\\N`` for NULL.
+
+    Never holds the full result on the driver: the rows come from
+    ``RDD.toLocalIterator`` over the frame's pickled rows, which runs one
+    job per result partition when the next partition is needed.
+    ``PythonRDD.serveIterator`` writes them to a local socket through a
+    buffered stream, and a full socket stops its thread until this loop
+    reads on.  PySpark's ``DataFrame.toLocalIterator`` serves the same
+    iterator through an unbuffered stream, whose small writes stall on
+    TCP's delayed ACK (~40 ms per partition and once more at the end);
+    ``collect`` avoids the stall but materialises every row.
+
+    The serving thread is created here, so it inherits this thread's job
+    group and the jobs count in the caller's group.  A job that fails
+    ends the stream early without an error on the socket;
+    ``getResult()`` re-raises it after the rows already served.
+    """
     print("\t".join(df.columns))
-    for row in df.toLocalIterator():
-        print("\t".join("\\N" if v is None else str(v) for v in row))
+    rows = df._jdf.javaToPython().rdd().toLocalIterator()
+    port, secret, server = df.sparkSession._jvm.PythonRDD.serveIterator(rows, "print-tsv")
+    # closing the socket on an early exit ends the serving thread
+    with _create_local_socket((port, secret)) as stream:
+        for row in BatchedSerializer(CPickleSerializer()).load_stream(stream):
+            print("\t".join("\\N" if v is None else str(v) for v in row))
+    server.getResult()

@@ -716,3 +716,19 @@ def test_sql_views_follow_the_database(built_db, examples_db):
     assert examples_db.sql(q).first()[0] == n_examples
     assert built_db.sql(q).first()[0] == n_built
 
+
+
+def test_sql_registers_only_the_tables_it_names(built_db):
+    """A fresh session (a new CLI process) reads and registers the table
+    a one-table query names, however it is spelled, and none of the other
+    21."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    assert len(built_db.table_names()) == 22
+    n = built_db.read("title").count()
+    for q in ("title", "TITLE", "`title`", '"title"'):
+        fresh = built_db.spark.newSession()
+        fresh.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+        db = ParquetDatabase(fresh, built_db.db_dir)
+        assert db.sql(f"select count(*) from {q}").first()[0] == n
+        assert [t.name for t in fresh.catalog.listTables() if t.isTemporary] == ["title"], q
