@@ -9,7 +9,8 @@ output column, so Catalyst cannot prune the projection expressions.  A
 bare count() would let the optimizer drop unreferenced projections
 entirely (e.g. q_simhash's hash computation — the one projection the
 query exists to time) and report a parquet row-count scan instead.  This
-is the same drain as scripts/bench_scale.py::_drain; switched here in
+drain and the timing loop (`time_queries`) are shared with
+scripts/bench_subset.py and scripts/bench_scale.py; switched here in
 round 9 (the r1-r8 BENCH files used count(), so projection-only entries
 were understated — see SCALE.md "Bench drain change").
 """
@@ -20,9 +21,11 @@ import json
 import os
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from pimdb_spark import entrypoints as _ep  # noqa: E402
@@ -31,6 +34,46 @@ from pimdb_spark.session import get_spark  # noqa: E402
 
 def _drain(df) -> None:
     df.agg(F.max(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
+
+
+def time_queries(
+    spark: SparkSession,
+    fns: dict[str, Callable[[SparkSession, str], DataFrame]],
+    sf_dir: str,
+    repeats: int = 3,
+) -> dict[str, float]:
+    """{name: best seconds} for fn(spark, sf_dir) plus _drain, min of
+    `repeats` timed runs per query after one untimed warm-up pass.
+
+    The warm-up pass runs every query once so the timed pass measures
+    steady-state execution (whole-stage-codegen compilation, JIT, parquet
+    footer/file-listing caches are one-time JVM costs, not query work).
+    Each timed run builds a fresh DataFrame, so lazy localCheckpoints are
+    re-materialized every time, and the cache is cleared after it: Spark's
+    cache manager matches persisted frames by logical plan, so a kept
+    cache would let the next run skip the persisted stage.  The default
+    min of 3: local[32] on a shared box has multi-hundred-ms scheduler/GC
+    jitter that would otherwise dominate sub-second queries (r7 drifted
+    q1/q5 +29%/+28% with zero code change under min-of-2).  Queries run
+    strictly serially — each drain blocks — so no cross-query stage
+    overlap."""
+    sc = spark.sparkContext
+    spark.range(1).count()
+    for name, fn in fns.items():
+        sc.setJobDescription(f"warmup:{name}")
+        _drain(fn(spark, sf_dir))
+    spark.catalog.clearCache()  # drop warm-up persists; keep JIT/codegen warm
+    timings: dict[str, float] = {}
+    for name, fn in fns.items():
+        best = float("inf")
+        for i in range(repeats):
+            sc.setJobDescription(f"timed{i}:{name}")
+            t0 = time.perf_counter()
+            _drain(fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
+            spark.catalog.clearCache()
+        timings[name] = round(best, 3)
+    return timings
 
 
 def main() -> None:
@@ -42,29 +85,7 @@ def main() -> None:
     spark = get_spark("pimdb-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench = _ep.bench_queries()
-    timings: dict[str, float] = {}
-    # Warm-up pass: run every query once untimed so the timed pass measures
-    # steady-state execution (whole-stage-codegen compilation, JIT, parquet
-    # footer/file-listing caches are one-time JVM costs, not query work).
-    spark.range(1).count()
-    for name, fn in bench.items():
-        _drain(fn(spark, sf_dir))
-    spark.catalog.clearCache()  # drop warm-up persists; keep JIT/codegen warm
-    # Three timed iterations, report the min: local[32] on a shared box has
-    # multi-hundred-ms scheduler/GC jitter that would otherwise dominate
-    # sub-second queries (r7 drifted q1/q5 +29%/+28% with zero code change
-    # under min-of-2; min-of-3 makes round-over-round regressions
-    # attributable to plans, not the scheduler).  Queries run strictly
-    # serially — each .count() blocks — so no cross-query stage overlap.
-    for name, fn in bench.items():
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _drain(fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+    timings = time_queries(spark, _ep.bench_queries(), sf_dir)
     total = round(sum(timings.values()), 3)
     print(
         json.dumps(

@@ -255,46 +255,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_dup_clusters via large-star/small-star contraction
-    (operators/curation.connected_components_star) — identical labeling
-    contract, O(log n) rounds on ANY topology where hash-min needs
-    O(diameter).  Same recursive-CTE oracle as q_dup_clusters."""
-    # every 7th vector duplicated via ONE scan + explode — NOT filter+union:
-    # a Union whose child carries a filter constraint can crash Catalyst's
-    # UnionBase.rewriteConstraints (NoSuchElementException "key not found:
-    # embedding#N", basicLogicalOperators.scala:527) depending on attribute
-    # ids, i.e. on what else ran in the session first; the explode form has
-    # no Union to rewrite and reads the table once instead of twice
-    emb = load(spark, sf_dir, "embeddings")
-    off = emb.agg((F.lit(1) + F.max("vec_id")).alias("_o"))
-    base = emb.crossJoin(F.broadcast(off)).select(
-        F.explode(
-            F.when(
-                F.col("vec_id") % 7 == 0,
-                F.array(F.col("vec_id"), F.col("vec_id") + F.col("_o")),
-            ).otherwise(F.array(F.col("vec_id")))
-        ).alias("vec_id"),
-        "embedding",
-    )
-    pairs = S.embedding_dup_pairs(base, "vec_id", "embedding", n_bits=8, threshold=0.95)
-    return C.connected_components_star(
-        pairs, "id_a", "id_b", nodes=base.select("vec_id")
-    )
-
-
-from pimdb_spark.catalog import _REGISTRY, register_bench_only  # noqa: E402
-
-# Bench-only since the round-10 consolidation: the star-contraction twin's
-# labeling contract is the LITERAL oracle of q_dup_clusters (hash-green
-# while it held a registry slot through r7).  Registering the duplicate
-# oracle keeps the twin under tests/test_catalog_oracle.py's pytest hash
-# gate on top of the star-vs-iterative equality tests and the plan audit.
-register_bench_only("q_dup_clusters_star", oracle=_REGISTRY["q_dup_clusters"].oracle)(
-    q_dup_clusters_star
-)
-
-
 @register(
     "q_weighted_sample",
     oracle="""

@@ -515,8 +515,7 @@ def q_neardup_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every stage is the already-audited shape — banding equi-join
     (never all-pairs), O(diameter) label-propagation rounds with
     localCheckpoint lineage cuts (near-dup components are quasi-cliques,
-    diameter 2-3; the star-contraction twin swaps in for adversarial
-    topologies), one component-keyed size groupBy.  Text never moves past
+    diameter 2-3), one component-keyed size groupBy.  Text never moves past
     the shingle stage; CC shuffles (id, label) pairs only.
 
     max_iter=100 is EXPLICIT (r13 ADVICE): the oracle computes the exact
@@ -527,10 +526,9 @@ def q_neardup_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels, so the divergence can no longer be silent.  The operator
     early-exits the round a pass changes nothing (rounds = diameter; ~3
     on this fixture's exact-copy quasi-cliques), so the generous cap
-    costs nothing when converged and buys diameter-100 safety when it
-    doesn't; a topology
-    past THAT belongs to connected_components_star (O(log n) rounds on
-    any graph)."""
+    costs nothing when converged and buys diameter-99 safety when it
+    doesn't; a duplicate chain longer than that raises, and the fix is a
+    larger max_iter."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     off = docs.agg((F.lit(1) + F.max("doc_id")).alias("_o"))
     copies = (

@@ -21,10 +21,10 @@ Design for 100 TB:
 - Connected components uses hash-min label propagation: O(diameter)
   rounds of (join + min-agg), each one shuffle on the node id.  Near-dup
   graphs have tiny diameters (clusters are quasi-cliques), so 3-5 rounds
-  close even billion-edge graphs; for adversarial long-chain graphs
-  switch to large-star/small-star (same join primitives, O(log n)
-  rounds).  Lineage is cut with localCheckpoint each round so plans
-  don't grow unboundedly.
+  close even billion-edge graphs; a graph whose diameter exceeds the
+  round budget raises instead of returning a partial labeling.  Lineage
+  is cut with localCheckpoint each round so plans don't grow
+  unboundedly.
 """
 
 from __future__ import annotations
@@ -245,9 +245,8 @@ def connected_components(
     Raises RuntimeError if convergence is not CERTIFIED (a zero-change
     round) within max_iter — a partial labeling silently violates every
     downstream contract built on the closure (dedup keep-one-per-cluster,
-    leakage-safe component splits).  For graphs whose diameter may exceed
-    any reasonable round budget, use connected_components_star (O(log n)
-    rounds on any topology).
+    leakage-safe component splits).  A graph of diameter d needs
+    max_iter >= d + 1.
     """
     sym = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d")
@@ -306,117 +305,12 @@ def connected_components(
         # construction" splits by component — a non-converged component
         # could straddle train and eval).  Raising beats warning: the
         # result is wrong for every documented use, and the fix is a
-        # parameter change (larger max_iter) or connected_components_star,
-        # whose O(log n) rounds converge on ANY topology.
+        # parameter change: a max_iter of at least the diameter + 1.
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "hash-min rounds (graph diameter exceeds the budget); raise "
-            "max_iter or use connected_components_star (O(log n) rounds on "
-            "any topology)"
+            "max_iter to at least the graph diameter + 1"
         )
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    nodes: DataFrame | None = None,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Same (id, component) contract as connected_components, via
-    alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    adversarial-diameter escape hatch: hash-min propagation costs
-    O(diameter) rounds (a 10,000-link chain = 10,000 shuffles), star
-    contraction converges in O(log n) rounds on ANY topology because each
-    round rewires whole neighborhoods to their local minimum instead of
-    moving labels one hop.
-
-    Per round: large-star connects every strictly-larger neighbor of each
-    node to the neighborhood minimum (including self), small-star does the
-    same for the smaller-or-equal side on the hi→lo orientation.  Both are
-    one groupBy + one re-join on the node id — two shuffles per round, and
-    the edge set only shrinks toward stars.  Convergence = the canonical
-    edge set's (count, hash-sum) checksum repeating — a metadata-sized
-    driver collect, not an edge comparison join.
-    """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    e = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def checksum(canon: DataFrame) -> tuple[int, int]:
-        # bit_xor, not sum: order-independent set digest that cannot
-        # overflow (ANSI mode makes a long sum of hashes throw)
-        row = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).first()
-        return row.n, row.h
-
-    def canonize(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.filter(F.col("x") != F.col("y"))
-            .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-            .distinct()
-        )
-
-    prev = checksum(e)
-    for _ in range(max_iter):
-        # large-star over the symmetric view: u's neighborhood min m
-        # (including u itself); every neighbor v > u re-wires to (v, m)
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("x"), F.col("m").alias("y"))
-        )
-        e1 = canonize(large).localCheckpoint(eager=True)
-
-        # small-star on the hi→lo orientation: for each hi node, all its
-        # smaller neighbors AND hi itself re-wire to the smallest neighbor
-        lows = e1.groupBy("b").agg(F.min("a").alias("m"))
-        small = (
-            e1.join(lows, "b")
-            .select(F.col("a").alias("x"), F.col("m").alias("y"))
-            .union(
-                lows.select(F.col("b").alias("x"), F.col("m").alias("y"))
-            )
-        )
-        e = canonize(small).localCheckpoint(eager=True)
-
-        cur = checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    # converged star state: one hash-min step labels every node (roots
-    # label themselves via least(min-neighbor, self))
-    sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    labels = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("component")
-    ).select(F.col("u").alias("id"), "component")
-    if nodes is not None:
-        isolated = (
-            nodes.select(F.col(nodes.columns[0]).alias("id"))
-            .distinct()
-            .join(labels, "id", "left_anti")
-            .withColumn("component", F.col("id"))
-        )
-        labels = labels.union(isolated)
     return labels
 
 

@@ -29,10 +29,6 @@ def tokens(text: Column | str, sep: str = " ") -> Column:
     return F.split(text, sep)
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-
 def bpe_ish_token_count(text: Column | str) -> Column:
     """Token-count proxy for BPE vocabularies: split on whitespace AND
     between letter/digit/punctuation class transitions — a cheap regex

@@ -51,18 +51,6 @@ def camelized_dot_name(name: str) -> str:
     return "".join(part[:1].upper() + part[1:] for part in name.split("."))
 
 
-def snake_name(camel: str) -> str:
-    """'primaryTitle' -> 'primary_title'."""
-    out = []
-    for ch in camel:
-        if ch.isupper():
-            out.append("_")
-            out.append(ch.lower())
-        else:
-            out.append(ch)
-    return "".join(out)
-
-
 # (name, sparktype, nullable) per dataset; nullable=False means pimdb coerces
 # \N to a type default with a warning (database.py:328-344).
 _S, _I, _F, _B = StringType(), IntegerType(), DoubleType(), BooleanType()

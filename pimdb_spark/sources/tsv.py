@@ -101,13 +101,6 @@ def read_dataset(
     return dedup_keep_first(df, DATASET_KEY_COLUMNS[dataset])
 
 
-def write_tsv(df: DataFrame, path: str) -> None:
-    """S5 sink: header + tab-joined values, '\\N' for NULL."""
-    df.write.mode("overwrite").csv(
-        path, sep="\t", header=True, nullValue="\\N", quote="", escape="", emptyValue=""
-    )
-
-
 def print_tsv(df: DataFrame) -> None:
     """S5 stdout variant (pimdb/command.py:237): header, then one
     tab-joined line per row, ``\\N`` for NULL.

@@ -12,12 +12,12 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import time_queries  # noqa: E402
 from pimdb_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -88,39 +88,6 @@ def blow_up_events(spark, out_dir: str, copies: int = 10) -> str:
     path = os.path.join(out_dir, "events.parquet")
     out.write.mode("overwrite").parquet(path)
     return out_dir
-
-
-def _drain(df) -> None:
-    # xxhash64 over every output column: forces full evaluation.  A bare
-    # count() lets Catalyst prune unused aggregate/projection expressions
-    # (e.g. an inverted index's postings strings would never be built) and
-    # understates the cost.
-    df.agg(F.max(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
-
-
-def _time(mk) -> float:
-    # mk builds a FRESH DataFrame per call so lazy localCheckpoints inside
-    # an operator (e.g. semdedup's self-join guard) are re-materialized in
-    # every timed run instead of being reused from the warm-up.  persist()
-    # frames are different: Spark's cache manager matches by LOGICAL PLAN,
-    # so a fresh mk() would silently reuse the warm-up's cache and the
-    # timed run would skip the persisted stage entirely — clear the cache
-    # between runs (bench.py's discipline; r15 self-review).
-    from pyspark.sql import SparkSession
-
-    def clear():
-        SparkSession.getActiveSession().catalog.clearCache()
-
-    _drain(mk())  # warm: codegen + scan caches
-    clear()
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _drain(mk())
-        dt = time.perf_counter() - t0
-        clear()
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
 
 
 def main() -> None:
@@ -770,8 +737,11 @@ def main() -> None:
         if only and name not in only:
             continue
         mult = 100 if name in hundred_x else 10
-        t1 = _time(lambda: fn(SF))
-        tn = _time(lambda: fn(work))
+        # one warm-up + min of 2 per side; each run builds a fresh frame
+        t1, tn = (
+            time_queries(spark, {name: lambda _s, d: fn(d)}, d, repeats=2)[name]
+            for d in (SF, work)
+        )
         print(json.dumps({
             "op": name, "sec_1x": t1, f"sec_{mult}x": tn,
             "corpus_mult": mult,

@@ -1,8 +1,8 @@
 """Time a SUBSET of the bench queries with bench.py's exact methodology
-(same session config, same max(xxhash64(*cols)) drain, warm-up pass, then
-min of 3 timed iterations with clearCache between) — the optimization
-round's focused before/after instrument, so a change to one query family
-can be re-measured without paying the full 82-query run.
+(same session config, and bench.py's own drain and timing loop: warm-up
+pass, then min of 3 timed iterations with clearCache between) — the
+optimization round's focused before/after instrument, so a change to one
+query family can be re-measured without paying the full bench run.
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/bench_subset.py q_a q_b ...
 Prints one JSON line {"queries": {name: sec}, "total": sec, "sf": ...}.
@@ -13,19 +13,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import functions as F  # noqa: E402
-
+from bench import time_queries  # noqa: E402
 from pimdb_spark import entrypoints as _ep  # noqa: E402
 from pimdb_spark.session import get_spark  # noqa: E402
-
-
-def _drain(df) -> None:
-    df.agg(F.max(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
 
 
 def main() -> int:
@@ -45,21 +39,7 @@ def main() -> int:
     if unknown:
         print(f"unknown bench queries: {unknown}", file=sys.stderr)
         return 2
-    spark.range(1).count()
-    for name in names:
-        spark.sparkContext.setJobDescription(f"warmup:{name}")
-        _drain(bench[name](spark, sf_dir))
-    spark.catalog.clearCache()
-    timings: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for i in range(3):
-            spark.sparkContext.setJobDescription(f"timed{i}:{name}")
-            t0 = time.perf_counter()
-            _drain(bench[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+    timings = time_queries(spark, {n: bench[n] for n in names}, sf_dir)
     print(json.dumps({"queries": timings, "total": round(sum(timings.values()), 3), "sf": sf}))
     spark.stop()
     return 0

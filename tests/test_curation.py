@@ -73,7 +73,7 @@ def test_pack_sequences_matches_python_model(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("seed", range(4))
+@pytest.mark.parametrize("seed", [0, 1, 2, 3, 7, 21, 63])
 def test_connected_components_matches_bruteforce(spark, seed):
     rng = random.Random(seed)
     n = rng.randint(2, 30)
@@ -177,54 +177,6 @@ def test_seq_packing_budget_invariants(spark):
         for s in ids[:-1]:
             cum += seqs[s]
             assert cum >= (s + 1) * 2000
-
-
-@pytest.mark.parametrize("seed", [7, 21, 63])
-def test_star_contraction_matches_hashmin(spark, seed):
-    """large-star/small-star must produce the identical (id, component)
-    labeling as hash-min propagation on random graphs (isolated vertices
-    included)."""
-    rng = random.Random(seed)
-    n = rng.randint(2, 30)
-    edges = [
-        (rng.randint(0, n - 1), rng.randint(0, n - 1))
-        for _ in range(rng.randint(0, 2 * n))
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    from pimdb_spark.operators.curation import (
-        connected_components,
-        connected_components_star,
-    )
-
-    nodes_df = spark.range(0, n).withColumnRenamed("id", "node")
-    if not edges:
-        edges_df = spark.createDataFrame([], "id_a long, id_b long")
-    else:
-        edges_df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    want = {
-        r.id: r.component
-        for r in connected_components(edges_df, nodes=nodes_df).collect()
-    }
-    got = {
-        r.id: r.component
-        for r in connected_components_star(edges_df, nodes=nodes_df).collect()
-    }
-    assert got == want
-
-
-def test_star_contraction_beats_diameter(spark):
-    """A 200-node path (diameter 199) converges within 10 star rounds —
-    the O(log n) bound hash-min propagation cannot meet (it would need
-    ~199 rounds).  This is the adversarial-diameter case the star variant
-    exists for."""
-    from pimdb_spark.operators.curation import connected_components_star
-
-    edges_df = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], ["id_a", "id_b"]
-    )
-    out = connected_components_star(edges_df, max_iter=10).collect()
-    assert {r.component for r in out} == {0}
-    assert len(out) == 200
 
 
 def test_table_profile_nulls_and_distincts(spark):

@@ -335,13 +335,6 @@ def test_no_plan_red_flags(spark, name, entry):
       sketch build itself is one map-side-combined groupBy (the CMS
       shape), and the exact side is the quality-gate ground truth
       (rank lookup via one full sort, the ann_recall discipline).
-    - q_dup_clusters_star: ONE one-row broadcast attach (the
-      1 + max(vec_id) planted-copy offset, r17 — retired the literal
-      +100,000); the contraction itself is groupBy + re-join equi-joins
-      per round.  (The hash-min twin q_dup_clusters carries the same
-      attach but localCheckpoints every round, so its FINAL plan is
-      lineage-cut and never shows the attach — same shape, different
-      visibility.)
     - q_incremental_split_inherit: TWO one-row broadcast attaches (the
       1 + max(doc_id) planted-copy offset used by both fixture slices);
       the fence proper is the audited banding equi-joins (new x new and
@@ -400,7 +393,6 @@ def test_no_plan_red_flags(spark, name, entry):
         "q_hard_negatives",
         "q_knn_label_errors",
         "q_quantile_sketch",
-        "q_dup_clusters_star",
         "q_incremental_split_inherit",
         "q_snapshot_diff",
         "q_snapshot_merge",
