@@ -569,8 +569,9 @@ from pimdb_spark.catalog import register_bench_only  # noqa: E402
 )
 def q_jpeg_color_stats_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:0-SUBSAMPLED color baseline-JPEG pixel decode, hash-checked
-    end to end (operators/multimodal.jpeg_decode_pixels_420 — closes the
-    long-documented 4:4:4-only NON-GOAL): synth payloads are fully valid
+    end to end through image_channel_stats and the one baseline decoder
+    (operators/multimodal.jpeg_decode_pixels, which reads each
+    component's sampling factors from SOF): synth payloads are fully valid
     SOF0 files in the camera/web layout — Y at 2x2 sampling, Cb/Cr at
     1x1, each 16x16 MCU carrying 4 Y blocks + Cb + Cr with independent
     DC predictors — decoded through the general baseline path plus
@@ -596,4 +597,4 @@ def q_jpeg_color_stats_420(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
     payloads = M.synth_jpeg_color_420_payload(docs, "doc_id")
-    return M.image_channel_stats_420(payloads, "doc_id", "payload")
+    return M.image_channel_stats(payloads, "doc_id", "payload")

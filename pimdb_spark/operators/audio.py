@@ -10,17 +10,16 @@ the header.  (Reference parity note: the reference engine, pimdb, has no
 media path at all — this family is part of the beyond-parity
 training-data-pipeline surface the brief asks for.)
 
-Scale: decode is mapInPandas over (id, payload) — Arrow batches, one task
-holds batch_size payloads, zero shuffle; stats are exact integer sums so
+Scale: decode is mapInPandas over (id, payload) through the media
+family's one entry shape (operators/multimodal.map_rows) — Arrow batches,
+one task holds batch_size payloads, zero shuffle; stats are exact integer sums so
 the only float op is a single bit-stable division.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -30,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pimdb_spark.operators.multimodal import map_rows
 
 __all__ = [
     "encode_wav",
@@ -72,7 +73,8 @@ def parse_wav_header(data: bytes) -> tuple[int, int, int, int]:
     """REAL RIFF walk: returns (channels, sample_rate, bits_per_sample,
     n_samples).  Iterates chunks (fmt / data / anything else skipped, odd
     sizes padded per spec); raises ValueError — never IndexError — on
-    non-WAV, truncated, or non-PCM input."""
+    non-WAV, truncated, or non-PCM input, and on zero channels or a zero
+    sample rate (either would divide by zero downstream)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("parse_wav_header: not a RIFF/WAVE file")
     pos = 12
@@ -104,6 +106,8 @@ def parse_wav_header(data: bytes) -> tuple[int, int, int, int]:
         raise ValueError(f"parse_wav_header: only 16-bit PCM supported (bits {bits})")
     if channels < 1:
         raise ValueError("parse_wav_header: zero channels")
+    if rate == 0:
+        raise ValueError("parse_wav_header: zero sample rate")
     n_samples = n_data // (channels * 2)
     return channels, rate, bits, n_samples
 
@@ -145,18 +149,14 @@ def synth_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so an SQL oracle can predict exactly what a REAL decode must recover.
     Arrow-batched mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 200 + (i * 37) % 600
-                ch = 1 + i % 2
-                rate = 8000 * (1 + i % 2)
-                rows.append((i, encode_wav(n, rate, ch, seed=i)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        n = 200 + (i * 37) % 600
+        ch = 1 + i % 2
+        rate = 8000 * (1 + i % 2)
+        return [(i, encode_wav(n, rate, ch, seed=i))]
 
-    return df.select(id_col).mapInPandas(synth, AUDIO_SYNTH_SCHEMA)
+    return map_rows(df, [id_col], AUDIO_SYNTH_SCHEMA, synth)
 
 
 AUDIO_STATS_SCHEMA = StructType(
@@ -184,38 +184,22 @@ def audio_stats(
     Scale: Arrow-batched mapInPandas; one task holds batch_size payloads;
     zero shuffle."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                channels, rate, samples = wav_decode_samples(data)
-                n = len(samples) // channels
-                rows.append(
-                    (
-                        int(doc_id),
-                        channels,
-                        rate,
-                        n,
-                        n * 1000.0 / rate,
-                        sum(samples),
-                        max((abs(s) for s in samples), default=0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_channels",
-                    "sample_rate",
-                    "n_samples",
-                    "duration_ms",
-                    "sum_amplitude",
-                    "peak",
-                ],
+    def stats(doc_id, payload) -> list[tuple]:
+        channels, rate, samples = wav_decode_samples(bytes(payload))
+        n = len(samples) // channels
+        return [
+            (
+                int(doc_id),
+                channels,
+                rate,
+                n,
+                n * 1000.0 / rate,
+                sum(samples),
+                max((abs(s) for s in samples), default=0),
             )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(stats, AUDIO_STATS_SCHEMA)
+    return map_rows(df, [id_col, payload_col], AUDIO_STATS_SCHEMA, stats)
 
 
 FINGERPRINT_SCHEMA = StructType(
@@ -249,32 +233,28 @@ def audio_fingerprint(
     Scale: Arrow-batched mapInPandas; zero shuffle; 3 longs out per clip
     regardless of duration."""
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                channels, _rate, samples = wav_decode_samples(bytes(payload))
-                n = len(samples) // channels
-                ws = [0] * windows
-                wn = [0] * windows
-                for t in range(n):
-                    wi = t * windows // n
-                    base = t * channels
-                    for c in range(channels):
-                        ws[wi] += abs(samples[base + c])
-                    wn[wi] += channels
-                ts, tn = sum(ws), n * channels
-                lo = hi = 0
-                for wi in range(windows):
-                    if ws[wi] * tn > ts * wn[wi]:
-                        if wi < 32:
-                            lo |= 1 << wi
-                        else:
-                            hi |= 1 << (wi - 32)
-                rows.append((int(doc_id), lo, hi))
-            yield pd.DataFrame(rows, columns=["doc_id", "hash_lo", "hash_hi"])
+    def fp(doc_id, payload) -> list[tuple]:
+        channels, _rate, samples = wav_decode_samples(bytes(payload))
+        n = len(samples) // channels
+        ws = [0] * windows
+        wn = [0] * windows
+        for t in range(n):
+            wi = t * windows // n
+            base = t * channels
+            for c in range(channels):
+                ws[wi] += abs(samples[base + c])
+            wn[wi] += channels
+        ts, tn = sum(ws), n * channels
+        lo = hi = 0
+        for wi in range(windows):
+            if ws[wi] * tn > ts * wn[wi]:
+                if wi < 32:
+                    lo |= 1 << wi
+                else:
+                    hi |= 1 << (wi - 32)
+        return [(int(doc_id), lo, hi)]
 
-    return df.select(id_col, payload_col).mapInPandas(fp, FINGERPRINT_SCHEMA)
+    return map_rows(df, [id_col, payload_col], FINGERPRINT_SCHEMA, fp)
 
 
 def synth_audio_variants(
@@ -301,25 +281,21 @@ def synth_audio_variants(
     while unrelated clips land ~30+ bits apart.  Arrow-batched
     mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                seed, perturb = i // group, i % group
-                seed16 = (seed * 2654435761) % 65536
-                n = 320 + (seed % 5) * 64
-                frames = bytearray()
-                for t in range(n):
-                    loud = (seed16 >> (t * 16 // n)) & 1
-                    frames += struct.pack(
-                        "<h",
-                        ((seed * 31 + t * 17) % 16000) * (1 + loud) + perturb,
-                    )
-                fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                body += b"data" + struct.pack("<I", len(frames)) + bytes(frames)
-                rows.append((i, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        seed, perturb = i // group, i % group
+        seed16 = (seed * 2654435761) % 65536
+        n = 320 + (seed % 5) * 64
+        frames = bytearray()
+        for t in range(n):
+            loud = (seed16 >> (t * 16 // n)) & 1
+            frames += struct.pack(
+                "<h",
+                ((seed * 31 + t * 17) % 16000) * (1 + loud) + perturb,
+            )
+        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        body += b"data" + struct.pack("<I", len(frames)) + bytes(frames)
+        return [(i, b"RIFF" + struct.pack("<I", len(body)) + body)]
 
-    return df.select(id_col).mapInPandas(synth, AUDIO_SYNTH_SCHEMA)
+    return map_rows(df, [id_col], AUDIO_SYNTH_SCHEMA, synth)

@@ -1,13 +1,20 @@
 """Multimodal-column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched Pandas functions
-(mapInPandas).
+with typed metadata, processed via Arrow-batched Pandas functions.  Every
+media operator (here, operators/audio.py and operators/video.py) enters
+Python through the one ``map_rows`` shape: mapInPandas over a few
+columns, one per-row function returning that row's output rows.
 
 Image decoding is REAL for the container formats whose headers are
 parseable in pure Python — PNG, GIF (87a/89a), BMP, and JPEG (see
-``parse_image_header``); full-pixel decoding of exotic formats still
-needs Pillow (picked up automatically when installed).  Payloads with
-unrecognized magic bytes fall back to a clearly-marked deterministic
-stub (``_fake_decode``) unless ``strict=True``, which refuses them.
+``parse_image_header``).  Pixel decoding is real for the same four
+formats, behind one magic-byte dispatch (``_decode_pixels``): PNG
+inflate + filters, BMP rows, GIF LZW (one block walk, ``gif_images``,
+shared with the video frame decoder) and one baseline JPEG decoder
+(``jpeg_decode_pixels``) for grayscale, 4:4:4 and 4:2:0 YCbCr.  Header
+decoding of exotic formats still needs Pillow (picked up automatically
+when installed).  Payloads with unrecognized magic bytes fall back to a
+clearly-marked deterministic stub (``_fake_decode``) in
+``decode_images`` unless ``strict=True``, which refuses them.
 
 Scale notes: binary payloads stay columnar (parquet BINARY) end to end;
 mapInPandas streams Arrow batches so one task holds batch_size payloads,
@@ -21,17 +28,15 @@ import hashlib
 import math
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -45,6 +50,26 @@ try:  # real decoder if available (not in this container)
     _HAVE_PIL = True
 except ImportError:
     _HAVE_PIL = False
+
+
+def map_rows(
+    df: DataFrame, cols: list[str], schema: StructType, fn: Callable[..., list[tuple]]
+) -> DataFrame:
+    """The media operators' one Arrow entry shape: mapInPandas over
+    ``df.select(*cols)`` where ``fn(*values)`` maps one input row to a list
+    of output rows (tuples in ``schema`` field order — one row for most
+    operators, several for a frame sampler).  Each Arrow batch becomes
+    one pandas frame, so a task holds batch_size payloads at a time."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for values in zip(*(pdf[c] for c in cols)):
+                rows.extend(fn(*values))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema)
 
 
 def with_binary_payload(df: DataFrame, text_col: str, mime: str = "application/octet-stream") -> DataFrame:
@@ -325,71 +350,107 @@ def bmp_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
     return w, h, bytes(out)
 
 
-def gif_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
-    """REAL pixel decode of a (non-interlaced) GIF, pure Python: general
-    variable-width LZW decompression of the image data sub-blocks, palette
-    lookup through the global/local color table.  Returns (width, height,
-    RGB triples, top-down row-major).  Raises ValueError for non-GIF,
-    truncated, or interlaced images (never IndexError — every byte read
-    while walking extensions/sub-blocks is bounds-checked, so trailing
-    junk or a cut-off stream surfaces as the contracted exception)."""
-    w, h, mode = parse_image_header(data)
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("gif_decode_pixels: not a GIF")
+def gif_images(
+    data: bytes, who: str
+) -> Iterator[tuple[int, int, int, int, list[tuple[int, int, int]], list[int]]]:
+    """The GIF block walk both GIF decoders share (gif_decode_pixels below
+    and operators/video.gif_decode_frames): reads the global color table,
+    skips extension blocks and yields, per image descriptor, (left, top,
+    width, height, palette, LZW-decoded palette indices), the palette
+    being the descriptor's local color table when it has one, else the
+    global one.  Ends at the trailer.  A lazy generator, so a caller that
+    wants the first image reads nothing after it.  Every byte read is
+    bounds-checked: truncation, interlacing, an unknown block or a corrupt
+    LZW stream raises ValueError tagged with ``who`` (never IndexError)."""
 
     def at(p: int) -> int:
         if p >= len(data):
-            raise ValueError("gif_decode_pixels: truncated GIF")
+            raise ValueError(f"{who}: truncated GIF")
         return data[p]
 
     def read_palette(p: int, n: int) -> tuple[list[tuple[int, int, int]], int]:
         if p + 3 * n > len(data):
-            raise ValueError("gif_decode_pixels: truncated color table")
+            raise ValueError(f"{who}: truncated color table")
         return [tuple(data[p + 3 * i : p + 3 * i + 3]) for i in range(n)], p + 3 * n
 
     packed = at(10)
     pos = 13
-    palette: list[tuple[int, int, int]] = []
+    gct: list[tuple[int, int, int]] = []
     if packed & 0x80:
-        palette, pos = read_palette(pos, 2 ** ((packed & 7) + 1))
-    while at(pos) == 0x21:  # extension blocks: label + sub-blocks
-        pos += 2
-        while at(pos) != 0:
-            pos += 1 + at(pos)
+        gct, pos = read_palette(pos, 2 ** ((packed & 7) + 1))
+    while True:
+        b = at(pos)
+        if b == 0x3B:  # trailer
+            return
+        if b == 0x21:  # extension: label + sub-blocks
+            pos += 2
+            while at(pos) != 0:
+                pos += 1 + at(pos)
+            pos += 1
+            continue
+        if b != 0x2C:
+            raise ValueError(f"{who}: unexpected block 0x{b:02x}")
+        ipacked = at(pos + 9)
+        left, top, fw, fh = struct.unpack("<HHHH", data[pos + 1 : pos + 9])
+        pos += 10
+        if ipacked & 0x40:
+            raise ValueError(f"{who}: interlaced GIFs unsupported")
+        palette = gct
+        if ipacked & 0x80:  # local color table overrides
+            palette, pos = read_palette(pos, 2 ** ((ipacked & 7) + 1))
+        min_code = at(pos)
+        # codes are at most 12 bits wide; a larger size would make the LZW
+        # decoder build a 2**min_code-entry table
+        if min_code > 11:
+            raise ValueError(f"{who}: LZW minimum code size {min_code} over 11")
         pos += 1
-    if at(pos) != 0x2C:
-        raise ValueError("gif_decode_pixels: image descriptor not found")
-    ipacked = at(pos + 9)
-    pos += 10
-    if ipacked & 0x40:
-        raise ValueError("gif_decode_pixels: interlaced GIFs unsupported")
-    if ipacked & 0x80:  # local color table overrides
-        palette, pos = read_palette(pos, 2 ** ((ipacked & 7) + 1))
-    min_code = at(pos)
-    pos += 1
-    stream = bytearray()
-    while at(pos) != 0:
-        n = at(pos)
-        if pos + 1 + n > len(data):
-            raise ValueError("gif_decode_pixels: truncated image sub-block")
-        stream += data[pos + 1 : pos + 1 + n]
-        pos += 1 + n
+        stream = bytearray()
+        while at(pos) != 0:
+            n = at(pos)
+            if pos + 1 + n > len(data):
+                raise ValueError(f"{who}: truncated image sub-block")
+            stream += data[pos + 1 : pos + 1 + n]
+            pos += 1 + n
+        pos += 1  # block terminator
+        yield left, top, fw, fh, palette, gif_lzw_decode(bytes(stream), min_code, who)
 
-    out = gif_lzw_decode(bytes(stream), min_code, "gif_decode_pixels")
+
+def gif_rgb(palette: list[tuple[int, int, int]], indices, who: str) -> bytes:
+    """Palette lookup of GIF indices to RGB triples; an index outside the
+    color table (or any index with no table at all) raises ValueError."""
+    if indices and max(indices) >= len(palette):
+        raise ValueError(f"{who}: pixel index outside color table")
+    return b"".join(bytes(palette[i]) for i in indices)
+
+
+def gif_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
+    """REAL pixel decode of a (non-interlaced) GIF's first image, pure
+    Python, through the shared block walk ``gif_images``: general
+    variable-width LZW decompression of the image data sub-blocks, palette
+    lookup through the global/local color table.  Returns (width, height,
+    RGB triples, top-down row-major) at the logical screen size.  Raises
+    ValueError for non-GIF, truncated, or interlaced images (never
+    IndexError — every byte read while walking extensions/sub-blocks is
+    bounds-checked, so a cut-off stream surfaces as the contracted
+    exception); bytes after the first image are never read."""
+    w, h, _mode = parse_image_header(data)
+    if data[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("gif_decode_pixels: not a GIF")
+    image = next(gif_images(data, "gif_decode_pixels"), None)
+    if image is None:
+        raise ValueError("gif_decode_pixels: image descriptor not found")
+    palette, out = image[4], image[5]
     if len(out) < w * h:
         raise ValueError("gif_decode_pixels: pixel stream short")
-    pixels = out[: w * h]
-    if palette and max(pixels) >= len(palette):
-        raise ValueError("gif_decode_pixels: pixel index outside color table")
-    return w, h, b"".join(bytes(palette[i]) for i in pixels)
+    return w, h, gif_rgb(palette, out[: w * h], "gif_decode_pixels")
 
 
 def gif_lzw_decode(stream: bytes, min_code: int, err: str = "gif_lzw_decode") -> list[int]:
     """General variable-width GIF LZW decompression of a concatenated
     sub-block stream: LSB-first codes, dynamic table growth to 12 bits,
     clear/end handling.  Returns palette indices; raises ValueError (tagged
-    with ``err``) on corrupt codes.  Shared by the single-image pixel
-    decoder above and the multi-frame video walker (operators/video.py)."""
+    with ``err``) on corrupt codes.  Called by the shared GIF block walk
+    (gif_images) for every image."""
     clear, end = 1 << min_code, (1 << min_code) + 1
     base = {i: (i,) for i in range(clear)}
     table: dict[int, tuple[int, ...]] = dict(base)
@@ -429,8 +490,9 @@ def gif_lzw_decode(stream: bytes, min_code: int, err: str = "gif_lzw_decode") ->
 # decoder pair.  The decoder implements the full general baseline path —
 # DQT/DHT/SOF0/SOS marker parse, canonical Huffman decode built from the
 # file's OWN DHT segments, byte-unstuffed bit reading, DC prediction,
-# zigzag, dequantization, a genuine 2-D IDCT, level shift — for any
-# non-subsampled 8-bit baseline stream.  Bit-exactness for the oracle
+# zigzag, dequantization, a genuine 2-D IDCT, level shift — for 8-bit
+# baseline streams in the grayscale, 4:4:4 and 4:2:0 sampling layouts
+# (chroma upsampled by pixel replication).  Bit-exactness for the oracle
 # fixtures comes from the INPUT structure, not decoder shortcuts: pixels
 # constant per 8x8 block have a DC-only DCT, and with the DC quant step
 # equal to the DCT's own gain (8) the quantized DC is exactly
@@ -458,6 +520,8 @@ _JPEG_COS = [
     [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)] for x in range(8)
 ]
 _JPEG_C = [math.sqrt(0.5)] + [1.0] * 7
+# the IDCT's row factor cos((2y+1)v*pi/16) * C(v), indexed [y][v]
+_JPEG_CY = [[_JPEG_COS[y][v] * _JPEG_C[v] for v in range(8)] for y in range(8)]
 # quant table (natural order): DC step 8 (the DCT gain — constant blocks
 # quantize losslessly), AC step 16.
 _JPEG_QUANT = [8] + [16] * 63
@@ -594,8 +658,9 @@ def _encode_block(bw, block, pred: int, dc_codes, ac_codes) -> int:
         bw.write(code, length)
         bw.write(q[k] if q[k] > 0 else q[k] + (1 << asize) - 1, asize)
         run = 0
-    ec, el = ac_codes[0x00]
-    bw.write(ec, el)  # EOB
+    if run:  # EOB codes trailing zeros only; a nonzero 63rd coefficient ends the block
+        ec, el = ac_codes[0x00]
+        bw.write(ec, el)
     return q[0]
 
 
@@ -635,6 +700,57 @@ def encode_jpeg_color(width: int, height: int, seed: int = 0) -> bytes:
         0xC0,
         struct.pack(">BHHB", 8, height, width, 3)
         + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
+    )
+    dht = _jpeg_seg(
+        0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
+    ) + _jpeg_seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_SYMBOLS))
+    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
+    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
+
+
+def encode_jpeg_color_420(width: int, height: int, seed: int = 0) -> bytes:
+    """Fully valid baseline (SOF0) 3-component 4:2:0 YCbCr JPEG — Y at
+    2x2 sampling, Cb/Cr at 1x1, the layout virtually every camera and
+    web JPEG uses: each 16x16 MCU carries FOUR Y blocks (left-to-right,
+    top-to-bottom per spec) then one Cb and one Cr block covering the
+    whole MCU at half resolution.  Dimensions must be multiples of 16
+    (full MCUs — keeps the generative oracle exact; real decoders pad).
+
+    Generative formulas (the SQL oracle replays them): luma constant per
+    8x8 block via _color_planes(seed, bx, by)[0] over the LUMA block
+    grid; chroma constant per MCU via _color_planes(seed, mx, my)[1:]
+    over the MCU grid — so chroma genuinely varies per MCU and a decoder
+    that skips the subsampled Cb/Cr entropy decode or upsamples from the
+    wrong grid cannot pass.  Block-constant planes survive the lossy
+    pipeline bit-exact (every quantized AC is 0, DC quant step 8 = DCT
+    gain), exactly as encode_jpeg_color."""
+    if width % 16 or height % 16:
+        raise ValueError(
+            "encode_jpeg_color_420: dimensions must be multiples of 16 "
+            f"(got {width}x{height})"
+        )
+    dc_codes = _canonical_codes(_DC_BITS, _DC_SYMBOLS)
+    ac_codes = _canonical_codes(_AC_BITS, _AC_SYMBOLS)
+    bw = _BitWriter()
+    preds = [0, 0, 0]
+    mcus_x, mcus_y = width // 16, height // 16
+    for my in range(mcus_y):
+        for mx in range(mcus_x):
+            for by in range(2):
+                for bx in range(2):
+                    yv = _color_planes(seed, 2 * mx + bx, 2 * my + by)[0]
+                    block = [[yv - 128] * 8 for _ in range(8)]
+                    preds[0] = _encode_block(bw, block, preds[0], dc_codes, ac_codes)
+            _, cbv, crv = _color_planes(seed, mx, my)
+            for ci, v in ((1, cbv), (2, crv)):
+                block = [[v - 128] * 8 for _ in range(8)]
+                preds[ci] = _encode_block(bw, block, preds[ci], dc_codes, ac_codes)
+    scan = bw.flush()
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes(_JPEG_QUANT[pos] for pos in _ZIGZAG))
+    sof = _jpeg_seg(
+        0xC0,
+        struct.pack(">BHHB", 8, height, width, 3)
+        + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
     )
     dht = _jpeg_seg(
         0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
@@ -694,23 +810,98 @@ def _extend(v: int, size: int) -> int:
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
+# SOF sampling bytes (h << 4 | v per component) of the layouts decoded:
+# grayscale, 4:4:4 and 4:2:0 (Y 2x2, Cb/Cr 1x1)
+_JPEG_LAYOUTS = ([0x11], [0x11, 0x11, 0x11], [0x22, 0x11, 0x11])
+
+
+def _decode_block(br: _BitReader, pred: int, qt, dc_table, ac_table) -> tuple[int, list[int]]:
+    """Entropy-decode one 8x8 block: DC prediction, AC run-length, zigzag
+    placement, dequantization.  Returns (new DC predictor, the 64
+    coefficients in natural order)."""
+    coef = [0] * 64
+    size = _huff_decode(br, dc_table)
+    pred += _extend(br.bits(size), size) if size else 0
+    coef[0] = pred * qt[0]
+    k = 1
+    while k < 64:
+        rs = _huff_decode(br, ac_table)
+        if rs == 0x00:
+            break
+        if rs == 0xF0:
+            k += 16
+            continue
+        k += rs >> 4
+        if k > 63:
+            raise ValueError("jpeg_decode_pixels: AC index overflow")
+        asize = rs & 15
+        coef[_ZIGZAG[k]] = _extend(br.bits(asize), asize) * qt[_ZIGZAG[k]]
+        k += 1
+    return pred, coef
+
+
+def _idct_block(coef: list[int], plane: bytearray, pw: int, ph: int, ox: int, oy: int) -> None:
+    """Full 2-D IDCT, level shift and clamp of one block into the
+    ``pw x ph`` plane at (ox, oy), computing only the samples inside the
+    plane (the right and bottom blocks of a partial MCU are clipped).
+    Each sample sums the nonzero coefficients in natural order, the same
+    float operations in the same order as the textbook double loop, so
+    the output is bit-stable."""
+    nz = [(k >> 3, k & 7, _JPEG_C[k & 7] * c) for k, c in enumerate(coef) if c]
+    for y in range(min(8, ph - oy)):
+        cy = _JPEG_CY[y]
+        row = (oy + y) * pw + ox
+        for x in range(min(8, pw - ox)):
+            cx = _JPEG_COS[x]
+            s = 0.0
+            for v, u, a in nz:
+                s += a * cx[u] * cy[v]
+            val = int(round(s / 4.0)) + 128
+            plane[row + x] = 0 if val < 0 else 255 if val > 255 else val
+
+
+def _upsample(plane: bytearray, pw: int, fx: int, fy: int, w: int, h: int) -> bytearray:
+    """Pixel-replication chroma upsampling (libjpeg's non-fancy upsample):
+    each sample of the ``pw``-wide plane covers an ``fx x fy`` block of
+    the ``w x h`` image.  Bit-deterministic, and exact for any chroma
+    plane constant per MCU."""
+    if fx == fy == 1:
+        return plane
+    out = bytearray(w * h)
+    for py in range(h):
+        src = plane[(py // fy) * pw : (py // fy + 1) * pw]
+        line = bytearray(pw * fx)
+        for k in range(fx):
+            line[k::fx] = src
+        out[py * w : (py + 1) * w] = line[:w]
+    return out
+
+
 def jpeg_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
     """REAL baseline-JPEG pixel decode, pure Python: marker walk, DQT /
     DHT (canonical Huffman rebuilt from the file's own tables) / SOF0 /
     SOS parse, byte-unstuffed bit reading, DC prediction, zigzag
     placement, dequantization, full 2-D IDCT, level shift + clamp.
-    Supports 8-bit baseline streams with 1x1 sampling (grayscale or
-    4:4:4 YCbCr — chroma SUBSAMPLING still raises) and no restart
-    markers; grayscale replicates to RGB triples, 3-component scans
-    convert YCbCr->RGB with dyadic-rational constants and floor rounding
-    (see the conversion comment below) so the SQL oracle reproduces
-    every channel exactly.  Returns (width, height, RGB bytes)."""
+
+    Each component's sampling factors come from SOF; an interleaved MCU
+    carries H x V blocks per component (left to right, top to bottom),
+    and each component's plane is ceil(width * H / Hmax) x
+    ceil(height * V / Vmax) — the IDCT runs only for samples inside it.
+    Supported layouts: grayscale 1x1, 4:4:4 YCbCr, and 4:2:0 (Y 2x2,
+    Cb/Cr 1x1 — the camera/web default); any other sampling raises
+    ``subsampling unsupported``, as do restart markers and non-baseline
+    frames.  Grayscale replicates to RGB triples; 3-component scans
+    upsample chroma by pixel replication, then convert YCbCr->RGB with
+    dyadic-rational constants and floor rounding (see the conversion
+    comment below) so the SQL oracle reproduces every channel exactly.
+    Returns (width, height, RGB bytes); malformed input raises
+    ValueError, never IndexError."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("jpeg_decode_pixels: not a JPEG (no SOI)")
     quant: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     w = h = 0
-    comps: list[tuple[int, int]] = []  # (component id, quant table id)
+    comps: list[tuple[int, ...]] = []  # (component id, h/v sampling, quant table id)
     scan_comps: list[tuple[int, int, int]] = []  # (comp idx, dc tbl, ac tbl)
     i = 2
     while i + 4 <= len(data):
@@ -734,10 +925,9 @@ def jpeg_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
                     raise ValueError("jpeg_decode_pixels: 16-bit DQT unsupported")
                 if len(body) < j + 65:
                     raise ValueError("jpeg_decode_pixels: truncated DQT")
-                zz = list(body[j + 1 : j + 65])
                 nat = [0] * 64
                 for k, pos in enumerate(_ZIGZAG):
-                    nat[pos] = zz[k]
+                    nat[pos] = body[j + 1 + k]
                 quant[tq] = nat
                 j += 65
         elif marker == 0xC4:
@@ -753,20 +943,22 @@ def jpeg_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
                 huff[(tc, th)] = {(l, c): s for s, (c, l) in codes.items()}
                 j += 17 + nsym
         elif marker == 0xC0:
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("jpeg_decode_pixels: truncated SOF")
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            if len(body) < 6 + 3 * ncomp:
-                raise ValueError("jpeg_decode_pixels: truncated SOF")
-            if ncomp not in (1, 3):
+            if body[5] not in (1, 3):
                 raise ValueError(
                     "jpeg_decode_pixels: only 1- or 3-component baseline supported"
                 )
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                if hv != 0x11:
-                    raise ValueError("jpeg_decode_pixels: subsampling unsupported")
-                comps.append((cid, tq))
+            comps = [tuple(body[6 + 3 * c : 9 + 3 * c]) for c in range(body[5])]
+            layout = [hv for _, hv, _ in comps]
+            if layout not in _JPEG_LAYOUTS:
+                raise ValueError(
+                    "jpeg_decode_pixels: subsampling unsupported (h/v "
+                    + " ".join(f"{hv:02x}" for hv in layout)
+                    + "; grayscale 11, 4:4:4 11 11 11 and 4:2:0 22 11 11 decode)"
+                )
         elif 0xC1 <= marker <= 0xCF and marker != 0xC4:
             raise ValueError("jpeg_decode_pixels: non-baseline frame type")
         elif marker == 0xDD:
@@ -779,7 +971,7 @@ def jpeg_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
                 raise ValueError("jpeg_decode_pixels: truncated SOS")
             for c in range(ns):
                 cs, tbl = body[1 + 2 * c], body[2 + 2 * c]
-                matches = [k for k, (cid, _) in enumerate(comps) if cid == cs]
+                matches = [k for k, comp in enumerate(comps) if comp[0] == cs]
                 if not matches:
                     raise ValueError(
                         "jpeg_decode_pixels: SOS references unknown component"
@@ -790,94 +982,90 @@ def jpeg_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
         i += 2 + ln
     if not scan_comps or not w or not h:
         raise ValueError("jpeg_decode_pixels: missing SOF/SOS")
-    if len(scan_comps) != len(comps) or len(scan_comps) not in (1, 3):
+    if sorted(c for c, _, _ in scan_comps) != list(range(len(comps))):
         raise ValueError("jpeg_decode_pixels: scan must cover all components")
-    br = _BitReader(data, i)
-    tables = []
+    units = []  # per scan component: (comp idx, quant, DC and AC Huffman tables)
     for cidx, dc_t, ac_t in scan_comps:
-        qt = quant.get(comps[cidx][1])
+        qt = quant.get(comps[cidx][2])
         dc_table, ac_table = huff.get((0, dc_t)), huff.get((1, ac_t))
         if qt is None or dc_table is None or ac_table is None:
             raise ValueError(
                 "jpeg_decode_pixels: scan references missing DQT/DHT"
             )
-        tables.append((qt, dc_table, ac_table))
-    mcus_x, mcus_y = (w + 7) // 8, (h + 7) // 8
-    nc = len(scan_comps)
-    planes = [bytearray(w * h) for _ in range(nc)]
-    preds = [0] * nc
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci in range(nc):
-                qt, dc_table, ac_table = tables[ci]
-                coef = [0] * 64
-                size = _huff_decode(br, dc_table)
-                preds[ci] += _extend(br.bits(size), size) if size else 0
-                coef[0] = preds[ci] * qt[0]
-                k = 1
-                while k < 64:
-                    rs = _huff_decode(br, ac_table)
-                    if rs == 0x00:
-                        break
-                    if rs == 0xF0:
-                        k += 16
-                        continue
-                    k += rs >> 4
-                    if k > 63:
-                        raise ValueError("jpeg_decode_pixels: AC index overflow")
-                    asize = rs & 15
-                    coef[_ZIGZAG[k]] = (
-                        _extend(br.bits(asize), asize) * qt[_ZIGZAG[k]]
-                    )
-                    k += 1
-                plane = planes[ci]
-                for y in range(8):
-                    py = my * 8 + y
-                    if py >= h:
-                        break
-                    row = py * w
-                    for x in range(8):
-                        px = mx * 8 + x
-                        if px >= w:
-                            break
-                        s = 0.0
-                        for v in range(8):
-                            cyv = _JPEG_COS[y][v] * _JPEG_C[v]
-                            base = v * 8
-                            for u in range(8):
-                                c = coef[base + u]
-                                if c:
-                                    s += _JPEG_C[u] * c * _JPEG_COS[x][u] * cyv
-                        val = int(round(s / 4.0)) + 128
-                        plane[row + px] = (
-                            0 if val < 0 else 255 if val > 255 else val
+        units.append((cidx, qt, dc_table, ac_table))
+    sampling = [(hv >> 4, hv & 15) for _, hv, _ in comps]
+    hmax = max(sh for sh, _ in sampling)
+    vmax = max(sv for _, sv in sampling)
+    dims = [((w * sh + hmax - 1) // hmax, (h * sv + vmax - 1) // vmax) for sh, sv in sampling]
+    planes = [bytearray(pw * ph) for pw, ph in dims]
+    preds = [0] * len(comps)
+    br = _BitReader(data, i)
+    for my in range((h + 8 * vmax - 1) // (8 * vmax)):
+        for mx in range((w + 8 * hmax - 1) // (8 * hmax)):
+            for cidx, qt, dc_table, ac_table in units:
+                (sh, sv), (pw, ph) = sampling[cidx], dims[cidx]
+                for by in range(sv):
+                    for bx in range(sh):
+                        preds[cidx], coef = _decode_block(
+                            br, preds[cidx], qt, dc_table, ac_table
+                        )
+                        _idct_block(
+                            coef, planes[cidx], pw, ph, (mx * sh + bx) * 8, (my * sv + by) * 8
                         )
     rgb = bytearray(w * h * 3)
-    if nc == 1:
+    if len(comps) == 1:
         gray = planes[0]
         rgb[0::3] = gray
         rgb[1::3] = gray
         rgb[2::3] = gray
-    else:
-        # YCbCr (4:4:4) -> RGB with DYADIC-RATIONAL constants and floor
-        # rounding, chosen for cross-engine exactness (the SQL oracle
-        # reproduces every channel with integer/floor arithmetic):
-        #   R = Y + 45/32*(Cr-128)        (1.40625  ~ JFIF 1.402)
-        #   G = Y - (11*(Cb-128) + 23*(Cr-128))/32
-        #                                 (0.34375 / 0.71875 ~ 0.344/0.714)
-        #   B = Y + 113/64*(Cb-128)       (1.765625 ~ JFIF 1.772)
-        # Python // floors; all intermediates are exact integers.
-        yp, cbp, crp = planes
-        for idx in range(w * h):
-            yv, dcb, dcr = yp[idx], cbp[idx] - 128, crp[idx] - 128
-            r = yv + (45 * dcr) // 32
-            g = yv + (-(11 * dcb + 23 * dcr)) // 32
-            b = yv + (113 * dcb) // 64
-            o = idx * 3
-            rgb[o] = 0 if r < 0 else 255 if r > 255 else r
-            rgb[o + 1] = 0 if g < 0 else 255 if g > 255 else g
-            rgb[o + 2] = 0 if b < 0 else 255 if b > 255 else b
+        return w, h, bytes(rgb)
+    # YCbCr -> RGB with DYADIC-RATIONAL constants and floor rounding,
+    # chosen for cross-engine exactness (the SQL oracle reproduces every
+    # channel with integer/floor arithmetic):
+    #   R = Y + 45/32*(Cr-128)        (1.40625  ~ JFIF 1.402)
+    #   G = Y - (11*(Cb-128) + 23*(Cr-128))/32
+    #                                 (0.34375 / 0.71875 ~ 0.344/0.714)
+    #   B = Y + 113/64*(Cb-128)       (1.765625 ~ JFIF 1.772)
+    # Python // floors; all intermediates are exact integers.
+    yp = planes[0]
+    cbp, crp = (
+        _upsample(planes[c], dims[c][0], hmax // sampling[c][0], vmax // sampling[c][1], w, h)
+        for c in (1, 2)
+    )
+    for idx in range(w * h):
+        yv, dcb, dcr = yp[idx], cbp[idx] - 128, crp[idx] - 128
+        r = yv + (45 * dcr) // 32
+        g = yv + (-(11 * dcb + 23 * dcr)) // 32
+        b = yv + (113 * dcb) // 64
+        o = idx * 3
+        rgb[o] = 0 if r < 0 else 255 if r > 255 else r
+        rgb[o + 1] = 0 if g < 0 else 255 if g > 255 else g
+        rgb[o + 2] = 0 if b < 0 else 255 if b > 255 else b
     return w, h, bytes(rgb)
+
+
+def _decode_pixels(data: bytes, who: str) -> tuple[int, int, bytes]:
+    """Magic-byte dispatch to the pixel decoders above — PNG, BMP, GIF and
+    baseline JPEG (grayscale, 4:4:4 or 4:2:0) — the decode step of
+    image_channel_stats and image_ahash.  Returns (width, height, RGB
+    triples, top-down row-major).  Any other magic, and an image with no
+    pixels, raises ValueError tagged with ``who``."""
+    if data[:8] == _PNG_SIG:
+        decode = png_decode_pixels
+    elif data[:2] == b"BM":
+        decode = bmp_decode_pixels
+    elif data[:6] in (b"GIF87a", b"GIF89a"):
+        decode = gif_decode_pixels
+    elif data[:2] == b"\xff\xd8":
+        decode = jpeg_decode_pixels
+    else:
+        raise ValueError(
+            f"{who}: pixel decode supports PNG/BMP/GIF/JPEG only (magic {data[:4]!r})"
+        )
+    w, h, px = decode(data)
+    if w <= 0 or h <= 0:
+        raise ValueError(f"{who}: zero-area image ({w}x{h})")
+    return w, h, px
 
 
 CHANNEL_STATS_SCHEMA = StructType(
@@ -895,49 +1083,29 @@ CHANNEL_STATS_SCHEMA = StructType(
 def image_channel_stats(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Per-channel pixel means from REAL pixel decoding (PNG via inflate +
-    filter reconstruction, BMP via row parsing, GIF via general LZW +
-    palette lookup, baseline JPEG via Huffman + dequant + IDCT) — the
+    """Per-channel pixel means from REAL pixel decoding (``_decode_pixels``:
+    PNG via inflate + filter reconstruction, BMP via row parsing, GIF via
+    general LZW + palette lookup, baseline JPEG — grayscale, 4:4:4 or
+    4:2:0 — via Huffman + dequant + IDCT + chroma upsampling) — the
     feature-extraction step of an image-curation pipeline, done on actual
     pixel data in pure Python.  Channel sums are exact integers, so
     mean = sum/count is one bit-stable double division —
-    oracle-checkable.  Unsupported formats raise ValueError at decode
-    time: this operator never fakes pixel statistics.
+    oracle-checkable.  Unsupported formats and zero-area images raise
+    ValueError at decode time: this operator never fakes pixel
+    statistics.
 
     Scale: Arrow-batched mapInPandas; one task holds batch_size payloads;
     zero shuffle."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                if data[:8] == _PNG_SIG:
-                    w, h, px = png_decode_pixels(data)
-                elif data[:2] == b"BM":
-                    w, h, px = bmp_decode_pixels(data)
-                elif data[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, px = gif_decode_pixels(data)
-                elif data[:2] == b"\xff\xd8":
-                    w, h, px = jpeg_decode_pixels(data)
-                else:
-                    raise ValueError(
-                        "image_channel_stats: pixel decode supports "
-                        f"PNG/BMP/GIF/JPEG only (magic {data[:4]!r})"
-                    )
-                n = w * h
-                sr = sum(px[0::3])
-                sg = sum(px[1::3])
-                sb = sum(px[2::3])
-                rows.append(
-                    (int(doc_id), w, h, sr / n, sg / n, sb / n)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
+    def stats(doc_id, payload) -> list[tuple]:
+        w, h, px = _decode_pixels(bytes(payload), "image_channel_stats")
+        n = w * h
+        sr = sum(px[0::3])
+        sg = sum(px[1::3])
+        sb = sum(px[2::3])
+        return [(int(doc_id), w, h, sr / n, sg / n, sb / n)]
 
-    return df.select(id_col, payload_col).mapInPandas(stats, CHANNEL_STATS_SCHEMA)
+    return map_rows(df, [id_col, payload_col], CHANNEL_STATS_SCHEMA, stats)
 
 
 AHASH_SCHEMA = StructType(
@@ -953,8 +1121,9 @@ def image_ahash(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", grid: int = 8
 ) -> DataFrame:
     """Perceptual average-hash over REAL decoded pixels: the image-dedup
-    primitive.  Pixels are decoded (PNG/GIF/BMP, same decoders as
-    image_channel_stats), reduced to integer luma ``(r+g+b)//3``, pooled
+    primitive.  Pixels are decoded (PNG/GIF/BMP/JPEG, through the same
+    ``_decode_pixels`` dispatch as image_channel_stats), reduced to integer
+    luma ``(r+g+b)//3``, pooled
     into a ``grid x grid`` block grid (block membership ``x*grid//w`` —
     pure integer floors), and each block emits bit 1 iff its mean
     exceeds the image mean.  The comparison is cross-multiplied
@@ -973,49 +1142,33 @@ def image_ahash(
     Scale: Arrow-batched mapInPandas; zero shuffle; output is 3 longs
     per image regardless of resolution."""
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                if data[:8] == _PNG_SIG:
-                    w, h, px = png_decode_pixels(data)
-                elif data[:2] == b"BM":
-                    w, h, px = bmp_decode_pixels(data)
-                elif data[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, px = gif_decode_pixels(data)
-                elif data[:2] == b"\xff\xd8":
-                    w, h, px = jpeg_decode_pixels(data)
-                else:
-                    raise ValueError(
-                        f"image_ahash: PNG/BMP/GIF/JPEG only (magic {data[:4]!r})"
-                    )
-                bs = [[0] * grid for _ in range(grid)]
-                bn = [[0] * grid for _ in range(grid)]
-                for y in range(h):
-                    by = y * grid // h
-                    row = y * w
-                    for x in range(w):
-                        p = (row + x) * 3
-                        l = (px[p] + px[p + 1] + px[p + 2]) // 3
-                        bx = x * grid // w
-                        bs[by][bx] += l
-                        bn[by][bx] += 1
-                ts = sum(map(sum, bs))
-                tn = w * h
-                lo = hi = 0
-                for by in range(grid):
-                    for bx in range(grid):
-                        if bs[by][bx] * tn > ts * bn[by][bx]:
-                            bit = by * grid + bx
-                            if bit < 32:
-                                lo |= 1 << bit
-                            else:
-                                hi |= 1 << (bit - 32)
-                rows.append((int(doc_id), lo, hi))
-            yield pd.DataFrame(rows, columns=["doc_id", "hash_lo", "hash_hi"])
+    def ahash(doc_id, payload) -> list[tuple]:
+        w, h, px = _decode_pixels(bytes(payload), "image_ahash")
+        bs = [[0] * grid for _ in range(grid)]
+        bn = [[0] * grid for _ in range(grid)]
+        for y in range(h):
+            by = y * grid // h
+            row = y * w
+            for x in range(w):
+                p = (row + x) * 3
+                l = (px[p] + px[p + 1] + px[p + 2]) // 3
+                bx = x * grid // w
+                bs[by][bx] += l
+                bn[by][bx] += 1
+        ts = sum(map(sum, bs))
+        tn = w * h
+        lo = hi = 0
+        for by in range(grid):
+            for bx in range(grid):
+                if bs[by][bx] * tn > ts * bn[by][bx]:
+                    bit = by * grid + bx
+                    if bit < 32:
+                        lo |= 1 << bit
+                    else:
+                        hi |= 1 << (bit - 32)
+        return [(int(doc_id), lo, hi)]
 
-    return df.select(id_col, payload_col).mapInPandas(hashes, AHASH_SCHEMA)
+    return map_rows(df, [id_col, payload_col], AHASH_SCHEMA, ahash)
 
 
 def image_dup_pairs(
@@ -1101,24 +1254,20 @@ def synth_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     recover (catalog q_multimodal_decode).  Payloads are fully valid files
     (see the encoders above).  Arrow-batched mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = 16 + (i * 7) % 48
-                h = 16 + (i * 13) % 48
-                fmt = ("png", "gif", "bmp")[i % 3]
-                if fmt == "png":
-                    payload = encode_png(w, h, seed=i)
-                elif fmt == "gif":
-                    payload = encode_gif(w, h)
-                else:
-                    payload = encode_bmp(w, h, seed=i)
-                rows.append((i, payload, fmt))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "fmt"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w = 16 + (i * 7) % 48
+        h = 16 + (i * 13) % 48
+        fmt = ("png", "gif", "bmp")[i % 3]
+        if fmt == "png":
+            payload = encode_png(w, h, seed=i)
+        elif fmt == "gif":
+            payload = encode_gif(w, h)
+        else:
+            payload = encode_bmp(w, h, seed=i)
+        return [(i, payload, fmt)]
 
-    return df.select(id_col).mapInPandas(synth, SYNTH_SCHEMA)
+    return map_rows(df, [id_col], SYNTH_SCHEMA, synth)
 
 
 def synth_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1130,17 +1279,13 @@ def synth_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     % 256.  Fully valid SOF0 files — DQT/DHT/SOF0/SOS + entropy-coded
     scan.  Arrow-batched mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = 16 + (i * 7) % 48
-                h = 16 + (i * 13) % 48
-                rows.append((i, encode_jpeg(w, h, seed=i), "jpeg"))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "fmt"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w = 16 + (i * 7) % 48
+        h = 16 + (i * 13) % 48
+        return [(i, encode_jpeg(w, h, seed=i), "jpeg")]
 
-    return df.select(id_col).mapInPandas(synth, SYNTH_SCHEMA)
+    return map_rows(df, [id_col], SYNTH_SCHEMA, synth)
 
 
 def synth_jpeg_color_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1151,17 +1296,29 @@ def synth_jpeg_color_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     dyadic-rational YCbCr conversion.  Fully valid interleaved SOF0
     files.  Arrow-batched mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = 16 + (i * 7) % 48
-                h = 16 + (i * 13) % 48
-                rows.append((i, encode_jpeg_color(w, h, seed=i), "jpeg"))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "fmt"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w = 16 + (i * 7) % 48
+        h = 16 + (i * 13) % 48
+        return [(i, encode_jpeg_color(w, h, seed=i), "jpeg")]
 
-    return df.select(id_col).mapInPandas(synth, SYNTH_SCHEMA)
+    return map_rows(df, [id_col], SYNTH_SCHEMA, synth)
+
+
+def synth_jpeg_color_420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Deterministic 4:2:0 baseline-JPEG payload synthesis: dimensions
+    16*(1 + (id*7) % 4) x 16*(1 + (id*13) % 4) (full MCUs, 16-64 px),
+    luma per 8x8 block and chroma per 16x16 MCU via _color_planes — the
+    generative formulas the SQL oracle replays.  Arrow-batched
+    mapInPandas; zero shuffle."""
+
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w = 16 * (1 + (i * 7) % 4)
+        h = 16 * (1 + (i * 13) % 4)
+        return [(i, encode_jpeg_color_420(w, h, seed=i), "jpeg")]
+
+    return map_rows(df, [id_col], SYNTH_SCHEMA, synth)
 
 
 def decode_images(
@@ -1189,125 +1346,28 @@ def decode_images(
     and JPEG decode for real; any other format is refused under strict
     and stubbed otherwise."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                if decoder is not None:
-                    width, height, mode = decoder(data)
-                else:
-                    try:
-                        width, height, mode = parse_image_header(data)
-                    except ValueError:
-                        if _HAVE_PIL:  # pragma: no cover - not in container
-                            import io
-
-                            from PIL import Image
-
-                            img = Image.open(io.BytesIO(data))
-                            width, height, mode = img.width, img.height, img.mode
-                        elif strict:
-                            raise
-                        else:
-                            width, height, mode = _fake_decode(data)
-                rows.append((int(doc_id), int(width), int(height), mode, len(data)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "mode", "n_bytes"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(decode, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("thumb", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
-    max_side: int = 32,
-) -> DataFrame:
-    """Arrow-batched resize: decode → scale longest side to ``max_side`` →
-    re-encode.  Uses PIL when installed; the stub derives deterministic
-    scaled dimensions from the fake decode and truncates the payload as the
-    'thumbnail' so schema, batching, and output size behavior are real."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                if _HAVE_PIL:  # pragma: no cover - not in this container
+    def decode(doc_id, payload) -> list[tuple]:
+        data = bytes(payload)
+        if decoder is not None:
+            width, height, mode = decoder(data)
+        else:
+            try:
+                width, height, mode = parse_image_header(data)
+            except ValueError:
+                if _HAVE_PIL:  # pragma: no cover - not in container
                     import io
 
                     from PIL import Image
 
                     img = Image.open(io.BytesIO(data))
-                    img.thumbnail((max_side, max_side))
-                    buf = io.BytesIO()
-                    img.save(buf, format="PNG")
-                    rows.append((int(doc_id), img.width, img.height, buf.getvalue()))
+                    width, height, mode = img.width, img.height, img.mode
+                elif strict:
+                    raise
                 else:
-                    try:  # real header dims when the format is parseable
-                        w, h, _mode = parse_image_header(data)
-                    except ValueError:
-                        w, h, _mode = _fake_decode(data)
-                    scale = max_side / max(w, h)
-                    rows.append(
-                        (int(doc_id), max(1, int(w * scale)), max(1, int(h * scale)),
-                         data[: max_side * max_side // 8])
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "thumb"])
+                    width, height, mode = _fake_decode(data)
+        return [(int(doc_id), int(width), int(height), mode, len(data))]
 
-    return df.select(id_col, payload_col).mapInPandas(resize, RESIZED_SCHEMA)
-
-
-def frame_sample(df: DataFrame, id_col: str, payload_col: str, n_frames: int = 4) -> DataFrame:
-    """'Video' frame sampling stub: split the payload into n_frames equal
-    byte ranges (the real implementation seeks keyframes).  Pure column
-    expressions — the explode pattern is the part that matters at scale."""
-    total = F.length(F.col(payload_col))
-    # substring works on BINARY natively — no string cast, which would
-    # corrupt non-UTF-8 payloads; frame_head stays bytes
-    frames = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: F.substring(
-            F.col(payload_col), (i * (total / n_frames)).cast("int") + 1, 8
-        ),
-    )
-    return df.select(
-        F.col(id_col),
-        F.posexplode(frames).alias("frame_no", "frame_head"),
-    )
-
-
-def feature_extract(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", dim: int = 8) -> DataFrame:
-    """STUB feature extractor: deterministic pseudo-embedding from the
-    payload hash via a Pandas UDF-style mapInPandas (stands in for a real
-    vision/audio model; batch shape and Arrow transfer are the real thing)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("feature", ArrayType(FloatType())),
-        ]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                h = hashlib.md5(bytes(payload)).digest()
-                vec = [round((h[i] - 128) / 128.0, 6) for i in range(dim)]
-                out.append((int(doc_id), vec))
-            yield pd.DataFrame(out, columns=["doc_id", "feature"])
-
-    return df.select(id_col, payload_col).mapInPandas(extract, schema)
+    return map_rows(df, [id_col, payload_col], DECODED_SCHEMA, decode)
 
 
 def payload_meta(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1319,294 +1379,3 @@ def payload_meta(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.length(payload).alias("n_bytes"),
         F.md5(F.col(text_col)).alias("checksum"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 4:2:0 chroma subsampling (r12 — closes the long-documented NON-GOAL).
-# Deliberately self-contained: jpeg_decode_pixels (the 4:4:4 path) and
-# image_channel_stats stay byte-untouched so their r10-attested catalog
-# entries are not "changed" under the rotation's re-attestation rule; the
-# shared-walk refactor folds in when the window budget next frees.
-# ---------------------------------------------------------------------------
-
-
-def encode_jpeg_color_420(width: int, height: int, seed: int = 0) -> bytes:
-    """Fully valid baseline (SOF0) 3-component 4:2:0 YCbCr JPEG — Y at
-    2x2 sampling, Cb/Cr at 1x1, the layout virtually every camera and
-    web JPEG uses: each 16x16 MCU carries FOUR Y blocks (left-to-right,
-    top-to-bottom per spec) then one Cb and one Cr block covering the
-    whole MCU at half resolution.  Dimensions must be multiples of 16
-    (full MCUs — keeps the generative oracle exact; real decoders pad).
-
-    Generative formulas (the SQL oracle replays them): luma constant per
-    8x8 block via _color_planes(seed, bx, by)[0] over the LUMA block
-    grid; chroma constant per MCU via _color_planes(seed, mx, my)[1:]
-    over the MCU grid — so chroma genuinely varies per MCU and a decoder
-    that skips the subsampled Cb/Cr entropy decode or upsamples from the
-    wrong grid cannot pass.  Block-constant planes survive the lossy
-    pipeline bit-exact (every quantized AC is 0, DC quant step 8 = DCT
-    gain), exactly as encode_jpeg_color."""
-    if width % 16 or height % 16:
-        raise ValueError(
-            "encode_jpeg_color_420: dimensions must be multiples of 16 "
-            f"(got {width}x{height})"
-        )
-    dc_codes = _canonical_codes(_DC_BITS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_SYMBOLS)
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    mcus_x, mcus_y = width // 16, height // 16
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for by in range(2):
-                for bx in range(2):
-                    yv = _color_planes(seed, 2 * mx + bx, 2 * my + by)[0]
-                    block = [[yv - 128] * 8 for _ in range(8)]
-                    preds[0] = _encode_block(bw, block, preds[0], dc_codes, ac_codes)
-            _, cbv, crv = _color_planes(seed, mx, my)
-            for ci, v in ((1, cbv), (2, crv)):
-                block = [[v - 128] * 8 for _ in range(8)]
-                preds[ci] = _encode_block(bw, block, preds[ci], dc_codes, ac_codes)
-    scan = bw.flush()
-    dqt = _jpeg_seg(0xDB, b"\x00" + bytes(_JPEG_QUANT[pos] for pos in _ZIGZAG))
-    sof = _jpeg_seg(
-        0xC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = _jpeg_seg(
-        0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_SYMBOLS)
-    ) + _jpeg_seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_SYMBOLS))
-    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def _decode_block_420(br, pred: int, qt, dc_table, ac_table):
-    """Decode one 8x8 block (DC prediction, AC run-length, dequant, full
-    2-D IDCT, level shift + clamp) — the jpeg_decode_pixels inner block
-    verbatim, factored for the 4:2:0 decoder.  Returns (new_pred,
-    64 spatial samples row-major)."""
-    coef = [0] * 64
-    size = _huff_decode(br, dc_table)
-    pred += _extend(br.bits(size), size) if size else 0
-    coef[0] = pred * qt[0]
-    k = 1
-    while k < 64:
-        rs = _huff_decode(br, ac_table)
-        if rs == 0x00:
-            break
-        if rs == 0xF0:
-            k += 16
-            continue
-        k += rs >> 4
-        if k > 63:
-            raise ValueError("jpeg_decode_pixels_420: AC index overflow")
-        asize = rs & 15
-        coef[_ZIGZAG[k]] = _extend(br.bits(asize), asize) * qt[_ZIGZAG[k]]
-        k += 1
-    out = [0] * 64
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for v in range(8):
-                cyv = _JPEG_COS[y][v] * _JPEG_C[v]
-                base = v * 8
-                for u in range(8):
-                    c = coef[base + u]
-                    if c:
-                        s += _JPEG_C[u] * c * _JPEG_COS[x][u] * cyv
-            val = int(round(s / 4.0)) + 128
-            out[y * 8 + x] = 0 if val < 0 else 255 if val > 255 else val
-    return pred, out
-
-
-def jpeg_decode_pixels_420(data: bytes) -> tuple[int, int, bytes]:
-    """REAL baseline-JPEG pixel decode for the 4:2:0 layout (Y 2x2,
-    Cb/Cr 1x1 — the camera/web default jpeg_decode_pixels deliberately
-    raises on): marker walk, DQT/DHT/SOF0/SOS parse, interleaved MCU
-    entropy decode (4 Y blocks + Cb + Cr per 16x16 MCU, independent DC
-    predictors), dequant + full IDCT per block, then PIXEL-REPLICATION
-    chroma upsampling (each Cb/Cr sample covers a 2x2 luma quad — the
-    libjpeg non-fancy upsample; bit-deterministic, and exact for any
-    chroma plane constant per MCU) and the house dyadic-rational
-    YCbCr->RGB conversion.  Any other sampling layout raises — 4:4:4 and
-    grayscale stay jpeg_decode_pixels' contract.  Returns
-    (width, height, RGB bytes)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jpeg_decode_pixels_420: not a JPEG (no SOI)")
-    quant: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    w = h = 0
-    comps: list[tuple[int, int, int]] = []  # (component id, hv, quant id)
-    scan_comps: list[tuple[int, int, int]] = []
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("jpeg_decode_pixels_420: marker sync lost")
-        marker = data[i + 1]
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        ln = int.from_bytes(data[i + 2 : i + 4], "big")
-        body = data[i + 4 : i + 2 + ln]
-        if ln < 2 or len(body) != ln - 2:
-            raise ValueError("jpeg_decode_pixels_420: truncated marker segment")
-        if marker == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 15
-                if pq != 0:
-                    raise ValueError("jpeg_decode_pixels_420: 16-bit DQT unsupported")
-                if len(body) < j + 65:
-                    raise ValueError("jpeg_decode_pixels_420: truncated DQT")
-                nat = [0] * 64
-                for k, pos in enumerate(_ZIGZAG):
-                    nat[pos] = body[j + 1 + k]
-                quant[tq] = nat
-                j += 65
-        elif marker == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 15
-                bits = list(body[j + 1 : j + 17])
-                nsym = sum(bits)
-                syms = list(body[j + 17 : j + 17 + nsym])
-                if len(bits) < 16 or len(syms) < nsym:
-                    raise ValueError("jpeg_decode_pixels_420: truncated DHT")
-                codes = _canonical_codes(bits, syms)
-                huff[(tc, th)] = {(l, c): s for s, (c, l) in codes.items()}
-                j += 17 + nsym
-        elif marker == 0xC0:
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            if ncomp != 3 or len(body) < 6 + 3 * ncomp:
-                raise ValueError(
-                    "jpeg_decode_pixels_420: 3-component 4:2:0 only "
-                    "(use jpeg_decode_pixels for grayscale/4:4:4)"
-                )
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv, tq))
-            if [hv for _, hv, _ in comps] != [0x22, 0x11, 0x11]:
-                raise ValueError(
-                    "jpeg_decode_pixels_420: sampling must be 4:2:0 "
-                    "(Y 2x2, Cb/Cr 1x1)"
-                )
-        elif 0xC1 <= marker <= 0xCF and marker != 0xC4:
-            raise ValueError("jpeg_decode_pixels_420: non-baseline frame type")
-        elif marker == 0xDD:
-            raise ValueError("jpeg_decode_pixels_420: restart intervals unsupported")
-        elif marker == 0xDA:
-            if not body or body[0] != 3 or len(body) < 7:
-                raise ValueError("jpeg_decode_pixels_420: truncated SOS")
-            for c in range(3):
-                cs, tbl = body[1 + 2 * c], body[2 + 2 * c]
-                matches = [k for k, (cid, _, _) in enumerate(comps) if cid == cs]
-                if not matches:
-                    raise ValueError(
-                        "jpeg_decode_pixels_420: SOS references unknown component"
-                    )
-                scan_comps.append((matches[0], tbl >> 4, tbl & 15))
-            i = i + 2 + ln
-            break
-        i += 2 + ln
-    if len(scan_comps) != 3 or not w or not h:
-        raise ValueError("jpeg_decode_pixels_420: missing SOF/SOS")
-    tables = []
-    for cidx, dc_t, ac_t in scan_comps:
-        qt = quant.get(comps[cidx][2])
-        dc_table, ac_table = huff.get((0, dc_t)), huff.get((1, ac_t))
-        if qt is None or dc_table is None or ac_table is None:
-            raise ValueError(
-                "jpeg_decode_pixels_420: scan references missing DQT/DHT"
-            )
-        tables.append((qt, dc_table, ac_table))
-    br = _BitReader(data, i)
-    mcus_x, mcus_y = (w + 15) // 16, (h + 15) // 16
-    # MCU-padded planes: luma at full resolution, chroma at half — blocks
-    # write unclipped into the padded grid, conversion reads w x h
-    ywpad, cwpad = mcus_x * 16, mcus_x * 8
-    yplane = bytearray(ywpad * mcus_y * 16)
-    cbplane = bytearray(cwpad * mcus_y * 8)
-    crplane = bytearray(cwpad * mcus_y * 8)
-    preds = [0, 0, 0]
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for by in range(2):
-                for bx in range(2):
-                    preds[0], block = _decode_block_420(br, preds[0], *tables[0])
-                    ox, oy = (2 * mx + bx) * 8, (2 * my + by) * 8
-                    for y in range(8):
-                        row = (oy + y) * ywpad + ox
-                        yplane[row : row + 8] = bytes(block[y * 8 : y * 8 + 8])
-            for ci, plane in ((1, cbplane), (2, crplane)):
-                preds[ci], block = _decode_block_420(br, preds[ci], *tables[ci])
-                ox, oy = mx * 8, my * 8
-                for y in range(8):
-                    row = (oy + y) * cwpad + ox
-                    plane[row : row + 8] = bytes(block[y * 8 : y * 8 + 8])
-    rgb = bytearray(w * h * 3)
-    for py in range(h):
-        yrow = py * ywpad
-        crow = (py // 2) * cwpad
-        for px in range(w):
-            yv = yplane[yrow + px]
-            cidx = crow + (px // 2)
-            dcb, dcr = cbplane[cidx] - 128, crplane[cidx] - 128
-            r = yv + (45 * dcr) // 32
-            g = yv + (-(11 * dcb + 23 * dcr)) // 32
-            b = yv + (113 * dcb) // 64
-            o = (py * w + px) * 3
-            rgb[o] = 0 if r < 0 else 255 if r > 255 else r
-            rgb[o + 1] = 0 if g < 0 else 255 if g > 255 else g
-            rgb[o + 2] = 0 if b < 0 else 255 if b > 255 else b
-    return w, h, bytes(rgb)
-
-
-def synth_jpeg_color_420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic 4:2:0 baseline-JPEG payload synthesis: dimensions
-    16*(1 + (id*7) % 4) x 16*(1 + (id*13) % 4) (full MCUs, 16-64 px),
-    luma per 8x8 block and chroma per 16x16 MCU via _color_planes — the
-    generative formulas the SQL oracle replays.  Arrow-batched
-    mapInPandas; zero shuffle."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = 16 * (1 + (i * 7) % 4)
-                h = 16 * (1 + (i * 13) % 4)
-                rows.append((i, encode_jpeg_color_420(w, h, seed=i), "jpeg"))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "fmt"])
-
-    return df.select(id_col).mapInPandas(synth, SYNTH_SCHEMA)
-
-
-def image_channel_stats_420(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel means via the 4:2:0 decoder — the
-    image_channel_stats contract (exact integer channel sums, one
-    bit-stable double division each) over subsampled payloads.
-    Arrow-batched mapInPandas; zero shuffle."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = jpeg_decode_pixels_420(bytes(payload))
-                n = w * h
-                rows.append(
-                    (int(doc_id), w, h,
-                     sum(px[0::3]) / n, sum(px[1::3]) / n, sum(px[2::3]) / n)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(stats, CHANNEL_STATS_SCHEMA)

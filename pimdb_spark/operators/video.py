@@ -3,27 +3,27 @@ and decode in pure Python, plus an Arrow-batched frame-sampling operator —
 the keyframe-extraction step of a video-curation pipeline, done on actual
 frame pixels.
 
-This replaces the byte-range stand-in (operators/multimodal.frame_sample)
-with a real container walk: GIF89a graphic-control extensions delimit
-frames, each frame's LZW sub-block stream is decompressed with the shared
-general decoder (operators/multimodal.gif_lzw_decode), and every k-th
-frame is sampled for per-frame statistics.  Frames are a checkerboard
+Frames come from a real container walk, the GIF block reader the
+single-image decoder uses too (operators/multimodal.gif_images): GIF89a
+graphic-control extensions delimit frames, each frame's LZW sub-block
+stream is decompressed with the general decoder
+(operators/multimodal.gif_lzw_decode), and every k-th frame is sampled
+for per-frame statistics.  Frames are a checkerboard
 whose phase advances per frame, so a decoder that returns frame 0 (or
 zeros) for every frame cannot pass the oracle: the sampled means differ
 frame to frame.  (Reference parity note: the reference engine, pimdb,
 has no media path — beyond-parity training-data-pipeline surface.)
 
-Scale: decode is mapInPandas over (id, payload) — Arrow batches, zero
-shuffle; per-frame channel sums are exact integers so the only float op
+Scale: decode is mapInPandas over (id, payload) through the media
+family's one entry shape (operators/multimodal.map_rows) — Arrow batches,
+zero shuffle; per-frame channel sums are exact integers so the only float op
 is one bit-stable division per sampled frame.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pimdb_spark.operators.multimodal import gif_lzw_decode
+from pimdb_spark.operators.multimodal import gif_images, gif_rgb, map_rows
 
 __all__ = [
     "encode_animated_gif",
@@ -91,67 +91,24 @@ def encode_animated_gif(width: int, height: int, n_frames: int) -> bytes:
 
 def gif_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
     """REAL multi-frame decode: walks the GIF block structure (extensions,
-    image descriptors, trailer), LZW-decompresses every frame, and returns
-    (width, height, [RGB triples per frame, top-down row-major]).  Raises
-    ValueError — never IndexError — on non-GIF, truncated, or interlaced
-    input.  Frames smaller than the logical screen are composited at
-    their (left, top) offset over the previous frame (disposal 'do not
-    dispose'), which is all the fixtures and common screen-sized streams
-    need."""
+    image descriptors, trailer) through the shared reader
+    (operators/multimodal.gif_images), LZW-decompresses every frame, and
+    returns (width, height, [RGB triples per frame, top-down row-major]).
+    Raises ValueError — never IndexError — on non-GIF, truncated,
+    interlaced or zero-area input.  Frames smaller than the logical screen
+    are composited at their (left, top) offset over the previous frame
+    (disposal 'do not dispose'), which is all the fixtures and common
+    screen-sized streams need."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("gif_decode_frames: not a GIF")
-
-    def at(p: int) -> int:
-        if p >= len(data):
-            raise ValueError("gif_decode_frames: truncated GIF")
-        return data[p]
-
-    def read_palette(p: int, n: int) -> tuple[list[tuple[int, int, int]], int]:
-        if p + 3 * n > len(data):
-            raise ValueError("gif_decode_frames: truncated color table")
-        return [tuple(data[p + 3 * i : p + 3 * i + 3]) for i in range(n)], p + 3 * n
-
     if len(data) < 13:
         raise ValueError("gif_decode_frames: truncated GIF")
     w, h = struct.unpack("<HH", data[6:10])
-    packed = at(10)
-    pos = 13
-    gct: list[tuple[int, int, int]] = []
-    if packed & 0x80:
-        gct, pos = read_palette(pos, 2 ** ((packed & 7) + 1))
+    if not w or not h:
+        raise ValueError(f"gif_decode_frames: zero-area image ({w}x{h})")
     frames: list[bytes] = []
     canvas = bytearray(w * h)  # palette indices of the composited screen
-    while True:
-        b = at(pos)
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while at(pos) != 0:
-                pos += 1 + at(pos)
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"gif_decode_frames: unexpected block 0x{b:02x}")
-        left, top, fw, fh = struct.unpack("<HHHH", data[pos + 1 : pos + 9])
-        ipacked = at(pos + 9)
-        pos += 10
-        if ipacked & 0x40:
-            raise ValueError("gif_decode_frames: interlaced GIFs unsupported")
-        palette = gct
-        if ipacked & 0x80:
-            palette, pos = read_palette(pos, 2 ** ((ipacked & 7) + 1))
-        min_code = at(pos)
-        pos += 1
-        stream = bytearray()
-        while at(pos) != 0:
-            n = at(pos)
-            if pos + 1 + n > len(data):
-                raise ValueError("gif_decode_frames: truncated image sub-block")
-            stream += data[pos + 1 : pos + 1 + n]
-            pos += 1 + n
-        pos += 1  # block terminator
-        idx = gif_lzw_decode(bytes(stream), min_code, "gif_decode_frames")
+    for left, top, fw, fh, palette, idx in gif_images(data, "gif_decode_frames"):
         if len(idx) < fw * fh:
             raise ValueError("gif_decode_frames: pixel stream short")
         if left + fw > w or top + fh > h:
@@ -159,9 +116,7 @@ def gif_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
         for y in range(fh):
             row = idx[y * fw : (y + 1) * fw]
             canvas[(top + y) * w + left : (top + y) * w + left + fw] = bytes(row)
-        if palette and max(canvas) >= len(palette):
-            raise ValueError("gif_decode_frames: pixel index outside color table")
-        frames.append(b"".join(bytes(palette[i]) for i in canvas))
+        frames.append(gif_rgb(palette, canvas, "gif_decode_frames"))
     if not frames:
         raise ValueError("gif_decode_frames: no image frames")
     return w, h, frames
@@ -186,17 +141,13 @@ def synth_video_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so an SQL oracle can predict what a REAL frame decode must recover.
     Arrow-batched mapInPandas; zero shuffle."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = 16 + (i * 7) % 48
-                h = 16 + (i * 13) % 48
-                rows.append((i, encode_animated_gif(w, h, 2 + i % 5)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def synth(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w = 16 + (i * 7) % 48
+        h = 16 + (i * 13) % 48
+        return [(i, encode_animated_gif(w, h, 2 + i % 5))]
 
-    return df.select(id_col).mapInPandas(synth, VIDEO_SYNTH_SCHEMA)
+    return map_rows(df, [id_col], VIDEO_SYNTH_SCHEMA, synth)
 
 
 FRAME_STATS_SCHEMA = StructType(
@@ -229,33 +180,11 @@ def video_frame_stats(
     if stride < 1:
         raise ValueError("video_frame_stats: need stride >= 1")
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, frames = gif_decode_frames(bytes(payload))
-                for f in range(0, len(frames), stride):
-                    px = frames[f]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            f,
-                            w,
-                            h,
-                            len(frames),
-                            sum(px) / len(px),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "frame_no",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "mean_luma",
-                ],
-            )
+    def stats(doc_id, payload) -> list[tuple]:
+        w, h, frames = gif_decode_frames(bytes(payload))
+        return [
+            (int(doc_id), f, w, h, len(frames), sum(frames[f]) / len(frames[f]))
+            for f in range(0, len(frames), stride)
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(stats, FRAME_STATS_SCHEMA)
+    return map_rows(df, [id_col, payload_col], FRAME_STATS_SCHEMA, stats)

@@ -67,6 +67,10 @@ def test_wav_malformed_raise_valueerror():
     nonpcm[fmt_at : fmt_at + 2] = struct.pack("<H", 3)  # IEEE float
     with pytest.raises(ValueError):
         parse_wav_header(bytes(nonpcm))
+    # a zero sample rate parses as PCM but would divide audio_stats'
+    # duration by zero
+    with pytest.raises(ValueError, match="zero sample rate"):
+        parse_wav_header(encode_wav(8, sample_rate=0))
 
 
 # ---------------------------------------------------------------------------

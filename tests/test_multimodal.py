@@ -1,5 +1,7 @@
-"""Multimodal plumbing: binary payload columns, Arrow-batched stub decode,
-frame sampling, feature extraction — schema and determinism checks."""
+"""Multimodal plumbing: binary payload columns, Arrow-batched header and
+pixel decode, the image codecs' round-trips and malformed-input
+ValueError contracts, perceptual hashing — schema and determinism
+checks."""
 
 from __future__ import annotations
 
@@ -31,39 +33,6 @@ def test_decode_images_stub_deterministic(spark):
         assert 64 <= w < 256 and 64 <= h < 256
         assert mode in ("RGB", "RGBA", "L")
         assert n > 0
-
-
-def test_frame_sample(spark):
-    from pimdb_spark.operators.multimodal import frame_sample, with_binary_payload
-
-    df = with_binary_payload(_docs(spark), "text")
-    frames = frame_sample(df, "doc_id", "payload", n_frames=4)
-    assert frames.count() == 200  # 50 docs x 4 frames
-    assert frames.select("frame_no").distinct().count() == 4
-
-
-def test_feature_extract_shape(spark):
-    from pimdb_spark.operators.multimodal import feature_extract, with_binary_payload
-
-    df = with_binary_payload(_docs(spark), "text")
-    fe = feature_extract(df, dim=8)
-    assert dict(fe.dtypes)["feature"] == "array<float>"
-    out = fe.collect()
-    assert len(out) == 50
-    for r in out:
-        assert len(r.feature) == 8
-        assert all(-1.0 <= v <= 1.0 for v in r.feature)
-
-
-def test_resize_images_stub(spark):
-    from pimdb_spark.operators.multimodal import resize_images, with_binary_payload
-
-    df = with_binary_payload(_docs(spark), "text")
-    out = resize_images(df, max_side=32).collect()
-    assert len(out) == 50
-    for r in out:
-        assert 1 <= max(r.width, r.height) <= 32
-        assert isinstance(r.thumb, (bytes, bytearray))
 
 
 def test_decode_images_injected_decoder(spark):
@@ -528,9 +497,10 @@ def test_jpeg_color_roundtrip_exact():
 
 
 def test_jpeg_color_rejects_subsampling_and_fuzzes_clean():
-    """Chroma-subsampled SOF raises ValueError; single-byte corruption of
-    a color stream never escapes as IndexError/KeyError (the repo's
-    binary-parser bounds discipline, now over the 3-component path)."""
+    """A sampling layout outside grayscale / 4:4:4 / 4:2:0 raises
+    ValueError; single-byte corruption of a color stream never escapes as
+    IndexError/KeyError (the repo's binary-parser bounds discipline, now
+    over the 3-component path)."""
     import pytest
 
     from pimdb_spark.operators.multimodal import (
@@ -544,7 +514,7 @@ def test_jpeg_color_rejects_subsampling_and_fuzzes_clean():
     hv_idx = sof + 2 + 2 + 6 + 1
     assert data[hv_idx] == 0x11
     d = bytearray(data)
-    d[hv_idx] = 0x22  # 2x2-subsampled luma
+    d[hv_idx] = 0x21  # 2x1-subsampled luma (4:2:2)
     with pytest.raises(ValueError, match="subsampling"):
         jpeg_decode_pixels(bytes(d))
     for pos in range(2, len(data), 5):
@@ -608,18 +578,24 @@ def test_jpeg_decoder_rejects_unsupported_and_corrupt():
 def test_jpeg_decoder_corruption_fuzz_valueerror_only():
     """Every single-byte corruption either decodes or raises ValueError —
     never IndexError/KeyError/StopIteration (the bounds discipline all
-    binary parsers in this repo follow)."""
-    from pimdb_spark.operators.multimodal import encode_jpeg, jpeg_decode_pixels
+    binary parsers in this repo follow) — for grayscale and for 4:2:0,
+    whose sampling factors, four luma blocks per MCU and chroma planes
+    at half size give a flipped byte more to break."""
+    from pimdb_spark.operators.multimodal import (
+        encode_jpeg,
+        encode_jpeg_color_420,
+        jpeg_decode_pixels,
+    )
 
-    data = bytearray(encode_jpeg(16, 16, 3))
-    for pos in range(2, len(data), 3):
-        for flip in (0x01, 0xFF):
-            d = bytearray(data)
-            d[pos] ^= flip
-            try:
-                jpeg_decode_pixels(bytes(d))
-            except ValueError:
-                pass
+    for data in (encode_jpeg(16, 16, 3), encode_jpeg_color_420(32, 16, 5)):
+        for pos in range(2, len(data), 3):
+            for flip in (0x01, 0xFF):
+                d = bytearray(data)
+                d[pos] ^= flip
+                try:
+                    jpeg_decode_pixels(bytes(d))
+                except ValueError:
+                    pass
 
 
 def test_jpeg_420_roundtrip_is_generative_exact():
@@ -629,12 +605,12 @@ def test_jpeg_420_roundtrip_is_generative_exact():
     from pimdb_spark.operators.multimodal import (
         _color_planes,
         encode_jpeg_color_420,
-        jpeg_decode_pixels_420,
+        jpeg_decode_pixels,
     )
 
     for seed in (0, 7, 123):
         w, h = 32, 48
-        dw, dh, rgb = jpeg_decode_pixels_420(encode_jpeg_color_420(w, h, seed))
+        dw, dh, rgb = jpeg_decode_pixels(encode_jpeg_color_420(w, h, seed))
         assert (dw, dh) == (w, h)
         for py in range(h):
             for px in range(w):
@@ -648,25 +624,108 @@ def test_jpeg_420_roundtrip_is_generative_exact():
                 assert rgb[o : o + 3] == bytes((r, g, b)), (seed, px, py)
 
 
-def test_jpeg_420_and_444_contracts_are_complementary():
-    """The two decoders split the sampling space loudly: the 4:4:4
-    decoder raises on a subsampled file, the 4:2:0 decoder raises on a
-    4:4:4 file and on non-MCU-aligned encode dimensions — no silent
-    wrong-grid decode in either direction."""
+def test_jpeg_one_decoder_for_every_supported_layout():
+    """One decoder covers grayscale, 4:4:4 and 4:2:0 (each component's
+    sampling factors read from SOF) and refuses any other layout by name:
+    4:2:2 luma (h/v 0x21) raises ``subsampling unsupported`` rather than
+    decoding on a wrong grid.  The 4:2:0 encoder still emits full MCUs
+    only."""
     import pytest
 
     from pimdb_spark.operators.multimodal import (
+        encode_jpeg,
         encode_jpeg_color,
         encode_jpeg_color_420,
         jpeg_decode_pixels,
-        jpeg_decode_pixels_420,
     )
 
-    f420 = encode_jpeg_color_420(32, 32, seed=5)
-    f444 = encode_jpeg_color(32, 32, seed=5)
+    for data in (
+        encode_jpeg(32, 32, seed=5),
+        encode_jpeg_color(32, 32, seed=5),
+        encode_jpeg_color_420(32, 32, seed=5),
+    ):
+        w, h, rgb = jpeg_decode_pixels(data)
+        assert (w, h, len(rgb)) == (32, 32, 32 * 32 * 3)
+    f422 = bytearray(encode_jpeg_color_420(32, 32, seed=5))
+    hv_idx = bytes(f422).find(b"\xff\xc0") + 2 + 2 + 6 + 1  # Y's h/v byte
+    assert f422[hv_idx] == 0x22
+    f422[hv_idx] = 0x21
     with pytest.raises(ValueError, match="subsampling unsupported"):
-        jpeg_decode_pixels(f420)
-    with pytest.raises(ValueError, match="sampling must be 4:2:0"):
-        jpeg_decode_pixels_420(f444)
+        jpeg_decode_pixels(bytes(f422))
     with pytest.raises(ValueError, match="multiples of 16"):
         encode_jpeg_color_420(24, 32, seed=5)
+
+
+def test_jpeg_420_partial_mcu_decodes_the_crop():
+    """A 4:2:0 frame whose sides are not multiples of the 16x16 MCU: the
+    32x32 file's SOF patched to 30x27 keeps the same entropy-coded scan
+    (the MCU count is unchanged), so the decode must be exactly the
+    top-left 30x27 crop of the 32x32 decode — the clipped right and
+    bottom blocks, and the chroma planes of ceil(30/2) x ceil(27/2),
+    neither shift nor drop a sample."""
+    import struct
+
+    from pimdb_spark.operators.multimodal import (
+        encode_jpeg_color_420,
+        jpeg_decode_pixels,
+        parse_image_header,
+    )
+
+    full = encode_jpeg_color_420(32, 32, seed=11)
+    _, _, rgb32 = jpeg_decode_pixels(full)
+    sof = full.find(b"\xff\xc0")
+    dims = sof + 2 + 2 + 1  # SOF body: precision, then height, width (u16 BE)
+    assert struct.unpack(">HH", full[dims : dims + 4]) == (32, 32)
+    cropped = full[:dims] + struct.pack(">HH", 27, 30) + full[dims + 4 :]
+    assert parse_image_header(cropped)[:2] == (30, 27)
+    w, h, rgb = jpeg_decode_pixels(cropped)
+    assert (w, h) == (30, 27)
+    want = b"".join(rgb32[y * 32 * 3 : (y * 32 + 30) * 3] for y in range(27))
+    assert rgb == want
+
+
+def test_zero_area_images_raise_named_valueerror(spark):
+    """A valid zero-width PNG, BMP or GIF decodes to no pixels: the
+    channel-stats operator refuses it by name instead of dividing by the
+    zero pixel count (or tripping over an empty palette lookup), and so
+    does the video frame sampler for a zero-width animated GIF."""
+    import pytest
+
+    from pimdb_spark.operators.multimodal import (
+        encode_bmp,
+        encode_gif,
+        encode_png,
+        image_channel_stats,
+    )
+    from pimdb_spark.operators.video import encode_animated_gif, video_frame_stats
+
+    for payload in (encode_png(0, 4), encode_bmp(0, 4), encode_gif(0, 4)):
+        df = spark.createDataFrame([(1, payload)], "doc_id long, payload binary")
+        with pytest.raises(Exception, match="image_channel_stats: zero-area image"):
+            image_channel_stats(df).collect()
+    df = spark.createDataFrame(
+        [(1, encode_animated_gif(0, 4, 2))], "doc_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="gif_decode_frames: zero-area image"):
+        video_frame_stats(df).collect()
+
+
+def test_gif_oversized_lzw_code_size_raises():
+    """The LZW minimum code size byte sizes the decoder's initial table
+    (2**size entries); GIF codes are at most 12 bits wide, so a size over
+    11 is corrupt and both GIF decoders refuse it before building a
+    table."""
+    import pytest
+
+    from pimdb_spark.operators.multimodal import encode_gif, gif_decode_pixels
+    from pimdb_spark.operators.video import encode_animated_gif, gif_decode_frames
+
+    for data, decode in (
+        (encode_gif(6, 4), gif_decode_pixels),
+        (encode_animated_gif(6, 4, 2), gif_decode_frames),
+    ):
+        at = bytes(data).find(b"\x2c") + 10  # after the image descriptor
+        assert data[at] == 2
+        bad = data[:at] + bytes([0x82]) + data[at + 1 :]
+        with pytest.raises(ValueError, match="LZW minimum code size 130"):
+            decode(bad)
