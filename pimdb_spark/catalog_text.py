@@ -836,7 +836,7 @@ def q_incremental_split_inherit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the q_leakage_safe_split rule), and a new cluster reaching reference
     docs on BOTH sides is surfaced as 'conflict' rather than silently
     picking one.  Composition over attested shapes: ONE
-    _minhash_doc_signatures pass per side, banded twice — 4x4 for the
+    minhash_doc_signatures pass per side, banded twice — 4x4 for the
     new-x-new closure (minhash_pairs_from_signatures, Jaccard >= 0.8,
     components via connected_components) and 8x2 for the new-x-ref gate
     (cross_minhash_pairs_from_signatures, Jaccard >= 0.5 — the gate
@@ -882,15 +882,15 @@ def q_incremental_split_inherit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("split"),
     )
     # ONE row-oriented signature pass per side (the audited
-    # _minhash_doc_signatures chain), then band the SAME frames twice:
+    # minhash_doc_signatures chain), then band the SAME frames twice:
     # 4x4 for the new-x-new closure, 8x2 for the cross-corpus gate.  The
     # first cut of this entry recomputed signatures through the
     # interpreted-HOF path per banding scheme and per side — the exact
     # CollapseProject blowup minhash_signature_from_hashes documents —
     # and cost 48.6 s at sf0.1; the shared-signature form runs the same
     # semantics in one codegen pass per side.
-    sig_new = D._minhash_doc_signatures(new, "doc_id", "text", 3, 16)
-    sig_ref = D._minhash_doc_signatures(docs, "doc_id", "text", 3, 16)
+    sig_new = D.minhash_doc_signatures(new, "doc_id", "text", 3, 16)
+    sig_ref = D.minhash_doc_signatures(docs, "doc_id", "text", 3, 16)
     # §2.6 overlap (r19 optimization): the reference-side signature chain
     # is independent of the new-x-new closure, but the closure's
     # driver-sequenced hash-min rounds leave the executors mostly idle —
@@ -1158,14 +1158,9 @@ def q_dedup_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = docs.union(trunc)
     # ONE persisted signature/shingle pass serves BOTH the banded side
-    # and the exhaustive ground truth (r18 optimization round): the
-    # standalone exact_jaccard_pairs re-ran the interpreted
-    # word_shingles chain twice (both self-join aliases) on top of the
-    # banded side's own chain — three shingle passes for one corpus.
-    # exact_jaccard_pairs_from_signatures is value-identical (same
-    # distinct shingle sets, same integer threshold compare).
+    # and the exhaustive ground truth (r18 optimization round).
     sig = D.minhash_doc_signatures(base, "doc_id", "text", k=3, num_hashes=16)
-    exact = D.exact_jaccard_pairs_from_signatures(sig, t_num=1, t_den=2)
+    exact = D.exact_jaccard_pairs(sig, t_num=1, t_den=2)
     approx = D.minhash_pairs_from_signatures(
         sig, num_hashes=16, bands=4, threshold=0.5
     )
@@ -1284,7 +1279,7 @@ def q_cross_neardup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, verification, and the deterministic best-match window.
 
     r18: the operator now runs both sides through the shared
-    _minhash_doc_signatures chain (row-oriented codegen, one pass per
+    minhash_doc_signatures chain (row-oriented codegen, one pass per
     side) instead of the interpreted higher-order-function signature
     projection it launched with — the same rewrite that cut the
     incremental fence 9.4x; here 6.16 s -> 2.94 s at sf0.1 (min-of-3,

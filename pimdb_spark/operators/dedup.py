@@ -113,16 +113,21 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / F.size(F.array_union(a, b))
 
 
-def _minhash_doc_signatures(
+def minhash_doc_signatures(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    num_hashes: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    num_hashes: int = 16,
 ) -> DataFrame:
-    """Shared per-document minhash chain for minhash_lsh_pairs and
-    containment_lsh_pairs: (doc, h0..h{num_hashes-1}, shingles), persisted
-    (serves the caller's banding pass + both verification sides).
+    """The per-document minhash chain every banding consumer shares:
+    (doc, h0..h{num_hashes-1}, shingles), persisted (serves the caller's
+    banding pass + both verification sides).  Documents shorter than k
+    tokens produce no row.  Persist it as a TABLE when the corpus it
+    describes is long-lived (an admitted reference corpus gating many
+    incoming shards): signatures are computed once at admission time and
+    every later gate reads ~(num_hashes x 8 bytes + shingle set) per
+    reference doc instead of re-shingling the reference text.
 
     ONE shuffle, everything heavy in whole-stage codegen.  Interpreted
     higher-order functions (transform/aggregate lambdas) cost ~5-10x the
@@ -196,9 +201,9 @@ def minhash_lsh_pairs(
     clearCache()s between queries) need nothing.
     """
     # per-doc signature chain shared with containment_lsh_pairs and the
-    # from-signatures callers; see _minhash_doc_signatures for the
+    # from-signatures callers; see minhash_doc_signatures for the
     # one-exchange plan rationale
-    sig = _minhash_doc_signatures(df, id_col, text_col, k, num_hashes)
+    sig = minhash_doc_signatures(df, id_col, text_col, k, num_hashes)
     if local_frames is not None:
         local_frames.append(sig)
     return minhash_pairs_from_signatures(
@@ -209,7 +214,7 @@ def minhash_lsh_pairs(
 def _banded_signatures(
     sig: DataFrame, id_out: str, num_hashes: int, bands: int
 ) -> DataFrame:
-    """(id_out, band, band_hash) rows from a _minhash_doc_signatures frame:
+    """(id_out, band, band_hash) rows from a minhash_doc_signatures frame:
     one md5 per band over its rows_per_band slice, comma-joined as text so
     the band hash is engine-reproducible; the key ships as 16-byte
     unhex(md5) BINARY — half the r18 hex string on the banding join's
@@ -245,7 +250,7 @@ def minhash_pairs_from_signatures(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Banding + exact-Jaccard verification over a PRECOMPUTED
-    _minhash_doc_signatures frame — the second stage of minhash_lsh_pairs,
+    minhash_doc_signatures frame — the second stage of minhash_lsh_pairs,
     callable on its own so a pipeline that needs the same signatures for
     several banding schemes (e.g. 4x4 self-dedup plus 8x2 cross-corpus
     gating in q_incremental_split_inherit) computes them ONCE."""
@@ -285,7 +290,7 @@ def cross_minhash_pairs_from_signatures(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Two-sided banding + exact-Jaccard verification over two PRECOMPUTED
-    _minhash_doc_signatures frames: verified (id_a, id_b, jacc) pairs with
+    minhash_doc_signatures frames: verified (id_a, id_b, jacc) pairs with
     id_a from sig_a and id_b from sig_b — cross_neardup_filter's candidate
     core for callers that already hold signature frames (build each side
     once, band and join; the a-side never pairs with itself).
@@ -703,106 +708,32 @@ def gopher_repetition(
     return out.select(*cols)
 
 
-
 def exact_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    t_num: int = 1,
-    t_den: int = 2,
-) -> DataFrame:
-    """EXHAUSTIVE near-duplicate ground truth: every unordered doc pair
-    whose k-shingle Jaccard similarity is >= t_num/t_den, found by
-    shared-shingle blocking — any pair with Jaccard > 0 shares at least
-    one shingle, so the equi-join on the shingle hash is COMPLETE (no
-    candidate is missed, unlike banded LSH).  The threshold compare is
-    integer cross-multiplication (t_den * shared >= t_num * union), so
-    no float enters the decision.  Returns (id_a, id_b, shared,
-    union_sz, jacc) with id_a < id_b; jacc is the one terminal double
-    division of two exact integers.
-
-    This is the evaluation baseline for minhash_lsh_pairs (see
-    dedup_recall), and a correct-by-construction dedup for corpora
-    small enough to afford it.
-
-    Scale: the shingle equi-join emits sum-over-shingles df^2 candidate
-    rows — quadratic in per-shingle document frequency, NOT corpus
-    size.  Fine when boilerplate shingles are rare or pre-capped;
-    at 100 TB this is the operator you run on a SAMPLE to measure the
-    banded pipeline's recall, not on the full corpus — which is exactly
-    its role here."""
-    toks = F.split(F.col(text_col), " ")
-    # The per-doc set size is row-local BEFORE the explode (word_shingles
-    # is array_distinct), so it rides the blocking join and the pair
-    # groupBy as a functionally dependent grouping key — no doc-keyed
-    # size joins onto the pair frame (the pair frame is Σdf² rows, the
-    # BIG side at scale; those joins were sort-merge beyond the
-    # broadcast threshold).
-    sh = (
-        docs.select(
-            F.col(id_col).alias("doc"), word_shingles(toks, k).alias("s")
-        )
-        .filter(F.size("s") > 0)
-        .select("doc", F.size("s").alias("n"), F.explode("s").alias("sg"))
-        .select("doc", "n", F.unhex(F.md5("sg")).alias("sh"))
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    uni = F.col("n_a") + F.col("n_b") - F.col("shared")
-    return (
-        pairs.filter(t_den * F.col("shared") >= t_num * uni)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("shared").cast("bigint").alias("shared"),
-            uni.cast("bigint").alias("union_sz"),
-            (F.col("shared").cast("double") / uni.cast("double")).alias(
-                "jacc"
-            ),
-        )
-    )
-
-
-def exact_jaccard_pairs_from_signatures(
     sig: DataFrame,
     t_num: int = 1,
     t_den: int = 2,
 ) -> DataFrame:
-    """exact_jaccard_pairs over a PRECOMPUTED _minhash_doc_signatures
-    frame (doc, h0.., shingles) — the r18-optimization form for callers
-    that already built the signature chain for a banded pass
-    (q_dedup_recall_lsh: ground truth + banded side from ONE persisted
-    shingle pass instead of three interpreted word_shingles chains).
+    """EXHAUSTIVE near-duplicate ground truth over a minhash_doc_signatures
+    frame (doc, h0.., shingles): every unordered doc pair whose k-shingle
+    Jaccard similarity is >= t_num/t_den, found by shared-shingle
+    blocking — any pair with Jaccard > 0 shares at least one shingle, so
+    the equi-join on the shingle hash is COMPLETE (no candidate is
+    missed, unlike banded LSH).  The threshold compare is integer
+    cross-multiplication (t_den * shared >= t_num * union), so no float
+    enters the decision.  Returns (id_a, id_b, shared, union_sz, jacc)
+    with id_a < id_b; jacc is the one terminal double division of two
+    exact integers.
 
-    Value-identical to exact_jaccard_pairs on the same corpus: the
-    signature chain's collect_set shingles are exactly word_shingles'
-    distinct sets (same tokenizer, same k-gram concat, same >=k-token
-    filter), `shared` counts shared DISTINCT shingles either way, and
-    the blocking equi-join keys on the SAME 16-byte unhex(md5) of the
-    shingle the standalone form uses — so the shuffle wire is identical
-    too (k-word shingles routinely exceed 32 chars; keying the join on
-    the raw strings, as the first cut of this function did, made the
-    blocking shuffle wider than the form it claims parity with — r18
-    ADVICE; r19 halved the key again, 32-char hex string → 16-byte
-    binary, unhex being bijective on md5 output so counts cannot
-    change).
+    This is the evaluation baseline for minhash_lsh_pairs (see
+    dedup_recall): q_dedup_recall_lsh builds ground truth and the banded
+    side from ONE persisted signature frame.  The blocking join keys on
+    the 16-byte unhex(md5) of each shingle, not the raw k-word string
+    (unhex is bijective on md5 output, so counts cannot change).
 
-    Scale: identical to exact_jaccard_pairs — sum-over-shingles df^2
-    candidate rows; run on a sample, per the calibration contract."""
+    Scale: the shingle equi-join emits sum-over-shingles df^2 candidate
+    rows — quadratic in per-shingle document frequency, NOT corpus
+    size.  At 100 TB this is the operator you run on a SAMPLE to
+    measure the banded pipeline's recall, not on the full corpus."""
     # The set size is row-local on the signature frame, so it rides the
     # blocking join and the pair groupBy as a functionally dependent
     # grouping key — no doc-keyed size joins onto the Σdf²-row pair
@@ -913,7 +844,7 @@ def cross_neardup_filter(
     bands) — a GATE wants the high-recall end; verification keeps
     precision exact.
 
-    Both sides run through the shared _minhash_doc_signatures chain
+    Both sides run through the shared minhash_doc_signatures chain
     (ONE row-oriented codegen pass per side — the interpreted
     higher-order-function signature projection this operator originally
     carried cost ~5-10x per doc; the same rewrite cut the incremental
@@ -941,7 +872,7 @@ def cross_neardup_filter(
 
     Repeated one-shot callers: pass ``local_frames`` (an empty list) and
     the operator appends every signature frame it builds INTERNALLY
-    (persisted by _minhash_doc_signatures) to it — materialize the
+    (persisted by minhash_doc_signatures) to it — materialize the
     result, then unpersist the collected frames in a ``finally`` block,
     exactly incremental_split_batch's local_frames discipline.  Without
     it, internally built frames stay in Spark's CacheManager for the
@@ -960,14 +891,14 @@ def cross_neardup_filter(
     if ref_signatures is None:
         if ref_docs is None:
             raise ValueError("cross_neardup_filter needs ref_docs or ref_signatures")
-        ref_signatures = _minhash_doc_signatures(
+        ref_signatures = minhash_doc_signatures(
             ref_docs, id_col, text_col, k, num_hashes
         )
         if local_frames is not None:
             local_frames.append(ref_signatures)
     sig_new = new_signatures
     if sig_new is None:
-        sig_new = _minhash_doc_signatures(new_docs, id_col, text_col, k, num_hashes)
+        sig_new = minhash_doc_signatures(new_docs, id_col, text_col, k, num_hashes)
         if local_frames is not None:
             local_frames.append(sig_new)
     verified = cross_minhash_pairs_from_signatures(
@@ -1004,25 +935,6 @@ def cross_neardup_filter(
     )
 
 
-def minhash_doc_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Public form of the shared per-document minhash signature chain:
-    (doc, h0..h{num_hashes-1}, shingles) — the frame every banding
-    consumer (minhash_pairs_from_signatures,
-    cross_minhash_pairs_from_signatures, cross_neardup_filter's
-    ``ref_signatures``) takes.  Persist it as a TABLE when the corpus it
-    describes is long-lived (an admitted reference corpus gating many
-    incoming shards): signatures are computed once at admission time and
-    every later gate reads ~(num_hashes x 8 bytes + shingle set) per
-    reference doc instead of re-shingling the reference text."""
-    return _minhash_doc_signatures(df, id_col, text_col, k, num_hashes)
-
-
 def doc_shingle_sets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1032,7 +944,7 @@ def doc_shingle_sets(
 ) -> DataFrame:
     """Distinct k-word shingle SET per document — (doc, <extra_cols>, s)
     — via the row-oriented chain (repartition(id) -> posexplode tokens
-    -> window lead shingles -> collect_set), the _minhash_doc_signatures
+    -> window lead shingles -> collect_set), the minhash_doc_signatures
     discipline without the minhash columns.  ~5-10x cheaper than the
     interpreted word_shingles transform chain (higher-order functions
     are interpreted, not codegen'd; measured 6.5 s -> 0.7 s for the
@@ -1196,7 +1108,7 @@ def containment_lsh_pairs(
     containment_pairs (directed; mutual containment for exact dups).
 
     Scale: the minhash chain IS minhash_lsh_pairs' chain — both call the
-    shared _minhash_doc_signatures helper (posexplode → window shingles →
+    shared minhash_doc_signatures helper (posexplode → window shingles →
     codegen md5/min — no interpreted HOF in the hot path); the bucket
     join shuffles (doc, i, min_i) triples only; ``max_bucket_size``
     drops flood buckets (a minimum shared by m docs emits m² candidate
@@ -1209,7 +1121,7 @@ def containment_lsh_pairs(
     Persist lifecycle: as minhash_lsh_pairs — the internal signature
     frame is persisted; repeated long-lived-session callers pass
     ``local_frames`` to own the unpersist."""
-    sig = _minhash_doc_signatures(docs, id_col, text_col, k, num_hashes)
+    sig = minhash_doc_signatures(docs, id_col, text_col, k, num_hashes)
     if local_frames is not None:
         local_frames.append(sig)
     banded = sig.select(

@@ -274,7 +274,8 @@ def png_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
     concatenate IDAT chunks, zlib-inflate, and reconstruct scanlines by
     undoing the per-line filter (all five spec'd types: None/Sub/Up/
     Average/Paeth).  Returns (width, height, RGB byte triples, row-major).
-    Raises ValueError for non-PNG bytes or unsupported color types."""
+    Raises ValueError for non-PNG bytes, unsupported color types and
+    IDAT data that is corrupt or shorter than IHDR's scanlines."""
     w, h, mode = parse_image_header(data)
     if data[:8] != _PNG_SIG or mode != "RGB":
         raise ValueError(f"png_decode_pixels: not an RGB PNG (mode {mode})")
@@ -287,8 +288,16 @@ def png_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
         if tag == b"IEND":
             break
         i += 12 + ln
-    raw = zlib.decompress(idat)
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as exc:
+        raise ValueError(f"png_decode_pixels: corrupt IDAT stream ({exc})") from None
     bpp, stride = 3, w * 3
+    if len(raw) < h * (stride + 1):
+        raise ValueError(
+            f"png_decode_pixels: IDAT inflates to {len(raw)} bytes, "
+            f"IHDR needs {h * (stride + 1)}"
+        )
     out = bytearray()
     prev = bytearray(stride)
     pos = 0
@@ -326,7 +335,8 @@ def png_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
 def bmp_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
     """REAL pixel decode of a 24-bit BMP: bottom-up BGR rows with 4-byte
     padding, returned as top-down RGB triples (same layout as the PNG
-    decoder)."""
+    decoder).  Raises ValueError for non-BMP bytes and pixel data shorter
+    than the header's rows."""
     w, h, mode = parse_image_header(data)
     if data[:2] != b"BM" or mode != "RGB":
         raise ValueError(f"bmp_decode_pixels: not a 24-bit BMP (mode {mode})")
@@ -334,6 +344,8 @@ def bmp_decode_pixels(data: bytes) -> tuple[int, int, bytes]:
     height_raw = int.from_bytes(data[22:26], "little", signed=True)
     row_raw = w * 3
     pad = (4 - row_raw % 4) % 4
+    if offset + h * (row_raw + pad) - pad > len(data):
+        raise ValueError("bmp_decode_pixels: truncated pixel data")
     rows = []
     pos = offset
     for _y in range(h):

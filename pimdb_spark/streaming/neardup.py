@@ -262,21 +262,20 @@ def incremental_split_stream(
     cross_bands: int = 8,
     cross_threshold: float = 0.5,
     train_pct: int = 90,
-    admitted_signatures_path: str | None = None,
 ):
     """Streaming twin of the incremental leakage fence
     (catalog_text.q_incremental_split_inherit): each arriving micro-batch
     of NEW documents is assigned train/eval sides by the exact batch
-    composition — one _minhash_doc_signatures pass per side, 4x4 banding
+    composition — one minhash_doc_signatures pass per side, 4x4 banding
     for the batch-internal closure, 8x2 banding against the reference,
     then operators/curation.incremental_split_inherit — and, crucially,
     NON-CONFLICT verdicts are APPENDED TO THE REFERENCE (both the
-    (ref_id, split) table at ``ref_splits_path`` and the admitted texts
-    at ``admitted_path``), so later arrivals that near-dup an earlier
-    arrival inherit ITS side even when no original reference doc is
-    involved.  That growing-reference recursion is what makes the fence
-    hold across micro-batches: the one-shot operator's component closure
-    is reproduced hop by hop as data arrives.
+    (ref_id, split) table at ``ref_splits_path`` and the admitted
+    signature table at ``admitted_path``), so later arrivals that
+    near-dup an earlier arrival inherit ITS side even when no original
+    reference doc is involved.  That growing-reference recursion is what
+    makes the fence hold across micro-batches: the one-shot operator's
+    component closure is reproduced hop by hop as data arrives.
 
     Order contract (inherent to any one-pass assignment, stated not
     hidden): per-doc verdicts equal the one-shot batch split whenever
@@ -309,7 +308,7 @@ def incremental_split_stream(
     and each micro-batch is deduped on doc id first (at-least-once
     sources may deliver duplicate rows within one batch).  A
     pre-seeded ref_splits table without an epoch column reads as
-    epoch -1 (always visible).  The admitted-texts read fails the
+    epoch -1 (always visible).  The admitted-table read fails the
     batch LOUDLY on anything but the expected first-batch missing
     path: a silently dropped reference would hand a near-dup of an
     admitted doc a fresh hash side and poison the reference with a
@@ -318,58 +317,30 @@ def incremental_split_stream(
     ids restart at 0 when the checkpoint is deleted, which would make
     the epoch fence hide every prior admission, so each batch raises
     if its epoch is behind the admitted table's max (a legitimate
-    replay only re-fires the last epoch).  The guard costs ONE admitted
-    table scan at stream start; per batch it is an O(1) check against a
-    closure-maintained monotone max (the table only grows through this
-    stream's own appends), so neither fence mode pays a per-batch
-    reference-side scan for it.
+    replay only re-fires the last epoch), and an admitted table built
+    at another shingle size ``k`` (see _admitted_max_epoch).  Both
+    checks cost ONE admitted-table scan at stream start; per batch the
+    epoch check is O(1) against a closure-maintained monotone max (the
+    table only grows through this stream's own appends, at this k).
 
-    Scale — two reference-side modes, value-identical (parity test in
-    tests/test_streaming_neardup.py), chosen at stream start:
-    - TEXT mode (default): per micro-batch the reference side costs one
-      signature projection over static ref + admitted texts + the
-      banding equi-join (the audited batch plan) — the whole reference
-      is re-shingled every batch.
-    - SIGNATURE mode (``admitted_signatures_path`` set): the static
-      reference's minhash_doc_signatures frame is computed ONCE here,
-      outside the handler, and each epoch appends its admitted docs'
-      signature rows to the signature TABLE — per batch the reference
-      side is a parquet scan of signature rows, and NO reference text
-      (static or admitted) is ever re-shingled.  This is the
-      quantize-on-write discipline applied to the fence: signatures are
-      computed exactly once, at admission time — the true
-      incremental-ingest economics at 100 TB."""
-    # One stream-start scan seeds the reset-checkpoint guard; the handler
-    # then maintains it monotonically in this closure dict, so the
-    # per-batch check is O(1) instead of a parquet scan+agg of the
-    # admitted table on every micro-batch (which would grow linearly
-    # with reference size — the cost SIGNATURE mode exists to remove).
-    spark = ref_docs.sparkSession
-    texts_max = _max_epoch(spark, admitted_path)
-    epoch_state = {"max_epoch": texts_max}
-    sig_static = None
-    if admitted_signatures_path is not None:
-        from pimdb_spark.operators.dedup import minhash_doc_signatures
+    Scale: signatures are computed exactly once per document.  The
+    static reference's minhash_doc_signatures frame is built ONCE here,
+    outside the handler, and each epoch appends its admitted docs'
+    signature rows to the admitted table — per batch the reference side
+    is a parquet scan of signature rows, and NO reference text (static
+    or admitted) is ever re-shingled: the quantize-on-write discipline
+    applied to the fence."""
+    from pimdb_spark.operators.dedup import minhash_doc_signatures
 
-        # Mode-switch guard: a stream that previously admitted docs in
-        # TEXT mode has no signature rows for them — gating against the
-        # incomplete signature table would silently drop those docs from
-        # the reference (a near-dup of one could land on the opposite
-        # side: exactly the leak the fence prevents).  Fail at stream
-        # start; backfill_admitted_signatures is the migration.
-        sigs_max = _max_epoch(spark, admitted_signatures_path)
-        if texts_max is not None and (sigs_max is None or sigs_max < texts_max):
-            raise ValueError(
-                f"admitted texts at {admitted_path} reach epoch {texts_max} "
-                f"but the signature table at {admitted_signatures_path} "
-                f"reaches {sigs_max} — the stream previously admitted docs "
-                "without signature rows (TEXT mode); run "
-                "backfill_admitted_signatures before enabling SIGNATURE mode"
-            )
-        sig_static = minhash_doc_signatures(
-            ref_docs.select(F.col(id_col), F.col(text_col)),
-            id_col, text_col, k, num_hashes,
+    epoch_state = {
+        "max_epoch": _admitted_max_epoch(
+            ref_docs.sparkSession, admitted_path, k, num_hashes
         )
+    }
+    sig_static = minhash_doc_signatures(
+        ref_docs.select(F.col(id_col), F.col(text_col)),
+        id_col, text_col, k, num_hashes,
+    )
 
     def handle(batch_df: DataFrame, epoch: int) -> None:
         incremental_split_batch(
@@ -389,7 +360,6 @@ def incremental_split_stream(
             cross_threshold=cross_threshold,
             train_pct=train_pct,
             ref_signatures=sig_static,
-            admitted_signatures_path=admitted_signatures_path,
             epoch_state=epoch_state,
         )
 
@@ -412,94 +382,61 @@ def _visible_before(df: DataFrame, cur_epoch: int) -> DataFrame:
     return df.filter(F.coalesce(F.col("epoch"), F.lit(-1)) < cur_epoch)
 
 
-def _max_epoch(spark, path: str) -> int | None:
-    """Highest epoch recorded in a reference-state table: None if the
-    table does not exist, -1 if it exists without an epoch column (a
-    pre-epoch-fence table — every row a legacy admission)."""
+def _read_table(spark, path: str) -> DataFrame | None:
+    """Read a reference-state table.  Only the expected first-batch
+    missing path is survivable (returns None); corrupt files or storage
+    errors fail the batch loudly — a silently dropped reference = a
+    permanent train/eval leak."""
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+        return spark.read.option("mergeSchema", "true").parquet(path)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
             raise
         return None
-    if "epoch" not in df.columns:
-        return -1
-    row = df.agg(F.max(F.coalesce(F.col("epoch"), F.lit(-1)))).first()
-    return -1 if row[0] is None else int(row[0])
 
 
-def backfill_admitted_signatures(
-    spark,
-    admitted_path: str,
-    admitted_signatures_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 16,
-) -> int:
-    """One-time TEXT-mode -> SIGNATURE-mode migration: compute signature
-    rows for every doc in the admitted-texts table and write them to the
-    signature table carrying each doc's ORIGINAL admission epoch, so a
-    restarted stream's epoch fence sees exactly the reference its
-    text-mode predecessor saw.  A doc admitted in MULTIPLE epochs (an
-    at-least-once source delivering it in two batches) keeps its
-    MINIMUM epoch: that is the admission the text-mode fence first made
-    visible, so a replay of any later epoch still sees the doc —
-    keeping an arbitrary (possibly later) epoch would break the
-    replay-identical contract this migration exists to preserve.
-    Shingle-less docs get NULL-signature marker rows (epoch
-    bookkeeping), mirroring the live append path.  Returns the number
-    of rows written."""
-    from pyspark.sql import Window
-
-    from pimdb_spark.operators.dedup import _minhash_doc_signatures
-
-    adm = spark.read.option("mergeSchema", "true").parquet(admitted_path)
-    epoch_col = (
-        F.coalesce(F.col("epoch"), F.lit(-1))
-        if "epoch" in adm.columns
-        else F.lit(-1)
-    )
-    first_adm = Window.partitionBy(id_col).orderBy(F.col("epoch").asc())
-    docs = (
-        adm.select(F.col(id_col), F.col(text_col), epoch_col.alias("epoch"))
-        .withColumn("_rn", F.row_number().over(first_adm))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    sig = _minhash_doc_signatures(
-        docs.select(id_col, text_col), id_col, text_col, k, num_hashes
-    )
-    sig_cols = ["doc", *[f"h{i}" for i in range(num_hashes)], "shingles"]
-    try:
-        rows = (
-            docs.select(F.col(id_col).alias("doc"), "epoch")
-            .join(sig, "doc", "left")
-            .select(*sig_cols, "epoch")
-            .localCheckpoint(eager=True)
+def _read_admitted(spark, path: str, num_hashes: int) -> DataFrame | None:
+    """The admitted table — one row per admission: (doc, text,
+    h0..h{n-1}, shingles, k, epoch) — after checking it carries every
+    column this fence reads.  Its signatures are never recomputed from
+    the stored text, so a table without the h columns ``num_hashes``
+    needs (a narrower signature, or a table of texts alone) cannot be
+    gated against and raises."""
+    df = _read_table(spark, path)
+    if df is None:
+        return None
+    need = [*(f"h{i}" for i in range(num_hashes)), "shingles", "k", "epoch"]
+    missing = [c for c in need if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"incremental fence: admitted table at {path} lacks columns "
+            f"{missing} that num_hashes={num_hashes} signatures need; it was "
+            "not written by this fence at these settings — re-split in batch "
+            "or start a new admitted_path"
         )
-        rows.write.mode("append").parquet(admitted_signatures_path)
-        return rows.count()
-    finally:
-        sig.unpersist()
+    return df
 
 
-def _read_state_table(spark, path: str, epoch: int) -> DataFrame | None:
-    """Read an epoch-stamped reference-state table under the epoch fence.
-    Only the expected first-batch missing path is survivable (returns
-    None); corrupt files or storage errors fail the batch loudly — a
-    silently dropped reference = a permanent train/eval leak."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
+def _admitted_max_epoch(spark, path: str, k: int, num_hashes: int) -> int | None:
+    """Highest epoch in the admitted table (None if it does not exist
+    yet), in the same scan that checks every row was shingled at ``k``:
+    a table built at another k holds signatures no new doc can
+    band-match, so gating against it would silently drop every admitted
+    doc from the reference side."""
+    df = _read_admitted(spark, path, num_hashes)
+    if df is None:
         return None
-    return _visible_before(df, epoch)
+    row = df.agg(F.max("epoch"), F.min("k"), F.max("k")).first()
+    stored = sorted({v for v in row[1:] if v is not None})
+    if stored and stored != [k]:
+        raise ValueError(
+            f"incremental fence: admitted table at {path} holds signatures "
+            f"built at shingle size k={stored}, but this fence runs k={k} — "
+            "re-split in batch or start a new admitted_path"
+        )
+    return None if row[0] is None else int(row[0])
 
 
 def incremental_split_batch(
@@ -519,7 +456,6 @@ def incremental_split_batch(
     cross_threshold: float = 0.5,
     train_pct: int = 90,
     ref_signatures: DataFrame | None = None,
-    admitted_signatures_path: str | None = None,
     epoch_state: dict | None = None,
 ) -> None:
     """One micro-batch of the streaming fence, as a named function so the
@@ -528,28 +464,21 @@ def incremental_split_batch(
     later epoch must be unaffected by the duplicate admissions the
     replay left behind (tests/test_streaming_neardup.py replay suite).
 
-    Two reference-side modes, chosen at stream start and value-identical
-    (tests/test_streaming_neardup.py parity test):
-    - TEXT mode (default): the reference side = static ref_docs UNION
-      the admitted texts table, re-shingled and re-hashed every batch.
-    - SIGNATURE mode (``admitted_signatures_path`` set): the gate reads
-      signatures directly — the static side from ``ref_signatures`` (a
-      minhash_doc_signatures frame the stream computes ONCE) and the
-      admitted side from the signature TABLE this function maintains
-      (each epoch appends its admitted docs' signature rows, stamped
-      with the epoch).  No reference text is ever re-shingled: per
-      batch the reference side costs one parquet scan of
-      ~(num_hashes x 8 bytes + shingle set) per admitted doc — the
-      quantize-on-write discipline applied to the fence, the true
-      incremental-ingest economics.  The admitted TEXTS table is still
-      appended as provenance in both modes."""
+    The reference side is read as signatures: the static side from
+    ``ref_signatures`` (a minhash_doc_signatures frame the stream
+    computes ONCE; built here per call when None) and the admitted side
+    from the table at ``admitted_path``, to which each epoch appends its
+    admitted docs in ONE write — doc id, text (provenance), signature,
+    shingles, k and epoch.  No reference text is ever re-shingled: per
+    batch the reference side costs one parquet scan of ~(num_hashes x 8
+    bytes + shingle set) per admitted doc."""
     from pimdb_spark.operators.curation import (
         connected_components,
         incremental_split_inherit,
     )
     from pimdb_spark.operators.dedup import (
-        _minhash_doc_signatures,
         cross_minhash_pairs_from_signatures,
+        minhash_doc_signatures,
         minhash_pairs_from_signatures,
     )
 
@@ -563,69 +492,58 @@ def incremental_split_batch(
     # fine); epoch < max means a reset checkpoint or misuse.
     #
     # Cost: with ``epoch_state`` (the stream handler's closure dict,
-    # seeded by ONE stream-start scan) the check is O(1) — the table's
-    # max epoch only grows through this stream's own appends (single
-    # writer per admitted table, the sink contract), so the closure
-    # value maintained below never overstates the table and a value that
-    # briefly UNDERSTATES it (crash between append and bookkeeping) only
-    # relaxes the guard for the one epoch that legitimately replays.
-    # Without ``epoch_state`` (direct one-shot callers), fall back to
-    # scanning the table — correctness over cost for the batch API.
+    # seeded by ONE stream-start scan that also checked k) the check is
+    # O(1) — the table's max epoch only grows through this stream's own
+    # appends (single writer per admitted table, the sink contract), so
+    # the closure value maintained below never overstates the table and
+    # a value that briefly UNDERSTATES it (crash between append and
+    # bookkeeping) only relaxes the guard for the one epoch that
+    # legitimately replays.  Without ``epoch_state`` (direct one-shot
+    # callers), scan the table — correctness over cost for the batch API.
     if epoch_state is not None and "max_epoch" in epoch_state:
-        texts_max = epoch_state["max_epoch"]
+        max_epoch = epoch_state["max_epoch"]
     else:
-        texts_max = _max_epoch(spark, admitted_path)
-    if texts_max is not None and epoch < texts_max:
+        max_epoch = _admitted_max_epoch(spark, admitted_path, k, num_hashes)
+    if max_epoch is not None and epoch < max_epoch:
         raise ValueError(
-            f"batch epoch {epoch} is behind the admitted-texts table at "
-            f"{admitted_path} (max epoch {texts_max}) — the stream's "
+            f"batch epoch {epoch} is behind the admitted table at "
+            f"{admitted_path} (max epoch {max_epoch}) — the stream's "
             "checkpoint was reset or replaced, so the epoch fence would "
             "silently hide every prior admission from the reference; "
             "restart from the original checkpoint, or re-split in batch"
         )
-    splits_raw = _read_state_table(spark, ref_splits_path, epoch)
+    splits_raw = _read_table(spark, ref_splits_path)
     if splits_raw is None:
         raise ValueError(f"ref_splits table missing at {ref_splits_path}")
-    splits = splits_raw.select("ref_id", "split").dropDuplicates()
+    splits = (
+        _visible_before(splits_raw, epoch).select("ref_id", "split").dropDuplicates()
+    )
     sig_cols = ["doc", *[f"h{i}" for i in range(num_hashes)], "shingles"]
     local_frames: list[DataFrame] = []
-    if admitted_signatures_path is None:
-        # TEXT mode: one signature pass over static ref + admitted texts
-        ref = ref_docs.select(F.col(id_col), F.col(text_col))
-        admitted = _read_state_table(spark, admitted_path, epoch)
-        if admitted is not None:
-            ref = ref.union(
-                admitted.select(id_col, text_col).dropDuplicates([id_col])
-            )
-        sig_ref = _minhash_doc_signatures(ref, id_col, text_col, k, num_hashes)
-        local_frames.append(sig_ref)
-    else:
-        # SIGNATURE mode: static side precomputed (once per stream),
-        # admitted side read back as signature rows — no re-shingling
-        if ref_signatures is None:
-            ref_signatures = _minhash_doc_signatures(
-                ref_docs.select(F.col(id_col), F.col(text_col)),
-                id_col, text_col, k, num_hashes,
-            )
-            local_frames.append(ref_signatures)
-        sig_ref = ref_signatures.select(*sig_cols)
-        adm_sig = _read_state_table(spark, admitted_signatures_path, epoch)
-        if adm_sig is not None:
-            # shingle-less admitted docs (< k tokens) carry NULL-signature
-            # marker rows (epoch bookkeeping only) — they cannot band-match
-            # anything and must not reach the banding pass.  Filter markers
-            # BEFORE the per-doc dedup: a doc admitted once shingle-less
-            # and once with real text (at-least-once delivery across
-            # epochs) must resolve to its REAL signature row, not
-            # arbitrarily to the marker — the marker would silently drop
-            # it from the reference side.
-            sig_ref = sig_ref.unionByName(
-                adm_sig.filter(F.col("shingles").isNotNull())
-                .dropDuplicates(["doc"])
-                .select(*sig_cols)
-            )
+    if ref_signatures is None:
+        ref_signatures = minhash_doc_signatures(
+            ref_docs.select(F.col(id_col), F.col(text_col)),
+            id_col, text_col, k, num_hashes,
+        )
+        local_frames.append(ref_signatures)
+    sig_ref = ref_signatures.select(*sig_cols)
+    admitted = _read_admitted(spark, admitted_path, num_hashes)
+    if admitted is not None:
+        # shingle-less admitted docs (< k tokens) carry NULL-signature
+        # rows (epoch bookkeeping only) — they cannot band-match anything
+        # and must not reach the banding pass.  Filter them BEFORE the
+        # per-doc dedup: a doc admitted once shingle-less and once with
+        # real text (at-least-once delivery across epochs) must resolve
+        # to its REAL signature row, not arbitrarily to the NULL one —
+        # that would silently drop it from the reference side.
+        sig_ref = sig_ref.unionByName(
+            _visible_before(admitted, epoch)
+            .filter(F.col("shingles").isNotNull())
+            .dropDuplicates(["doc"])
+            .select(*sig_cols)
+        )
     new = batch_df.select(id_col, text_col).dropDuplicates([id_col])
-    sig_new = _minhash_doc_signatures(new, id_col, text_col, k, num_hashes)
+    sig_new = minhash_doc_signatures(new, id_col, text_col, k, num_hashes)
     local_frames.append(sig_new)
     try:
         nn = minhash_pairs_from_signatures(
@@ -645,29 +563,26 @@ def incremental_split_batch(
             train_pct=train_pct,
         ).localCheckpoint(eager=True)  # freeze verdicts BEFORE mutating ref state
         out.write.mode("append").parquet(out_path)
-        adm = out.filter(F.col("split") != "conflict")
+        adm = out.filter(F.col("split") != "conflict").select(
+            F.col("id").alias("doc"), "split"
+        )
         adm.select(
-            F.col("id").alias("ref_id"), "split", F.lit(epoch).alias("epoch")
+            F.col("doc").alias("ref_id"), "split", F.lit(epoch).alias("epoch")
         ).write.mode("append").parquet(ref_splits_path)
-        if admitted_signatures_path is not None:
-            # LEFT join: every admitted doc gets a row even when it has no
-            # signature (< k tokens -> NULL h/shingles marker), so the
-            # signature table's epoch coverage always equals the texts
-            # table's and the mode-switch guard stays exact.  Written
-            # BEFORE the texts append: a mid-epoch crash then leaves the
-            # signature table AHEAD (harmless — the epoch replays and
-            # reads dedup), never the texts table ahead, which the
-            # stream-start guard must treat as text-mode history.
-            adm.select(F.col("id").alias("doc")).join(
-                sig_new, "doc", "left"
-            ).select(*sig_cols).withColumn("epoch", F.lit(epoch)).write.mode(
-                "append"
-            ).parquet(admitted_signatures_path)
-        new.join(adm.select(F.col("id").alias(id_col)), id_col).withColumn(
-            "epoch", F.lit(epoch)
+        # LEFT join: every admitted doc gets a row, with NULL h/shingles
+        # when it is shorter than k tokens, so the table's epoch coverage
+        # (the reset-checkpoint guard's input) counts every admission.
+        new.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text")).join(
+            adm.select("doc"), "doc"
+        ).join(sig_new, "doc", "left").select(
+            "doc",
+            "text",
+            *sig_cols[1:],
+            F.lit(k).alias("k"),
+            F.lit(epoch).alias("epoch"),
         ).write.mode("append").parquet(admitted_path)
         # Monotone bookkeeping for the O(1) reset-checkpoint guard: only
-        # after the texts append lands, so the closure value never runs
+        # after the admitted append lands, so the closure value never runs
         # ahead of the table it stands in for.
         if epoch_state is not None:
             prev = epoch_state.get("max_epoch")

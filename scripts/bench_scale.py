@@ -368,6 +368,7 @@ def main() -> None:
         from pimdb_spark.operators.dedup import (
             dedup_recall,
             exact_jaccard_pairs,
+            minhash_doc_signatures,
             minhash_lsh_pairs,
         )
 
@@ -386,7 +387,10 @@ def main() -> None:
                 base, "doc_id", "text", k=3, num_hashes=16, bands=4,
                 threshold=0.5,
             ),
-            exact_jaccard_pairs(base, k=3, t_num=1, t_den=2),
+            exact_jaccard_pairs(
+                minhash_doc_signatures(base, "doc_id", "text", 3, 16),
+                t_num=1, t_den=2,
+            ),
         )
 
     def _pii_redact(d):
@@ -471,7 +475,7 @@ def main() -> None:
         # the fence WITHOUT the planted fixture (plants are correctness
         # signal, not scaling behavior): every 5th doc is the "new
         # shard", the rest the reference with a doc-level split — one
-        # _minhash_doc_signatures pass per side banded twice, CC over
+        # minhash_doc_signatures pass per side banded twice, CC over
         # new x new, inheritance decision (the q_incremental_split_inherit
         # production shape)
         from pimdb_spark.operators.curation import (
@@ -480,8 +484,8 @@ def main() -> None:
             incremental_split_inherit,
         )
         from pimdb_spark.operators.dedup import (
-            _minhash_doc_signatures,
             cross_minhash_pairs_from_signatures,
+            minhash_doc_signatures,
             minhash_pairs_from_signatures,
         )
 
@@ -493,8 +497,8 @@ def main() -> None:
             F.when(hash_bucket(F.col("doc_id")) < 90, "train")
             .otherwise("eval").alias("split"),
         )
-        sig_new = _minhash_doc_signatures(new, "doc_id", "text", 3, 16)
-        sig_ref = _minhash_doc_signatures(ref, "doc_id", "text", 3, 16)
+        sig_new = minhash_doc_signatures(new, "doc_id", "text", 3, 16)
+        sig_ref = minhash_doc_signatures(ref, "doc_id", "text", 3, 16)
         nn = minhash_pairs_from_signatures(sig_new, 16, 4, 0.8)
         comp = connected_components(
             nn, "id_a", "id_b", nodes=new.select("doc_id"), max_iter=100

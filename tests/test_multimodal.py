@@ -284,9 +284,13 @@ def test_malformed_inputs_raise_valueerror_not_indexerror():
     import pytest as _pytest
 
     from pimdb_spark.operators.multimodal import (
+        bmp_decode_pixels,
+        encode_bmp,
         encode_gif,
+        encode_png,
         gif_decode_pixels,
         parse_image_header,
+        png_decode_pixels,
     )
 
     # JPEG whose only content is SOI + EOI (+ trailing junk that would
@@ -308,6 +312,17 @@ def test_malformed_inputs_raise_valueerror_not_indexerror():
     short_palette[10] |= 0x07  # claim 256-entry global table
     with _pytest.raises(ValueError, match="truncated"):
         gif_decode_pixels(bytes(short_palette))
+
+    # PNG cut inside IDAT (zlib stream incomplete), a PNG whose IDAT
+    # inflates to fewer scanlines than IHDR claims, and a BMP cut short
+    with _pytest.raises(ValueError, match="png_decode_pixels: corrupt IDAT"):
+        png_decode_pixels(encode_png(8, 4, 1)[:-20])
+    short_idat = bytearray(encode_png(8, 1, 1))  # IDAT holds one row...
+    short_idat[20:24] = struct.pack(">I", 4)  # ...IHDR now claims four
+    with _pytest.raises(ValueError, match="IHDR needs 100"):
+        png_decode_pixels(bytes(short_idat))
+    with _pytest.raises(ValueError, match="bmp_decode_pixels: truncated"):
+        bmp_decode_pixels(encode_bmp(8, 4, 1)[:-30])
 
 
 def test_gif_decode_pixels_general_lzw():

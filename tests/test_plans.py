@@ -269,7 +269,7 @@ def test_no_plan_red_flags(spark, name, entry):
     - q_minhash_lsh_pairs: the same ONE one-row broadcast attach (r17 —
       retired the catalog's last literal planted-id offset, +1,000,000,
       for the derived 1 + max(doc_id) form); the detector proper is the
-      shared _minhash_doc_signatures chain + banding equi-join with
+      shared minhash_doc_signatures chain + banding equi-join with
       candidate-only verification.
     - q_leakage_safe_split: the same ONE one-row broadcast attach (the
       1 + max(doc_id) planted-copy offset, shared fixture shape with

@@ -696,7 +696,10 @@ def test_exact_jaccard_pairs_matches_bruteforce(spark, seed):
     LSH gives up, so it must hold here."""
     import random
 
-    from pimdb_spark.operators.dedup import exact_jaccard_pairs
+    from pimdb_spark.operators.dedup import (
+        exact_jaccard_pairs,
+        minhash_doc_signatures,
+    )
 
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(12)]
@@ -721,10 +724,12 @@ def test_exact_jaccard_pairs_matches_bruteforce(spark, seed):
                     expected[(i, j)] = (inter, uni)
 
     df = spark.createDataFrame(docs, "doc_id int, text string")
+    sig = minhash_doc_signatures(df, "doc_id", "text", 3, 16)
     got = {
         (r.id_a, r.id_b): (r.shared, r.union_sz)
-        for r in exact_jaccard_pairs(df, k=3, t_num=1, t_den=2).collect()
+        for r in exact_jaccard_pairs(sig, t_num=1, t_den=2).collect()
     }
+    sig.unpersist()
     assert got == expected
     if len(docs[0][1].split(" ")) >= 3:  # doc 0 long enough to shingle
         assert (0, 100) in got

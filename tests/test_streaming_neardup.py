@@ -48,6 +48,29 @@ def _docs_subset(spark, pred):
     )
 
 
+def _stage_files(tmp_path, frames) -> str:
+    """Write each (name, frame) as ONE parquet file <name>.parquet in a
+    fresh stream source directory, with modification times increasing in
+    list order (the file source orders micro-batches by mtime); returns
+    the directory."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    now = time.time()
+    for i, (name, df) in enumerate(frames):
+        stage = tmp_path / f"stage_{name}"
+        df.coalesce(1).write.parquet(str(stage))
+        (part,) = glob.glob(str(stage / "part-*.parquet"))
+        dest = src / f"{name}.parquet"
+        shutil.copy(part, dest)
+        os.utime(dest, (now - 20 + 10 * i, now - 20 + 10 * i))
+    return str(src)
+
+
 def test_stream_neardup_matches_model(spark, tmp_path):
     import duckdb
 
@@ -169,9 +192,6 @@ def test_cross_neardup_stream_matches_batch_across_splits(spark, tmp_path):
     verdict depends only on the doc itself vs the static reference, so
     parity is structural — this asserts it anyway), and the fixture
     plants truncated copies so matched and unmatched rows both occur."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pimdb_spark.catalog import load
@@ -197,18 +217,13 @@ def test_cross_neardup_stream_matches_batch_across_splits(spark, tmp_path):
     )
     new = docs.filter(F.col("doc_id") % 7 != 0).union(trunc)
 
-    src = tmp_path / "new_stream"
-    src.mkdir()
-    for name, half in (("a", 0), ("b", 1)):
-        stage = tmp_path / f"stage_{name}"
-        new.filter(F.col("doc_id") % 2 == half).coalesce(1).write.parquet(
-            str(stage)
-        )
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
-
+    src = _stage_files(
+        tmp_path,
+        [("a", new.filter(F.col("doc_id") % 2 == 0)),
+         ("b", new.filter(F.col("doc_id") % 2 == 1))],
+    )
     out_path = str(tmp_path / "verdicts")
-    stream = spark.readStream.schema(new.schema).parquet(str(src))
+    stream = spark.readStream.schema(new.schema).parquet(src)
     q = cross_neardup_stream(
         stream, ref, out_path, str(tmp_path / "chk"), threshold=0.5
     )
@@ -236,9 +251,6 @@ def test_incremental_split_stream_matches_batch_id_ordered(spark, tmp_path):
     because the growing reference reproduces the component closure hop
     by hop — copies of the same source doc split across micro-batches
     inherit the same side through the admitted earlier copy."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pimdb_spark.catalog import load
@@ -247,8 +259,8 @@ def test_incremental_split_stream_matches_batch_id_ordered(spark, tmp_path):
         incremental_split_inherit,
     )
     from pimdb_spark.operators.dedup import (
-        _minhash_doc_signatures,
         cross_minhash_pairs_from_signatures,
+        minhash_doc_signatures,
         minhash_pairs_from_signatures,
     )
     from pimdb_spark.operators.curation import hash_bucket
@@ -289,21 +301,16 @@ def test_incremental_split_stream_matches_batch_id_ordered(spark, tmp_path):
     o = off.first()[0]
     cut = 2 * o  # batch A: first copies (+ nothing else below 2*o)
 
-    src = tmp_path / "new_stream"
-    src.mkdir()
-    for name, pred in (
-        ("a", F.col("doc_id") < cut),
-        ("b", F.col("doc_id") >= cut),
-    ):
-        stage = tmp_path / f"stage_{name}"
-        new.filter(pred).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
+    src = _stage_files(
+        tmp_path,
+        [("a", new.filter(F.col("doc_id") < cut)),
+         ("b", new.filter(F.col("doc_id") >= cut))],
+    )
 
     splits_path = str(tmp_path / "ref_splits")
     ref_splits.write.parquet(splits_path)
     out_path = str(tmp_path / "verdicts")
-    stream = spark.readStream.schema(new.schema).parquet(str(src))
+    stream = spark.readStream.schema(new.schema).parquet(src)
     q = incremental_split_stream(
         stream,
         ref,
@@ -320,8 +327,8 @@ def test_incremental_split_stream_matches_batch_id_ordered(spark, tmp_path):
     }
 
     # one-shot batch composition over the whole new corpus
-    sig_new = _minhash_doc_signatures(new, "doc_id", "text", 3, 16)
-    sig_ref = _minhash_doc_signatures(ref, "doc_id", "text", 3, 16)
+    sig_new = minhash_doc_signatures(new, "doc_id", "text", 3, 16)
+    sig_ref = minhash_doc_signatures(ref, "doc_id", "text", 3, 16)
     nn = minhash_pairs_from_signatures(sig_new, 16, 4, 0.8)
     comp = connected_components(
         nn, "id_a", "id_b", nodes=new.select("doc_id"), max_iter=100
@@ -356,9 +363,6 @@ def test_incremental_split_stream_never_splits_cluster_any_order(spark, tmp_path
     fresh cluster lands on may differ from the one-shot split, but no
     near-dup cluster may ever straddle train/eval — later members inherit
     through the admitted earlier member."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pimdb_spark.catalog import load
@@ -388,23 +392,17 @@ def test_incremental_split_stream_never_splits_cluster_any_order(spark, tmp_path
     new = copy1.union(copy2)
     o = off.first()[0]
 
-    src = tmp_path / "new_stream"
-    src.mkdir()
-    # REVERSED order: the higher-id copies (batch file sorts
-    # lexicographically, so name them to arrive high-ids-first)
-    for name, pred in (
-        ("a", F.col("doc_id") >= 2 * o),
-        ("b", F.col("doc_id") < 2 * o),
-    ):
-        stage = tmp_path / f"stage_{name}"
-        new.filter(pred).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
+    # REVERSED order: the higher-id copies arrive first
+    src = _stage_files(
+        tmp_path,
+        [("a", new.filter(F.col("doc_id") >= 2 * o)),
+         ("b", new.filter(F.col("doc_id") < 2 * o))],
+    )
 
     out_path = str(tmp_path / "verdicts")
     splits_path = str(tmp_path / "ref_splits")
     ref_splits.write.parquet(splits_path)
-    stream = spark.readStream.schema(new.schema).parquet(str(src))
+    stream = spark.readStream.schema(new.schema).parquet(src)
     q = incremental_split_stream(
         stream,
         ref,
@@ -484,8 +482,8 @@ def test_incremental_split_batch_replay_identical(spark, tmp_path):
     """Re-running an epoch appends byte-identical verdict rows: the epoch
     fence hides the epoch's own admissions from its replay."""
     from pimdb_spark.operators.dedup import (
-        _minhash_doc_signatures,
         cross_minhash_pairs_from_signatures,
+        minhash_doc_signatures,
     )
     from pimdb_spark.streaming.neardup import incremental_split_batch
 
@@ -495,10 +493,10 @@ def test_incremental_split_batch_replay_identical(spark, tmp_path):
     # fixture self-check: the prefix pair IS cross-detectable at the 8x2
     # banding / 0.5 gate (otherwise the conflict-flip scenario this test
     # exists to rule out could never fire and the test would pass vacuously)
-    sig_a = _minhash_doc_signatures(
+    sig_a = minhash_doc_signatures(
         batch0.filter("doc_id = 103"), "doc_id", "text", 3, 16
     )
-    sig_b = _minhash_doc_signatures(
+    sig_b = minhash_doc_signatures(
         batch0.filter("doc_id = 112"), "doc_id", "text", 3, 16
     )
     gate_pairs = cross_minhash_pairs_from_signatures(sig_a, sig_b, 16, 8, 0.5).collect()
@@ -535,7 +533,7 @@ def test_incremental_split_batch_later_epoch_ignores_replay_duplicates(
 ):
     """A replayed epoch appends duplicate reference rows; a LATER epoch
     must dedupe them on read — counts stay exact and duplicated admitted
-    texts never corrupt the signature input."""
+    rows never corrupt the reference side."""
     from pimdb_spark.streaming.neardup import incremental_split_batch
 
     ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
@@ -590,21 +588,22 @@ def test_incremental_split_batch_corrupt_admitted_fails_loudly(spark, tmp_path):
     ]
 
 
-def test_incremental_split_batch_signature_table_parity(spark, tmp_path):
-    """SIGNATURE mode (static signatures computed once + the admitted
-    signature TABLE) emits verdicts identical to TEXT mode epoch by
-    epoch, stays replay-identical under the same epoch fence, and never
-    re-shingles reference text — proven structurally by handing sig mode
-    a ref_docs frame with POISONED text: verdicts can only be right if
-    the gate reads the signature frames, not the texts."""
+def test_incremental_split_batch_never_reshingles_reference(spark, tmp_path):
+    """The fence gates against stored signatures only: a run handed the
+    static reference as a precomputed signature frame plus a ref_docs
+    frame with POISONED text emits the same verdicts, epoch by epoch, as
+    a run that shingles the real reference itself — verdicts can only be
+    right if no reference text (static or admitted) is re-shingled.  The
+    poisoned run also replays epoch 0 (replay-identical rows) and keeps
+    the caller-owned static signatures persisted."""
     from pyspark.sql import functions as F
 
     from pimdb_spark.operators.dedup import minhash_doc_signatures
     from pimdb_spark.streaming.neardup import incremental_split_batch
 
     results = {}
-    for mode in ("text", "sig"):
-        base = tmp_path / mode
+    for run in ("plain", "poisoned"):
+        base = tmp_path / run
         ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
             spark, base
         )
@@ -615,12 +614,11 @@ def test_incremental_split_batch_signature_table_parity(spark, tmp_path):
         )
         handler_ref = ref_docs
         sig_static = None
-        if mode == "sig":
+        if run == "poisoned":
             sig_static = minhash_doc_signatures(ref_docs, "doc_id", "text", 3, 16)
             kw["ref_signatures"] = sig_static
-            kw["admitted_signatures_path"] = str(base / "admitted_sigs")
-            # poison the text column: any code path that re-shingles the
-            # static reference now produces wrong verdicts
+            # any code path that re-shingles the static reference now
+            # produces wrong verdicts
             handler_ref = ref_docs.select(
                 "doc_id", F.lit("poisoned text only").alias("text")
             )
@@ -631,11 +629,11 @@ def test_incremental_split_batch_signature_table_parity(spark, tmp_path):
             [(201, _UNIQ_TEXT), (202, _LONG_TEXT)], "doc_id long, text string"
         )
         incremental_split_batch(batch0, 0, handler_ref, **kw)
-        if mode == "sig":
+        if run == "poisoned":
             incremental_split_batch(batch0, 0, handler_ref, **kw)  # replay
         incremental_split_batch(batch1, 1, handler_ref, **kw)
         rows = [tuple(r) for r in spark.read.parquet(out_path).collect()]
-        if mode == "sig":
+        if run == "poisoned":
             # replay appended a second identical copy of every epoch-0 row
             by_id = {}
             for t in rows:
@@ -645,84 +643,27 @@ def test_incremental_split_batch_signature_table_parity(spark, tmp_path):
             # caller-owned static signatures are NOT unpersisted per batch
             assert sig_static.storageLevel.useMemory
             sig_static.unpersist()
-        results[mode] = set(rows)
-    assert results["sig"] == results["text"]
-    by_id = {t[0]: t for t in results["sig"]}
+        results[run] = set(rows)
+    assert results["poisoned"] == results["plain"]
+    by_id = {t[0]: t for t in results["poisoned"]}
     # (id, component, n_train_refs, n_eval_refs, split, inherited)
+    assert by_id[101][2:] == (1, 0, "train", 1)  # static signatures matched
     assert by_id[201][2:] == (1, 0, "train", 1)  # through admitted state
     assert by_id[202][2:] == (1, 1, "conflict", 1)  # straddling admissions
 
 
-def test_incremental_split_stream_signature_mode(spark, tmp_path):
-    """End-to-end SIGNATURE-mode stream: two micro-batch files drain with
-    admitted_signatures_path set — cross-batch inheritance flows through
-    the admitted signature TABLE and the static signatures computed once
-    by the wrapper."""
-    import glob
-    import shutil
-
-    from pimdb_spark.streaming.neardup import incremental_split_stream
-
-    ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
-        spark, tmp_path
-    )
-    batch1 = spark.createDataFrame(
-        [(201, _UNIQ_TEXT), (202, _LONG_TEXT)], "doc_id long, text string"
-    )
-    import os
-    import time
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    now = time.time()
-    for i, (name, df) in enumerate((("a", batch0), ("b", batch1))):
-        stage = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = src / f"{name}.parquet"
-        shutil.copy(part, dest)
-        # distinct mtimes pin micro-batch order (file source orders by
-        # modification time): batch0 must be admitted before batch1
-        os.utime(dest, (now - 20 + 10 * i, now - 20 + 10 * i))
-
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = incremental_split_stream(
-        stream,
-        ref_docs,
-        splits_path,
-        admitted_path,
-        out_path,
-        str(tmp_path / "chk"),
-        admitted_signatures_path=str(tmp_path / "admitted_sigs"),
-    )
-    assert q.awaitTermination(300), "stream drain timed out"
-
-    got = {
-        r.id: (r.n_train_refs, r.n_eval_refs, r.split, r.inherited)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    assert got[101] == (1, 0, "train", 1)   # inherits the static reference
-    assert got[201] == (1, 0, "train", 1)   # inherits through the sig table
-    assert got[202] == (1, 1, "conflict", 1)
-    assert got[103][2] == "train" and got[112][2] == "eval"
-
-
-def test_incremental_split_stream_mode_switch_guard_and_backfill(spark, tmp_path):
-    """A TEXT-mode history must not silently under-reference a
-    SIGNATURE-mode restart (a near-dup of an un-migrated admitted doc
-    would get a fresh hash side — the leak the fence prevents): the
-    stream-start guard raises until backfill_admitted_signatures
-    migrates, after which signature mode inherits through the backfilled
-    rows exactly as text mode would."""
+def test_incremental_split_batch_rejects_admitted_of_other_settings(
+    spark, tmp_path
+):
+    """Stored signatures are never recomputed from text, so an admitted
+    table built at another shingle size k, or without the h columns
+    num_hashes needs (a narrower signature, a table of texts alone),
+    must raise a named ValueError — gating against it would silently
+    drop every admitted doc from the reference (201, a copy of admitted
+    102, would lose its inheritance)."""
     import pytest
 
     from pimdb_spark.streaming.neardup import (
-        _max_epoch,
-        backfill_admitted_signatures,
         incremental_split_batch,
         incremental_split_stream,
     )
@@ -733,67 +674,108 @@ def test_incremental_split_stream_mode_switch_guard_and_backfill(spark, tmp_path
     kw = dict(
         ref_splits_path=splits_path, admitted_path=admitted_path, out_path=out_path
     )
-    incremental_split_batch(batch0, 0, ref_docs, **kw)  # TEXT-mode epoch 0
-
-    sig_path = str(tmp_path / "admitted_sigs")
+    incremental_split_batch(batch0, 0, ref_docs, k=3, **kw)
+    batch1 = spark.createDataFrame([(201, _UNIQ_TEXT)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="shingle size k=\\[3\\].*runs k=5"):
+        incremental_split_batch(batch1, 1, ref_docs, k=5, **kw)
+    with pytest.raises(ValueError, match="lacks columns .*'h16'"):
+        incremental_split_batch(batch1, 1, ref_docs, num_hashes=32, **kw)
+    # the stream checks at start, before any batch runs
     src = tmp_path / "src"
     src.mkdir()
     stream = spark.readStream.schema(batch0.schema).parquet(str(src))
-    with pytest.raises(ValueError, match="backfill_admitted_signatures"):
+    with pytest.raises(ValueError, match="runs k=5"):
         incremental_split_stream(
-            stream,
-            ref_docs,
-            splits_path,
-            admitted_path,
-            out_path,
-            str(tmp_path / "chk"),
-            admitted_signatures_path=sig_path,
+            stream, ref_docs, splits_path, admitted_path, out_path,
+            str(tmp_path / "chk"), k=5,
         )
+    # a table of admitted texts alone carries no signatures to gate with
+    texts_only = str(tmp_path / "texts_only")
+    batch0.withColumn("epoch", batch0.doc_id * 0).write.parquet(texts_only)
+    with pytest.raises(ValueError, match="lacks columns"):
+        incremental_split_batch(
+            batch1, 1, ref_docs, ref_splits_path=splits_path,
+            admitted_path=texts_only, out_path=out_path,
+        )
+    # nothing was emitted for any rejected epoch
+    assert {r.id for r in spark.read.parquet(out_path).collect()} == {
+        101, 102, 103, 112,
+    }
 
-    n = backfill_admitted_signatures(spark, admitted_path, sig_path)
-    assert n == 4  # 101, 102, 103, 112 — one row each, original epochs
-    assert _max_epoch(spark, sig_path) == _max_epoch(spark, admitted_path) == 0
 
-    # SIGNATURE-mode epoch 1 inherits through the BACKFILLED rows
+def test_incremental_split_stream_signature_mode(spark, tmp_path):
+    """End-to-end stream: two micro-batch files drain — cross-batch
+    inheritance flows through the admitted signature table and the
+    static signatures computed once by the wrapper."""
+    from pimdb_spark.streaming.neardup import incremental_split_stream
+
+    ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
+        spark, tmp_path
+    )
     batch1 = spark.createDataFrame(
-        [(201, _UNIQ_TEXT)], "doc_id long, text string"
+        [(201, _UNIQ_TEXT), (202, _LONG_TEXT)], "doc_id long, text string"
     )
-    incremental_split_batch(
-        batch1, 1, ref_docs, admitted_signatures_path=sig_path, **kw
+    # batch0 must be admitted before batch1
+    src = _stage_files(tmp_path, [("a", batch0), ("b", batch1)])
+    stream = (
+        spark.readStream.schema(batch0.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
     )
-    (row,) = [r for r in spark.read.parquet(out_path).collect() if r.id == 201]
-    assert (row.n_train_refs, row.n_eval_refs, row.split, row.inherited) == (
-        1, 0, "train", 1,
+    q = incremental_split_stream(
+        stream,
+        ref_docs,
+        splits_path,
+        admitted_path,
+        out_path,
+        str(tmp_path / "chk"),
     )
+    assert q.awaitTermination(300), "stream drain timed out"
+
+    got = {
+        r.id: (r.n_train_refs, r.n_eval_refs, r.split, r.inherited)
+        for r in spark.read.parquet(out_path).collect()
+    }
+    assert got[101] == (1, 0, "train", 1)   # inherits the static reference
+    assert got[201] == (1, 0, "train", 1)   # inherits through admitted state
+    assert got[202] == (1, 1, "conflict", 1)
+    assert got[103][2] == "train" and got[112][2] == "eval"
 
 
 def test_incremental_split_batch_short_doc_marker_rows(spark, tmp_path):
-    """A shingle-less admitted doc (< k tokens) gets a NULL-signature
-    MARKER row: the signature table's epoch coverage stays equal to the
-    texts table's (no false mode-switch alarm) and the marker never
-    reaches the banding pass."""
-    from pimdb_spark.streaming.neardup import _max_epoch, incremental_split_batch
+    """A shingle-less admitted doc (< k tokens) gets a row with NULL
+    signature columns: the admitted table's epoch coverage still counts
+    it (the reset-checkpoint guard's input) and the row never reaches
+    the banding pass.  Each epoch writes one row per admitted doc, with
+    its text, signature, shingles, k and epoch."""
+    from pimdb_spark.streaming.neardup import (
+        _admitted_max_epoch,
+        incremental_split_batch,
+    )
 
     ref_docs, splits_path, admitted_path, out_path, _ = _fence_fixture(
         spark, tmp_path
     )
-    sig_path = str(tmp_path / "sigs")
     kw = dict(
-        ref_splits_path=splits_path,
-        admitted_path=admitted_path,
-        out_path=out_path,
-        admitted_signatures_path=sig_path,
+        ref_splits_path=splits_path, admitted_path=admitted_path, out_path=out_path
     )
     b0 = spark.createDataFrame([(301, "too short")], "doc_id long, text string")
     incremental_split_batch(b0, 0, ref_docs, **kw)
-    (marker,) = spark.read.parquet(sig_path).collect()
-    assert marker.doc == 301 and marker.shingles is None and marker.epoch == 0
+    adm = spark.read.parquet(admitted_path)
+    assert adm.columns == [
+        "doc", "text", *[f"h{i}" for i in range(16)], "shingles", "k", "epoch"
+    ]
+    (marker,) = adm.collect()
+    assert (marker.doc, marker.text, marker.k, marker.epoch) == (
+        301, "too short", 3, 0,
+    )
+    assert marker.shingles is None and marker.h0 is None
 
     b1 = spark.createDataFrame([(302, _UNIQ_TEXT)], "doc_id long, text string")
     incremental_split_batch(b1, 1, ref_docs, **kw)
     rows = {r.id: r.split for r in spark.read.parquet(out_path).collect()}
     assert rows[301] in ("train", "eval") and rows[302] in ("train", "eval")
-    assert _max_epoch(spark, admitted_path) == _max_epoch(spark, sig_path) == 1
+    assert _admitted_max_epoch(spark, admitted_path, 3, 16) == 1
 
 
 def test_incremental_split_batch_reset_checkpoint_guard(spark, tmp_path):
@@ -831,28 +813,23 @@ def test_cross_neardup_stream_unpersists_batch_signatures(spark, tmp_path):
     frame and unpersists it after the sink write: a long-running stream
     must not accumulate one cached frame per micro-batch (only the
     stream-lifetime static reference signatures stay cached)."""
-    import glob
-    import shutil
-
     from pimdb_spark.streaming.neardup import cross_neardup_stream
 
     ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
         spark, tmp_path
     )
-    src = tmp_path / "src"
-    src.mkdir()
-    for name, half in (("a", 0), ("b", 1)):
-        stage = tmp_path / f"stage_{name}"
-        batch0.filter(f"doc_id % 2 = {half}").coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
+    src = _stage_files(
+        tmp_path,
+        [("a", batch0.filter("doc_id % 2 = 0")),
+         ("b", batch0.filter("doc_id % 2 = 1"))],
+    )
 
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     stream = (
         spark.readStream.schema(batch0.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+        .parquet(src)
     )
     q = cross_neardup_stream(
         stream, ref_docs, str(tmp_path / "verdicts"), str(tmp_path / "chk")
@@ -866,72 +843,10 @@ def test_cross_neardup_stream_unpersists_batch_signatures(spark, tmp_path):
     assert got == {101, 102, 103, 112}
 
 
-def test_backfill_admitted_signatures_keeps_min_epoch(spark, tmp_path):
-    """A doc admitted in MULTIPLE epochs (at-least-once delivery across
-    batches) must backfill with its MINIMUM epoch: the text-mode fence
-    made it visible from min+1 onward, so a replay of any later epoch
-    must still see it — keeping an arbitrary later epoch would break the
-    replay-identical contract the migration preserves."""
-    from pimdb_spark.streaming.neardup import (
-        _max_epoch,
-        backfill_admitted_signatures,
-    )
-
-    admitted_path = str(tmp_path / "admitted")
-    spark.createDataFrame(
-        [
-            (101, _UNIQ_TEXT, 0),
-            (101, _UNIQ_TEXT, 2),  # re-delivered two epochs later
-            (102, _LONG_TEXT, 2),
-        ],
-        "doc_id long, text string, epoch int",
-    ).write.parquet(admitted_path)
-    sig_path = str(tmp_path / "sigs")
-    n = backfill_admitted_signatures(spark, admitted_path, sig_path)
-    assert n == 2
-    epochs = {r.doc: r.epoch for r in spark.read.parquet(sig_path).collect()}
-    assert epochs == {101: 0, 102: 2}
-    assert _max_epoch(spark, sig_path) == 2
-
-
-def test_backfill_admitted_signatures_legacy_null_epochs(spark, tmp_path):
-    """A text-mode table whose early rows PREDATE epoch stamping reads
-    those rows with NULL epoch under mergeSchema (the epoch-column check
-    is table-level, not row-level).  Backfill must resolve them to -1 —
-    the always-visible legacy convention _visible_before applies to the
-    source table — never write NULL epochs, which the fence's
-    strictly-less filter would silently hide from every batch.  A doc
-    in BOTH generations must likewise keep -1 (the coalesced min), so
-    the min-epoch window has to sort the COALESCED column."""
-    from pimdb_spark.streaming.neardup import (
-        _read_state_table,
-        backfill_admitted_signatures,
-    )
-
-    admitted_path = str(tmp_path / "admitted")
-    # generation 1: pre-fence writer, no epoch column
-    spark.createDataFrame(
-        [(201, _UNIQ_TEXT), (203, _LONG_TEXT)], "doc_id long, text string"
-    ).write.parquet(admitted_path)
-    # generation 2: epoch-stamped writer appends (203 re-delivered)
-    spark.createDataFrame(
-        [(202, _LONG_TEXT, 1), (203, _LONG_TEXT, 2)],
-        "doc_id long, text string, epoch int",
-    ).write.mode("append").parquet(admitted_path)
-    sig_path = str(tmp_path / "sigs")
-    n = backfill_admitted_signatures(spark, admitted_path, sig_path)
-    assert n == 3
-    epochs = {r.doc: r.epoch for r in spark.read.parquet(sig_path).collect()}
-    assert epochs == {201: -1, 202: 1, 203: -1}
-    # legacy rows are visible to EVERY epoch, including the first
-    vis0 = {r.doc for r in _read_state_table(spark, sig_path, 0).collect()}
-    assert vis0 == {201, 203}
-
-
 def test_signature_mode_prefers_real_signature_over_marker(spark, tmp_path):
-    """A doc admitted once shingle-less (NULL-signature marker row) and
-    later with real text must resolve to its REAL signature row on the
-    reference side: markers are filtered BEFORE the per-doc dedup, so
+    """A doc admitted once shingle-less (NULL-signature row) and later
+    with real text must resolve to its REAL signature row on the
+    reference side: NULL rows are filtered BEFORE the per-doc dedup, so
     the dedup cannot silently drop the doc from the banding pass."""
     from pyspark.sql import functions as F
 
@@ -940,20 +855,16 @@ def test_signature_mode_prefers_real_signature_over_marker(spark, tmp_path):
     ref_docs, splits_path, admitted_path, out_path, _ = _fence_fixture(
         spark, tmp_path
     )
-    sig_path = str(tmp_path / "sigs")
     kw = dict(
-        ref_splits_path=splits_path,
-        admitted_path=admitted_path,
-        out_path=out_path,
-        admitted_signatures_path=sig_path,
+        ref_splits_path=splits_path, admitted_path=admitted_path, out_path=out_path
     )
-    # epoch 0: 301 arrives shingle-less -> NULL marker row
+    # epoch 0: 301 arrives shingle-less -> NULL-signature row
     b0 = spark.createDataFrame([(301, "too short")], "doc_id long, text string")
     incremental_split_batch(b0, 0, ref_docs, **kw)
     # epoch 1: 301 re-delivered with real text -> real signature row
     b1 = spark.createDataFrame([(301, _UNIQ_TEXT)], "doc_id long, text string")
     incremental_split_batch(b1, 1, ref_docs, **kw)
-    sig_rows = spark.read.parquet(sig_path).filter(F.col("doc") == 301).collect()
+    sig_rows = spark.read.parquet(admitted_path).filter(F.col("doc") == 301).collect()
     assert {r.epoch for r in sig_rows} == {0, 1}
     assert any(r.shingles is not None for r in sig_rows)
     # epoch 2: a copy of 301's real text must inherit 301's side — the
@@ -972,12 +883,7 @@ def test_incremental_split_stream_epoch_guard_is_one_scan(
     """The reset-checkpoint guard costs ONE admitted-table scan at stream
     start; per micro-batch it is an O(1) check against the handler's
     closure-maintained max — no per-batch parquet scan+agg of the
-    (reference-sized) admitted table in either fence mode."""
-    import glob
-    import os
-    import shutil
-    import time
-
+    (reference-sized) admitted table."""
     from pimdb_spark.streaming import neardup as N
 
     ref_docs, splits_path, admitted_path, out_path, batch0 = _fence_fixture(
@@ -988,29 +894,19 @@ def test_incremental_split_stream_epoch_guard_is_one_scan(
     )
 
     calls: list[str] = []
-    real = N._max_epoch
+    real = N._admitted_max_epoch
 
-    def counting(s, p):
+    def counting(s, p, *args):
         calls.append(p)
-        return real(s, p)
+        return real(s, p, *args)
 
-    monkeypatch.setattr(N, "_max_epoch", counting)
+    monkeypatch.setattr(N, "_admitted_max_epoch", counting)
 
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    now = time.time()
-    for i, (name, df) in enumerate((("a", batch0), ("b", batch1))):
-        stage = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = src / f"{name}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (now - 20 + 10 * i, now - 20 + 10 * i))
-
+    src = _stage_files(tmp_path, [("a", batch0), ("b", batch1)])
     stream = (
         spark.readStream.schema(batch0.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+        .parquet(src)
     )
     q = N.incremental_split_stream(
         stream,
@@ -1043,13 +939,13 @@ def test_incremental_split_batch_epoch_state_guard(spark, tmp_path, monkeypatch)
     kw = dict(
         ref_splits_path=splits_path, admitted_path=admitted_path, out_path=out_path
     )
-    state = {"max_epoch": N._max_epoch(spark, admitted_path)}
+    state = {"max_epoch": N._admitted_max_epoch(spark, admitted_path, 3, 16)}
     assert state["max_epoch"] is None  # table missing pre-stream
 
-    def boom(s, p):  # any rescan with epoch_state present is the bug
+    def boom(*args):  # any rescan with epoch_state present is the bug
         raise AssertionError("guard must not rescan the admitted table")
 
-    monkeypatch.setattr(N, "_max_epoch", boom)
+    monkeypatch.setattr(N, "_admitted_max_epoch", boom)
     N.incremental_split_batch(batch0, 0, ref_docs, epoch_state=state, **kw)
     assert state["max_epoch"] == 0
     batch1 = spark.createDataFrame(
@@ -1063,3 +959,48 @@ def test_incremental_split_batch_epoch_state_guard(spark, tmp_path, monkeypatch)
     # reset checkpoint: epoch restarts at 0 while the closure max is 1
     with pytest.raises(ValueError, match="checkpoint was reset"):
         N.incremental_split_batch(batch0, 0, ref_docs, epoch_state=state, **kw)
+
+
+def test_band_key_streaming_hex_equals_batch_binary(spark):
+    """The two encodings of the LSH band key agree: the streaming column
+    form (minhash_signature over word_shingles, hex lsh_band_hashes) and
+    the batch row form (minhash_doc_signatures h0..h15, 16-byte binary
+    _banded_signatures) give equal signatures and unhex(hex) == binary
+    for every (doc, band) of the sf0.001 documents.  A doc shorter than
+    k is the one boundary: the column form gives it an all-NULL
+    signature, the row form no row at all."""
+    from pyspark.sql import functions as F
+
+    from pimdb_spark.operators.dedup import (
+        _banded_signatures,
+        lsh_band_hashes,
+        minhash_doc_signatures,
+        minhash_signature,
+        word_shingles,
+    )
+
+    short = spark.createDataFrame([(-1, "too short")], "doc_id long, text string")
+    docs = _docs_subset(spark, "true").union(short)
+    sig_arr = minhash_signature(word_shingles(F.split("text", " "), 3), 16)
+    col_form = {
+        r.doc_id: (r.sig, r.bh)
+        for r in docs.select(
+            "doc_id", sig_arr.alias("sig"), lsh_band_hashes(sig_arr, 4, 4).alias("bh")
+        ).collect()
+    }
+    sig = minhash_doc_signatures(docs, "doc_id", "text", 3, 16)
+    row_sig = {r.doc: [r[f"h{i}"] for i in range(16)] for r in sig.collect()}
+    row_band = {
+        (r.doc, r.band): bytes(r.band_hash)
+        for r in _banded_signatures(sig, "doc", 16, 4).collect()
+    }
+    sig.unpersist()
+
+    assert col_form[-1][0] == [None] * 16 and -1 not in row_sig
+    del col_form[-1]
+    assert len(col_form) == 500 and set(row_sig) == set(col_form)
+    assert len(row_band) == 4 * len(row_sig)
+    for doc, (sig_list, hexes) in col_form.items():
+        assert sig_list == row_sig[doc], doc
+        for band, hx in enumerate(hexes):
+            assert bytes.fromhex(hx) == row_band[(doc, band)], (doc, band)
